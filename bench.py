@@ -160,7 +160,7 @@ def main() -> None:
     # round 4 with no attribution — profile its internal stages
     # (same total work, see clean_corpus docstring)
     from recsys_spark_spark.plans import pipeline as _pipeline
-    from recsys_spark_spark.recommenders import als as _als
+    from recsys_spark_spark.lifecycle import release
 
     _pipeline.PROFILE_CLEAN = True
 
@@ -246,7 +246,7 @@ def main() -> None:
             # persisted factor RDDs so leaked state cannot pressure
             # the queries that follow (the round-4 driver artifact
             # showed exactly those queries drifting 2-4×)
-            _als.release_last_state()
+            release("als")
         elif name == "events_stream_quantile_sketch":
             from recsys_spark_spark.plans import sketch as _sketch
 
@@ -304,7 +304,7 @@ def main() -> None:
             df.selectExpr("bit_xor(xxhash64(*)) AS h").collect()
             t_small = time.perf_counter() - t0
             if name == "als_topk":
-                _als.release_last_state()
+                release("als")
             scaling[name] = {
                 "sf0.01": round(t_small, 3),
                 "sf0.1": timings[name],

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .lifecycle import materialize, release
 from .recommenders.content import (
     content_based_topk,
     content_similarities,
@@ -43,6 +44,13 @@ from .recommenders.neighborhood import (
     user_based_scored,
     user_based_topk,
 )
+
+
+def _own_ratings(model: object, ratings: DataFrame) -> DataFrame:
+    """Release ``model``'s previous fit (its cached ratings and result)
+    and cache the long-format ratings under it (no dense matrix)."""
+    release(model)
+    return materialize(ratings.select("user_id", "item_id", "rating"), owner=model)
 
 
 class _BaseTopK:
@@ -64,11 +72,7 @@ class _BaseTopK:
         — B keeps working but recomputes from source on its next
         action.  Correctness is unaffected; refit instances you
         intend to keep sharing last."""
-        if self._ratings is not None:
-            self._ratings.unpersist()
-        if self._result is not None:
-            self._result.unpersist()
-        self._ratings = ratings.select("user_id", "item_id", "rating").cache()
+        self._ratings = _own_ratings(self, ratings)
         self._result = None
         return self
 
@@ -86,7 +90,7 @@ class _BaseTopK:
         if self._ratings is None:
             raise RuntimeError("fit() first")
         if self._result is None:
-            self._result = self._transform_all().cache()
+            self._result = materialize(self._transform_all(), owner=self)
         return self._result
 
     def transform_user(self, user_id: int) -> list[tuple[int, float]]:
@@ -260,10 +264,7 @@ class UserBasedRatingRecommender:
         self._ratings: DataFrame | None = None
 
     def fit(self, ratings: DataFrame) -> "UserBasedRatingRecommender":
-        # refit releases the previous cache (same guard as _BaseTopK)
-        if self._ratings is not None:
-            self._ratings.unpersist()
-        self._ratings = ratings.select("user_id", "item_id", "rating").cache()
+        self._ratings = _own_ratings(self, ratings)
         return self
 
     def transform(self, pairs: DataFrame) -> DataFrame:
@@ -282,9 +283,7 @@ class ItemBasedRatingRecommender:
         self._ratings: DataFrame | None = None
 
     def fit(self, ratings: DataFrame) -> "ItemBasedRatingRecommender":
-        if self._ratings is not None:
-            self._ratings.unpersist()
-        self._ratings = ratings.select("user_id", "item_id", "rating").cache()
+        self._ratings = _own_ratings(self, ratings)
         return self
 
     def transform(self, pairs: DataFrame) -> DataFrame:
@@ -361,9 +360,7 @@ class ContentBasedRatingRecommender:
         self._features: DataFrame | None = None
 
     def fit(self, ratings: DataFrame) -> "ContentBasedRatingRecommender":
-        if self._ratings is not None:
-            self._ratings.unpersist()
-        self._ratings = ratings.select("user_id", "item_id", "rating").cache()
+        self._ratings = _own_ratings(self, ratings)
         return self
 
     def set_features(

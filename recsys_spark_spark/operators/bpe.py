@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..lifecycle import materialize, release
+
 #: checkpoint the vocabulary relation every this many merges (plan
 #: depth bound; each merge adds one aggregate-fold layer)
 CHECKPOINT_EVERY = 8
@@ -344,7 +346,7 @@ def train_bpe(
     overlap/tie/doubled-pair corpora included)."""
     vocab = word_vocab(docs, text_col)
     if local_vocab_budget is not None:
-        vocab = vocab.persist()
+        vocab = materialize(vocab, owner="bpe")
         if vocab.count() <= local_vocab_budget:
             tbl = vocab.toArrow()
             wc = list(
@@ -353,11 +355,10 @@ def train_bpe(
                     tbl.column("n").to_pylist(),
                 )
             )
-            vocab.unpersist()
+            release("bpe")
             return _train_local(wc, n_merges)
     sym = init_symbols(vocab).localCheckpoint(eager=True)
-    if local_vocab_budget is not None:
-        vocab.unpersist()  # the checkpoint holds the materialized state
+    release("bpe")  # the checkpoint holds the materialized state
     merges: list[tuple[str, str]] = []
     created: set[str] = set()
     folds_since_ckpt = 0

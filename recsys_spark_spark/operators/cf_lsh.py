@@ -58,27 +58,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.similarity import with_kernel_column
+from ..lifecycle import materialize
 
 N_PLANES = 128
 BAND_WIDTH = 8
-
-#: the rating relation cached by the last ``lsh_pairwise_similarity``
-#: call (CACHE OWNERSHIP, same contract as recommenders/als.py:63-71:
-#: the cache must outlive the returned lazy DataFrame, so the function
-#: cannot unpersist it itself).  ``release_last_state()`` frees it once
-#: the caller has materialized the sims.
-_last_cached: list[DataFrame] = []
-
-
-def release_last_state() -> None:
-    """Unpersist the rating relation(s) cached by prior
-    ``lsh_pairwise_similarity`` calls.  Call after the returned sims
-    DataFrame has been materialized (collected / written / cached
-    itself); the sims plan re-computes the relation if executed again
-    afterwards."""
-    while _last_cached:
-        _last_cached.pop().unpersist()
-
 
 def _key_plane_weights(
     keys: DataFrame, n_planes: int = N_PLANES
@@ -232,11 +215,9 @@ def lsh_pairwise_similarity(
     # as rating data is
     r = r.groupBy("ent", "key").agg(F.sum("r").alias("r"))
     # the rating relation feeds the signature pass AND both sides of
-    # the entity-profile join — cache; ownership documented on
-    # release_last_state() (module top): caller frees via
-    # release_last_state() after materializing the sims
-    r = r.cache()
-    _last_cached.append(r)
+    # the entity-profile join; it must outlive the returned lazy sims,
+    # so the caller frees it with lifecycle.release("cf_lsh")
+    r = materialize(r, owner="cf_lsh")
 
     cand = lsh_candidate_pairs(r, n_planes, band_width, max_bucket)
 

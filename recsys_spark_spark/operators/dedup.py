@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rounding import qround
+from ..lifecycle import materialize
 
 N_HASHES = 64
 ROWS_PER_BAND = 4
@@ -313,27 +314,23 @@ def minhash_neardup_pairs(
     same default so the two engines stay bit-equal at every
     setting."""
     # sh feeds FOUR subtrees (signatures, pair sizes, both verify join
-    # sides); persist so the text scan + shingle explode run once per
-    # action, not 4x (same discipline as ngram_jaccard_pairs — lazily
-    # consumed, so the cache lives for the session like every shared
-    # plan-identity cache in this package).  spread_scan: the shingle
-    # explode + per-shingle hashing is the CPU-heavy stage and must
-    # not inherit a 1-task file layout (see readers.spread_scan).
+    # sides).  spread_scan: the shingle explode + per-shingle hashing
+    # is the CPU-heavy stage and must not inherit a 1-task file layout
+    # (see readers.spread_scan).
     from ..sources.readers import spread_scan
 
-    sh = shingle_rows(spread_scan(docs), id_col, text_col, shingle).persist()
-    # EAGER materialization (r15): a lazily-persisted relation with
-    # multiple consumers inside ONE action gets computed by every
-    # consumer subtree CONCURRENTLY under AQE's parallel stage
-    # futures (profiled: 3-4 racing stages each re-running the shingle
-    # explode + per-shingle md5 before any cache block registers).
-    # One count serializes: compute once, everyone reads the cache.
-    sh.count()
+    sh = materialize(
+        shingle_rows(spread_scan(docs), id_col, text_col, shingle),
+        owner="dedup",
+        eager=True,
+    )
     sigs = minhash_signatures(sh, n_hashes, hash_mode)
-    cand = lsh_candidate_pairs(
-        band_rows(sigs, rows_per_band, n_hashes), max_bucket
-    ).persist()
-    cand.count()  # same race: cand feeds the id set AND the co join
+    # cand feeds the id set AND the co join
+    cand = materialize(
+        lsh_candidate_pairs(band_rows(sigs, rows_per_band, n_hashes), max_bucket),
+        owner="dedup",
+        eager=True,
+    )
     # r14: the exact-verify co-count join only reads shingles of docs
     # that appear in a candidate pair — a tiny subset on a healthy
     # corpus.  Restricting sh ONCE (broadcast semi-join on the
@@ -344,8 +341,10 @@ def minhash_neardup_pairs(
     ids = cand.select(
         F.explode(F.array("id_a", "id_b")).alias("id")
     ).distinct()
-    sh_c = sh.join(F.broadcast(ids), "id", "semi").persist()
-    sh_c.count()  # same race: sh_c feeds both sides of the co join
+    # sh_c feeds both sides of the co join
+    sh_c = materialize(
+        sh.join(F.broadcast(ids), "id", "semi"), owner="dedup", eager=True
+    )
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     return verify_jaccard(cand, sh_c, threshold, sizes=sizes)
 
@@ -462,15 +461,10 @@ def ngram_jaccard_pairs(
     if max_doc_freq is not None:
         df_counts = sh.groupBy("s").agg(F.count("*").alias("_df"))
         sh = sh.join(df_counts, "s").where(F.col("_df") <= max_doc_freq).drop("_df")
-    # sh feeds three consumers (sizes + both sides of the self-join);
-    # persist so the explode + upstream text scan runs once, not 3×.
-    # MEMORY_AND_DISK (the persist() default): shingle rows ≈ tokens ×
-    # ids can exceed executor memory at scale — spill, don't recompute.
-    # EAGER (r15): without the count, the three consumer subtrees race
-    # to compute the cache concurrently under AQE (see
-    # minhash_neardup_pairs) — the explode ran up to 3× per action.
-    sh = sh.persist()
-    sh.count()
+    # sh feeds three consumers (sizes + both sides of the self-join).
+    # MEMORY_AND_DISK: shingle rows ≈ tokens × ids can exceed executor
+    # memory at scale — spill, don't recompute.
+    sh = materialize(sh, owner="dedup", eager=True)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     a = sh.select(F.col("id").alias("id_a"), "s")
     b = sh.select(F.col("id").alias("id_b"), "s")
@@ -938,13 +932,14 @@ def dedup_cut_docs(
     # consumers) and two fp-keyed join stages.  One combined aggregate
     # (distinct-doc count + min-(id,start) keeper — identical keeper
     # set: d's rows per fp ARE w's rows per fp) and one join back
-    # leaves w with two consumers; the persist + eager count reduces
-    # that to ONE window-md5 pass over the corpus (§5: reused twice,
-    # recompute = a full per-window md5 pass — the cache spills to
-    # disk above memory, still cheaper than recomputing
-    # cryptographic hashes of O(corpus tokens) windows).
-    w = duplicate_window_rows(docs, n, id_col, text_col).persist()
-    w.count()
+    # leaves w with two consumers, cached so the corpus gets ONE
+    # window-md5 pass (§5: reused twice, recompute = a full per-window
+    # md5 pass — the cache spills to disk above memory, still cheaper
+    # than recomputing cryptographic hashes of O(corpus tokens)
+    # windows).
+    w = materialize(
+        duplicate_window_rows(docs, n, id_col, text_col), owner="dedup", eager=True
+    )
     fpagg = (
         w.select("fp", "id", "start")
         .groupBy("fp")
@@ -967,16 +962,16 @@ def dedup_cut_docs(
         F.explode(F.sequence("start", F.col("start") + (n - 1))).alias("pos"),
         "is_keeper",
     )
-    # cut feeds the token anti-join AND the per-doc cut counts —
-    # persist the duplicate-bounded relation, eager for the AQE race
-    cut = (
+    # cut (duplicate-bounded) feeds the token anti-join AND the
+    # per-doc cut counts
+    cut = materialize(
         coverage.groupBy("id", "pos")
         .agg(F.max("is_keeper").alias("any_keeper"))
         .where(~F.col("any_keeper"))
-        .select("id", "pos")
-        .persist()
+        .select("id", "pos"),
+        owner="dedup",
+        eager=True,
     )
-    cut.count()
     # r14 note (examined, measured, REJECTED at bench scale): a
     # duplicate-bounded rebuild — semi-join docs to the ids with ≥1
     # cut position, pass every untouched doc through verbatim (split +

@@ -49,8 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .cache_tracking import track
 from ..functions.rounding import qround, qround_sql
+from ..lifecycle import materialize
 from .dedup import hash60, hash60_sql
 from .knn import _dot, _norm, _vec_double
 
@@ -240,7 +240,7 @@ def cosine_knn_ivf(
     # costs across the index build's several small jobs and regressed
     # embedding_knn_ivf 2.8 -> 4.7-5.9 s in-bench; at production scale
     # the scan arrives multi-partition anyway.
-    base = track(base.cache())  # released via cache_tracking (ownership: caller)
+    base = materialize(base, owner="ivf")  # released by the caller
     c0 = seed_centroids(base, id_col, vec_col, n_cells)
     c1 = refine_centroids(base, c0, vec_col)
 

@@ -47,8 +47,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .cache_tracking import track
 from ..functions.rounding import qround
+from ..lifecycle import materialize
 
 N_PLANES = 128
 BAND_WIDTH = 4
@@ -185,7 +185,7 @@ def cosine_knn_lsh(
     # decoded a single time (same rationale as cosine_knn_ivf).  NOT
     # spread_scan'd — see cosine_knn_ivf: per-task fixed costs outweigh
     # the tiny total per-row work of bench-scale vector inputs.
-    base = track(base.cache())  # released via cache_tracking (ownership: caller)
+    base = materialize(base, owner="knn")  # released by the caller
     dim = base.select(F.size(vec_col).alias("d")).first()["d"]
     base_sigs = lsh_signatures(
         base,

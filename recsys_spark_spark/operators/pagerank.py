@@ -33,8 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cache_tracking import track
 from ..functions.rounding import qround
+from ..lifecycle import materialize
 
 PR_ROUND = 7
 
@@ -96,31 +96,25 @@ def pagerank(
     simplification) — on the symmetrized co-rating caller every node
     has out-edges, so this never fires there; documented rather than
     hidden."""
-    edges = track(edges.cache())  # released via cache_tracking (ownership: caller)
-    nodes = (
+    # the final action's plan references edges/nodes/deg once per
+    # iteration, so all three are eager (left lazy, the upstream
+    # co-rating pair join replayed inside one action: 427 task-s for 5
+    # iterations at sf0.1); nodes is counted by hand because the
+    # broadcast decision below needs its count
+    edges = materialize(edges, owner="pagerank", eager=True)
+    nodes = materialize(
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .cache()
+        .distinct(),
+        owner="pagerank",
     )
-    nodes = track(nodes)
     n_df = F.broadcast(nodes.agg(F.count("*").cast("double").alias("n")))
-    deg = track(
-        edges.groupBy("src")
-        .agg(F.sum("w").cast("double").alias("deg"))
-        .cache()
-    )
-    # EAGER materialization (r15): the final action's plan references
-    # edges/nodes/deg once per iteration, and lazily-cached relations
-    # with many consumer subtrees get computed CONCURRENTLY by AQE's
-    # stage futures before any cache block registers — profiled as the
-    # upstream co-rating pair join replaying several times inside one
-    # action (427 task-s for a 5-iteration run at sf0.1).  Three tiny
-    # counts serialize the cache builds; every iteration then reads
-    # blocks.
-    edges.count()
     n_nodes = nodes.count()
-    deg.count()
+    deg = materialize(
+        edges.groupBy("src").agg(F.sum("w").cast("double").alias("deg")),
+        owner="pagerank",
+        eager=True,
+    )
     # rank/degree relations are O(nodes); Catalyst's size estimate for
     # the ITERATED pr plan balloons (join estimates multiply), so it
     # shuffled the full edge cache every iteration (profiled: 5 ×

@@ -49,8 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .cache_tracking import track
 from ..functions.rounding import qround
+from ..lifecycle import materialize
 from .ivf import seed_centroids
 from .knn import _dot, _norm, _vec_double
 
@@ -205,7 +205,7 @@ def cosine_knn_pq(
     """Approximate cosine top-k via PQ/ADC + exact rerank.  Returns
     ``(query_id, match_id, sim, rank)`` — sim is the EXACT cosine of
     the shortlisted candidates (module docstring)."""
-    base = track(base.cache())  # released via cache_tracking (ownership: caller)
+    base = materialize(base, owner="pq")  # released by the caller
     C = train_codebooks(base, id_col, vec_col, m_sub, k_codes)
     m_local, k_local, sub = C.shape
     encoded = encode_base(base, C, id_col, vec_col)
@@ -463,7 +463,7 @@ def cosine_knn_ivfpq(
 
     n_cells = N_CELLS if n_cells is None else n_cells
     n_probe = N_PROBE if n_probe is None else n_probe
-    base = track(base.cache())  # released via cache_tracking (ownership: caller)
+    base = materialize(base, owner="pq")  # released by the caller
     # coarse quantizer (IVF recipe)
     cc0 = seed_centroids(base, id_col, vec_col, n_cells)
     cc1 = refine_centroids(base, cc0, vec_col)

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import qround
+from ..lifecycle import materialize
 
 Q_MAX = 127
 
@@ -125,11 +126,10 @@ def knn_bruteforce_int8(
     # query side, the base dot side) — persist so one action quantizes
     # and explodes the source once, not ~4x (same multi-consumer
     # discipline as operators/dedup.py's persisted shingles)
-    flat = qz.select(
-        "id",
-        "scale",
-        F.posexplode("qvec").alias("pos", "qv"),
-    ).persist()
+    flat = materialize(
+        qz.select("id", "scale", F.posexplode("qvec").alias("pos", "qv")),
+        owner="quant",
+    )
     norms = flat.groupBy("id").agg(
         F.sqrt(F.sum(F.col("qv").cast("bigint") * F.col("qv"))).alias("qnrm")
     )

@@ -23,6 +23,7 @@ from ..operators.pq import (
     knn_pq_oracle_sql,
 )
 from ..functions.rounding import qround
+from ..lifecycle import materialize
 from ..operators.components import components_sql, connected_components
 from ..operators.ivf import cosine_knn_ivf, knn_ivf_oracle_sql, overfetch_k
 from ..operators.knn import cosine_knn_lsh, knn_lsh_oracle_sql
@@ -488,11 +489,15 @@ def semdedup(
     cosine_neardup_pairs) — the production-regime scale path."""
     from pyspark.sql import Window
 
-    flat = e.select(
-        "vec_id", "label", F.posexplode("embedding").alias("pos", "v")
-    ).select(
-        "vec_id", "label", "pos", F.col("v").cast("double").alias("v")
-    ).persist()
+    # flat feeds the centroids, the norms and the dots; sims feeds the
+    # elected and the singleton branches
+    flat = materialize(
+        e.select(
+            "vec_id", "label", F.posexplode("embedding").alias("pos", "v")
+        ).select("vec_id", "label", "pos", F.col("v").cast("double").alias("v")),
+        owner="ann",
+        eager=True,
+    )
     cent = flat.groupBy("label", "pos").agg(qround(F.avg("v"), 6).alias("c"))
     vn = flat.groupBy("vec_id").agg(
         F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nv")
@@ -505,7 +510,7 @@ def semdedup(
         .groupBy("vec_id")
         .agg(F.sum(F.col("v") * F.col("c")).alias("dot"))
     )
-    sims = (
+    sims = materialize(
         e.select("vec_id", "label")
         .join(vn, "vec_id")
         .join(F.broadcast(cn), "label")
@@ -519,8 +524,10 @@ def semdedup(
                 ),
                 6,
             ).alias("cent_sim"),
-        )
-    ).persist()
+        ),
+        owner="ann",
+        eager=True,
+    )
     pairs = cosine_neardup_pairs(e, threshold, use_lsh_candidates)
     comp = connected_components(pairs.select("id_a", "id_b")).select(
         F.col("id").alias("vec_id"), "comp"

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.rounding import qround_sql
+from ..lifecycle import materialize
 from ..operators.pagerank import PR_ROUND, corating_edges, pagerank
 from .recsys import RATINGS_CTE, _cached_ratings
 from .registry import register, register_demoted
@@ -202,36 +203,37 @@ def triangle_stats(und: DataFrame) -> DataFrame:
 
     from ..functions.rounding import qround
 
-    # r15 (guide §5 cache-what's-reused + the AQE race lesson): this
-    # plan references the oriented edge relation THREE times (two
-    # wedge sides + the closing join), the degree relation three times
-    # and the edge list twice — unpersisted, ONE action replayed the
-    # upstream co-rating pair join ~15× through the duplicated
-    # subtrees (profiled: 97.7 s wall, 2,757 task-s, 110 GB of spill
-    # at sf0.1).  Persist + eagerly materialize each reused relation
-    # (all are O(edges) or O(nodes), far below the pair join), and
-    # fold the unionAll fan-outs into single-reference explodes.
-    und = und.persist()
-    und.count()
-    deg = (
+    # r15 (guide §5 cache-what's-reused): this plan references the
+    # oriented edge relation THREE times (two wedge sides + the closing
+    # join), the degree relation three times and the edge list twice —
+    # unpersisted, ONE action replayed the upstream co-rating pair join
+    # ~15× through the duplicated subtrees (profiled: 97.7 s wall,
+    # 2,757 task-s, 110 GB of spill at sf0.1).  Each reused relation is
+    # O(edges) or O(nodes), far below the pair join; the unionAll
+    # fan-outs fold into single-reference explodes.
+    und = materialize(und, owner="graph", eager=True)
+    deg = materialize(
         und.select(F.explode(F.array("src", "dst")).alias("id"))
         .groupBy("id")
-        .agg(F.count("*").alias("deg"))
-        .persist()
+        .agg(F.count("*").alias("deg")),
+        owner="graph",
+        eager=True,
     )
-    deg.count()
     da = deg.select(F.col("id").alias("src"), F.col("deg").alias("dsrc"))
     db = deg.select(F.col("id").alias("dst"), F.col("deg").alias("ddst"))
     keyed = und.join(da, "src").join(db, "dst")
     fwd = F.struct("dsrc", "src") < F.struct("ddst", "dst")
-    o = keyed.select(
-        F.when(fwd, F.col("src")).otherwise(F.col("dst")).alias("src"),
-        F.when(fwd, F.col("dst")).otherwise(F.col("src")).alias("dst"),
-        F.when(fwd, F.struct(F.col("ddst").alias("d"), F.col("dst").alias("i")))
-        .otherwise(F.struct(F.col("dsrc").alias("d"), F.col("src").alias("i")))
-        .alias("kdst"),
-    ).persist()
-    o.count()
+    o = materialize(
+        keyed.select(
+            F.when(fwd, F.col("src")).otherwise(F.col("dst")).alias("src"),
+            F.when(fwd, F.col("dst")).otherwise(F.col("src")).alias("dst"),
+            F.when(fwd, F.struct(F.col("ddst").alias("d"), F.col("dst").alias("i")))
+            .otherwise(F.struct(F.col("dsrc").alias("d"), F.col("src").alias("i")))
+            .alias("kdst"),
+        ),
+        owner="graph",
+        eager=True,
+    )
     o1 = o.select("src", F.col("dst").alias("b"), F.col("kdst").alias("kb"))
     o2 = o.select("src", F.col("dst").alias("c"), F.col("kdst").alias("kc"))
     wedges = o1.join(o2, "src").where(F.col("kb") < F.col("kc"))

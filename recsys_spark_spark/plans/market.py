@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import qround, qround_sql
+from ..lifecycle import materialize
 from ..sources.readers import table
 from .registry import register, register_demoted
 
@@ -118,9 +119,8 @@ def cooccurrence_lift(
         .where(F.col("c") <= max_basket)
         .select("ok")
     )
-    # session-lifetime cache, same idiom as plans/recsys._cached_ratings:
     # b feeds three consumers (item counts + both pair-join sides)
-    b = b0.join(sz, "ok").cache()
+    b = materialize(b0.join(sz, "ok"), owner="market")
     # sz IS the distinct qualifying basket set — counting it avoids
     # re-running the join + a second distinct just for the total
     n_baskets = sz.count()  # O(1) model state

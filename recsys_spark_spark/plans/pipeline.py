@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import qround
+from ..lifecycle import materialize
 from ..operators.dedup import (
     SHINGLE,
     hash60_sql,
@@ -176,9 +177,8 @@ def _gated_survivors(
     )
     # surv feeds the near-dup machinery AND the final anti-join in BOTH
     # pipelines; without a persist the quality gate re-runs for every
-    # consumer.  (Session-lifetime cache by design, like every shared
-    # plan-identity cache in this package.)
-    return surv.persist()
+    # consumer
+    return materialize(surv, owner="pipeline")
 
 
 def clean_corpus(
@@ -211,7 +211,9 @@ def clean_corpus(
     pairs = ngram_jaccard_pairs(surv, neardup_threshold)
     # tiny (dropped doc ids) — persisting lets the profile branch
     # count it without the final anti-join recomputing the pair join
-    dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct().persist()
+    dropped = materialize(
+        pairs.select(F.col("id_b").alias("doc_id")).distinct(), owner="pipeline"
+    )
     if PROFILE_CLEAN:
         import time as _time
 
@@ -936,7 +938,7 @@ def corpus_train_ready(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped = comp.where(F.col("id") != F.col("comp")).select(
         F.col("id").alias("doc_id")
     )
-    surv2 = surv.join(dropped, "doc_id", "left_anti").persist()
+    surv2 = materialize(surv.join(dropped, "doc_id", "left_anti"), owner="pipeline")
     if PROFILE_CLEAN:
         surv2.count()
         global last_train_ready_timings

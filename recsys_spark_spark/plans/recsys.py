@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import qround
 from ..functions.similarity import pairwise_similarity
+from ..lifecycle import materialize
 from ..operators.dedup import hash60_sql
 from ..recommenders.neighborhood import item_based_topk, user_based_topk
 from ..recommenders.hybrid import hybrid_topk
@@ -322,9 +323,9 @@ def _cached_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every CF plan references the ratings subtree many times (pair join
     sides, per-entity stats, means, candidate join, anti-join); without
     a cache Catalyst re-executes the orders⋈lineitem aggregate for each
-    reference.  ``cache()`` registers by analyzed plan, so all queries
+    reference.  The cache registers by analyzed plan, so all queries
     in a session share one materialization."""
-    return ratings_from_sales(spark, sf_dir).cache()
+    return materialize(ratings_from_sales(spark, sf_dir), owner="recsys")
 
 
 @register(

@@ -32,6 +32,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..lifecycle import release
+
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -770,90 +772,29 @@ def oracle_of(name: str) -> str:
     return spec.oracle
 
 
-def release_query_state(
-    spark: SparkSession,
-    clear_sql_cache: bool = True,
-    unpersist_checkpoints: bool | None = None,
-) -> None:
-    """Drop every piece of session state a query run can accumulate:
-    the cache-tracking pool (ANN/PageRank internals), the ALS and
-    CF-LSH model caches, and (by default) the ENTIRE SQL cache plus
-    every persistent RDD in the SparkContext (localCheckpoint blocks).
-
-    ``unpersist_checkpoints`` defaults to ``None`` = FOLLOW
-    ``clear_sql_cache`` (r12 ADVICE): before r12 the persistent-RDD
-    sweep was nested under ``clear_sql_cache``, so a caller passing
-    ``clear_sql_cache=False`` also kept its localCheckpoint frames;
-    making the new flag independently default-True silently broke
-    that opt-out.  Pass an explicit bool to split the two sweeps.
-
-    MATERIALIZE-BEFORE-RELEASE CONTRACT (r11 ADVICE — the caveat that
-    previously lived only in an inline comment): with
-    checkpoint-sweeping enabled (the effective default, and what
-    ``drive_all`` uses) this sweeps EVERY persistent RDD in the
-    context, including
-    caller-owned ``localCheckpoint`` frames whose lineage is cut BY
-    DESIGN — a still-lazy plan over one fails permanently rather than
-    recomputing.  Collect/write every result you still need BEFORE
-    calling this; a notebook session holding its own checkpointed
-    frames between queries should pass ``unpersist_checkpoints=False``
-    to keep the SQL-cache sweep without the persistent-RDD sweep
-    (package-internal checkpoints are safe either way: every registry
-    query materializes its components iteration before returning).
-
-    Exists because accumulated state is a measured failure mode, not a
-    hypothetical: the r10 full-registry certification found a
-    default-1g vanilla JVM OOMs after ~80 queries of accumulated model
-    caches (PERF.md r10 wrap — the 81st query was merely the victim,
-    not the culprit), the r4 bench measured leaked ALS state drifting
-    later queries 2-4x, and the r11 cert sweep found leaked
-    localCheckpoint blocks killing the JVM two queries after the
-    graph family (PERF.md r11).  Any harness that loops over many
-    registry entries in one session (the full-registry certification,
-    model sweeps, notebooks) should call this between queries;
-    correctness of registry queries is unaffected — released relations
-    recompute if re-executed."""
-    from ..operators.cache_tracking import release_tracked
-
-    release_tracked()
-    from ..operators import cf_lsh
-    from ..recommenders import als
-
-    als.release_last_state()
-    cf_lsh.release_last_state()
-    if clear_sql_cache:
-        spark.catalog.clearCache()
-    if unpersist_checkpoints is None:
-        unpersist_checkpoints = clear_sql_cache
-    if unpersist_checkpoints:
-        # clearCache() only drops SQL-cache entries; localCheckpoint
-        # blocks (the pointer-jumping components' plan-truncation
-        # mechanism, operators/components.py) live as PERSISTENT RDDs
-        # in the block manager and accumulated exactly like the model
-        # caches did — measured: the graph-family queries left enough
-        # checkpoint blocks to kill a default-1g JVM two queries later
-        # (item_pagerank, r11 cert sweeps).  Lineage caveat: see the
-        # MATERIALIZE-BEFORE-RELEASE CONTRACT in the docstring.
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for jrdd in list(jmap.values()):
-                jrdd.unpersist(False)
-        except Exception:  # noqa: BLE001 — best-effort on exotic backends
-            pass
+def release_query_state(spark: SparkSession) -> None:
+    """Drop every piece of session state a query run can leave behind:
+    the lifecycle pool (``lifecycle.release``), the whole SQL cache and
+    every persistent RDD in the context (localCheckpoint blocks
+    included).  Collect or write every result you still need first: a
+    lazy plan over a swept localCheckpoint fails instead of
+    recomputing.  Call it between queries in any loop over many of them
+    in one session; registry results are unaffected."""
+    release()
+    spark.catalog.clearCache()
+    try:
+        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+            jrdd.unpersist(False)
+    except Exception:  # noqa: BLE001 — best-effort on exotic backends
+        pass
 
 
-def drive_all(
-    spark: SparkSession,
-    sf_dir: str,
-    names: list[str] | None = None,
-    release_between: bool = True,
-):
+def drive_all(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
     """Execute registry queries (BOTH tiers) one at a time, yielding
-    ``(name, row_count, seconds)``; with ``release_between`` (the
-    default — see :func:`release_query_state`) the session stays
-    flat-memory no matter how many queries run, so the sweep is
-    reproducible on a default JVM heap.  Materialization forces every
-    column (the bench.py hash action), not just a count."""
+    ``(name, row_count, seconds)``; each query is followed by
+    :func:`release_query_state`, so the session stays flat-memory no
+    matter how many queries run.  Materialization forces every column
+    (the bench.py hash action), not just a count."""
     import time as _time
 
     _load_all()
@@ -863,8 +804,7 @@ def drive_all(
         df = allq[name].fn(spark, sf_dir)
         n = df.count()
         df.selectExpr("bit_xor(xxhash64(*)) AS h").collect()
-        if release_between:
-            release_query_state(spark)
+        release_query_state(spark)
         yield name, n, round(_time.perf_counter() - t0, 3)
 
 

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import qround
+from ..lifecycle import materialize
 from ..sources.readers import table
 from .registry import register
 
@@ -106,11 +107,12 @@ def bm25_search(
     toks = F.split("text", " ")
     # consumed by the stats aggregate AND the hits explode — cache so
     # the corpus is tokenized once (same pattern as the ANN bases)
-    base = docs.select(
-        "doc_id",
-        toks.alias("toks"),
-        F.size(toks).cast("bigint").alias("dl"),
-    ).cache()
+    base = materialize(
+        docs.select(
+            "doc_id", toks.alias("toks"), F.size(toks).cast("bigint").alias("dl")
+        ),
+        owner="retrieval",
+    )
     stats = base.agg(
         F.count("*").cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
@@ -224,11 +226,12 @@ def repetition_scores(docs: DataFrame) -> DataFrame:
     toks = F.split("text", " ")
     # consumed three times (token counts, bigram counts, fractions) —
     # cache so the corpus is tokenized once
-    base = docs.select(
-        "doc_id",
-        toks.alias("toks"),
-        F.size(toks).cast("bigint").alias("n_tokens"),
-    ).cache()
+    base = materialize(
+        docs.select(
+            "doc_id", toks.alias("toks"), F.size(toks).cast("bigint").alias("n_tokens")
+        ),
+        owner="retrieval",
+    )
     tokc = (
         base.select("doc_id", F.explode("toks").alias("tok"))
         .groupBy("doc_id", "tok")

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import qround
+from ..lifecycle import materialize
 from ..operators.dedup import hash60, hash60_sql
 from ..recommenders.sequential import SequentialTopK, rule_counts
 from ..sources.readers import table
@@ -218,7 +219,7 @@ def seq_rule_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     # seqs feeds three actions (n_seq count, the tag-alphabet collect
     # inside rule_counts, the final counts aggregation) — persist so
     # the orders⋈lineitem + basket/period/sequence DAG runs once
-    seqs = model._sequences(clustered).persist()
+    seqs = materialize(model._sequences(clustered), owner="seq")
     rules = spark.createDataFrame(RULES, ["rule_id", "antecedent", "consequent"])
     n_seq = seqs.count()
     counts = rule_counts(seqs, rules)

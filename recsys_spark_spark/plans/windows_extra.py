@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import qround, qround_sql
+from ..lifecycle import materialize
 from ..operators.asof import asof_join
 from ..sources.readers import table
 from .registry import register, register_demoted
@@ -385,9 +386,12 @@ def retention_cohorts(e: DataFrame) -> DataFrame:
     # O(users) model-sized frame consumed TWICE (the activity join and
     # the cohort sizes); without the cache each action scans events and
     # re-aggregates it per consumer (no plan-level CSE in Catalyst)
-    first = e.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
-    ).cache()
+    first = materialize(
+        e.groupBy("user_id").agg(
+            F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
+        ),
+        owner="windows_extra",
+    )
     activity = e.select(
         "user_id", F.date_trunc("week", "ts").cast("date").alias("w")
     ).distinct()

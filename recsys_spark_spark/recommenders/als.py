@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import qround
+from ..lifecycle import materialize, on_release
 
 
 def _biases(ratings: DataFrame):
@@ -63,13 +64,11 @@ def als_fit(
     """Fit explicit-feedback ALS on the bias-centered residuals;
     returns (model, mu, bi, bu) — bi/bu come back CACHED (they are
     O(items)/O(users) model state that every serving path joins
-    several times).  CACHE OWNERSHIP: the caller releases them
-    (``bi.unpersist()`` / ``bu.unpersist()``) when done with the
-    model.  The exact serving path releases bi itself once the item
-    biases are collected; bu it cannot release (its serving join
-    runs lazily at action time) — a session fitting many models
-    without unpersisting accumulates O(entities) cached state per
-    fit.
+    several times).  They and MLlib's persisted factor RDDs are owned
+    by ``"als"``: ``lifecycle.release("als")`` frees them once every
+    action on the model's outputs has run.  The exact serving path
+    releases bi itself once the item biases are collected; bu it
+    cannot release (its serving join runs lazily at action time).
 
     ``max_iter=5`` default: on the bias-centered residuals the rank-8
     factorization is converged by 5 sweeps (held-out RMSE identical to
@@ -89,12 +88,11 @@ def als_fit(
     from pyspark.ml.recommendation import ALS
 
     mu, bi, bu = _biases(ratings)
-    bi = bi.cache()
-    bu = bu.cache()
-    resid = (
-        _residuals(ratings, mu, bi, bu)
-        .select("user_id", "item_id", "rating")
-        .cache()
+    bi = materialize(bi, owner="als")
+    bu = materialize(bu, owner="als")
+    resid = materialize(
+        _residuals(ratings, mu, bi, bu).select("user_id", "item_id", "rating"),
+        owner="als",
     )
     if num_blocks is None:
         nnz = resid.count()  # O(1) driver result; also primes the cache
@@ -123,48 +121,16 @@ def als_fit(
     )
     model = als.fit(resid)
     resid.unpersist(blocking=False)
+    spark = ratings.sparkSession
+    on_release(lambda: _unpersist_factor_rdds(spark), owner="als")
     return model, mu, bi, bu
 
 
-#: state left alive by the most recent als_topk call that a caller
-#: must keep until its action has run: the cached ``bu`` bias frame
-#: (joined lazily at serve time) and, on the exact path, the
-#: broadcast item model.  ``release_last_state()`` frees both plus
-#: MLlib's persisted factor RDDs.
-_LAST_SERVE_STATE: dict | None = None
-
-
-def release_last_state() -> None:
-    """Free ALL state the most recent :func:`als_topk` left alive —
-    call ONLY after every action on its returned DataFrame has run
-    (re-executing the DF afterwards would recompute from scratch or
-    fail on the destroyed broadcast).
-
-    Releases: the cached ``bu`` bias frame, the broadcast item model
-    of the exact path, and MLlib's factor RDDs (``ALS.fit`` persists
-    ``userFactors`` / ``itemFactors`` at ``finalStorageLevel`` with
-    no public unpersist — they are found by their Scala-side RDD
-    names).  Motivation (round-5): the bench runs ``als_topk``
-    FIRST (alphabetical order) and every query that follows it
-    (corpus_clean, corpus_vocab, doc_chunks, embedding_knn_*) drifted
-    2–4× on the round-4 driver box while running flat locally —
-    leaked O(entities) cached state + an expanded JVM heap squeezing
-    the OS page cache is the prime suspect, so the bench now releases
-    eagerly between queries."""
-    global _LAST_SERVE_STATE
-    st, _LAST_SERVE_STATE = _LAST_SERVE_STATE, None
-    if st is None:
-        return
-    spark = st["spark"]
-    for key in ("bu", "bi"):
-        if st.get(key) is not None:
-            st[key].unpersist(blocking=False)
-    if st.get("bc") is not None:
-        st["bc"].destroy()
-    # MLlib names its persisted factor RDDs in ALS.train (public
-    # Spark source: ml/recommendation/ALS.scala setName calls)
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for jrdd in jmap.values():
+def _unpersist_factor_rdds(spark) -> None:
+    """``ALS.fit`` persists ``userFactors`` / ``itemFactors`` with no
+    public unpersist; they are found by the RDD names MLlib sets in
+    ALS.train (ml/recommendation/ALS.scala)."""
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         if jrdd.name() in ("userFactors", "itemFactors"):
             jrdd.unpersist(False)
 
@@ -240,13 +206,6 @@ def als_topk(
     model, mu, bi, bu = als_fit(
         ratings, rank, reg, max_iter, seed, num_blocks, intermediate_storage
     )
-    global _LAST_SERVE_STATE
-    _LAST_SERVE_STATE = {
-        "spark": ratings.sparkSession,
-        "bu": bu,
-        "bi": bi,
-        "bc": None,
-    }
     # O(1)-result driver check (als_fit is already eager)
     n_items = model.itemFactors.count()
     if n_items > max_broadcast_items:
@@ -315,8 +274,7 @@ def _als_topk_exact(
     # (see the ownership note in als_fit's docstring).
     bi.unpersist(blocking=False)
     bc = spark.sparkContext.broadcast((item_ids, V, biv))
-    if _LAST_SERVE_STATE is not None:
-        _LAST_SERVE_STATE["bc"] = bc
+    on_release(bc.destroy, owner="als")
 
     # user side: factors ⋈ bias ⋈ rated-item lists (one shuffle on user)
     seen = ratings.groupBy("user_id").agg(

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import lifecycle
 from ..functions.rounding import qround
 from ..functions.similarity import pairwise_similarity
 
@@ -102,11 +103,11 @@ def _rank_items(
     OPTIMIZATION_r14.md)."""
     w = Window.partitionBy("user_id").orderBy(F.desc("score"), F.asc("item_id"))
     if share and k_items <= RANK_CACHE_K:
-        ranked = (
+        ranked = lifecycle.materialize(
             scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= RANK_CACHE_K)
-            .select("user_id", "item_id", "score", "rank")
-            .cache()
+            .select("user_id", "item_id", "score", "rank"),
+            owner="neighborhood",
         )
         return ranked.where(F.col("rank") <= k_items)
     return (
@@ -183,17 +184,17 @@ def user_based_scored(
 
     if prefilter_neighbors is not None:
         wp = Window.partitionBy("user_id").orderBy(F.desc("sim"), F.asc("neighbor"))
-        sims = (
+        # the pruned neighbor list IS the fitted k-NN model —
+        # O(users·N) rows.  The cache registers by analyzed plan, so
+        # every query in the session that builds the same model
+        # (standalone top-K, the hybrid child, ranking eval) reuses
+        # one materialization of the quadratic pair join instead of
+        # re-running it
+        sims = lifecycle.materialize(
             sims.withColumn("prn", F.row_number().over(wp))
             .where(F.col("prn") <= prefilter_neighbors)
-            .drop("prn")
-            # the pruned neighbor list IS the fitted k-NN model —
-            # O(users·N) rows.  cache() registers by analyzed plan, so
-            # every query in the session that builds the same model
-            # (standalone top-K, the hybrid child, ranking eval) reuses
-            # one materialization of the quadratic pair join instead of
-            # re-running it
-            .cache()
+            .drop("prn"),
+            owner="neighborhood",
         )
 
     neigh_r = ratings.select(
@@ -407,15 +408,15 @@ def scored_from_item_sims(
         wp = Window.partitionBy("item_id").orderBy(
             F.desc("sim"), F.asc("neighbor_item")
         )
-        sims = (
+        # cached for the same plan-identity reuse as the user-axis
+        # model (see user_based_scored): item top-K, the hybrid
+        # child, and content-based top-K each rebuild this exact
+        # O(items·N)-row model
+        sims = lifecycle.materialize(
             sims.withColumn("prn", F.row_number().over(wp))
             .where(F.col("prn") <= prefilter_neighbors)
-            .drop("prn")
-            # cached for the same plan-identity reuse as the user-axis
-            # model (see user_based_scored): item top-K, the hybrid
-            # child, and content-based top-K each rebuild this exact
-            # O(items·N)-row model
-            .cache()
+            .drop("prn"),
+            owner="neighborhood",
         )
 
     user_r = ratings.select(

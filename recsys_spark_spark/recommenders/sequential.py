@@ -36,6 +36,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..lifecycle import materialize, release
+
 
 def rule_counts(
     sequences: DataFrame,
@@ -257,11 +259,6 @@ class SequentialTopK:
     #: and rule_counts both need it; re-collecting per call paid an
     #: extra Spark job and risked the two mask builders drifting)
     tags_: list | None = field(default=None, repr=False)
-    #: fit-scoped caches (baskets, SOM features, FPGrowth lattice,
-    #: intermediate rule set) — unpersisted at the END of fit, once
-    #: every model DataFrame is materialized; without this each fit in
-    #: a session (CV loops, parameter sweeps) leaked executor storage
-    _fit_caches: list = field(default_factory=list, repr=False)
     #: wall-clock seconds per fit stage (cluster / sequences / rules /
     #: votes) — populated by fit(); bench.py reports it so stage-level
     #: regressions are visible round-over-round
@@ -318,10 +315,10 @@ class SequentialTopK:
             # every scan replays the whole upstream DAG (parquet →
             # ratings → baskets → hash features) — measured 176 s vs
             # ~40 s at sf0.01
-            feats = dense_hash_features(
-                baskets, "items", dim=self.som_hash_dim
-            ).persist()
-            self._fit_caches.append(feats)
+            feats = materialize(
+                dense_hash_features(baskets, "items", dim=self.som_hash_dim),
+                owner=self,
+            )
             som = BatchSOM(
                 height=self.grid_height,
                 width=self.grid_width,
@@ -413,12 +410,9 @@ class SequentialTopK:
             minConfidence=self.min_confidence,
         )
         model = fp.fit(sequences)
-        # cache + eager count: the antecedent-frequency join scans the
-        # itemset lattice twice in ONE action; without materialized
-        # blocks both scans would re-run the FPGrowth mining
-        freq = model.freqItemsets.cache()
-        self._fit_caches.append(freq)
-        freq.count()
+        # the antecedent-frequency join scans the itemset lattice twice
+        # in ONE action
+        freq = materialize(model.freqItemsets, owner=self, eager=True)
         # one candidate per (itemset Z, current-period member y):
         # antecedent X = Z \ {y} keeping Z's canonical order, joined
         # back on the (order-normalized) lattice for freq(X)
@@ -479,12 +473,12 @@ class SequentialTopK:
         # rules at sf0.1) plus the strip/cap sort re-executes once per
         # consumer — and monotonically_increasing_id must be computed
         # exactly once for the ids to be consistent across consumers
-        rules = (
-            stripped.drop("_pre")
-            .withColumn("rule_id", F.monotonically_increasing_id())
-            .cache()
+        rules = materialize(
+            stripped.drop("_pre").withColumn(
+                "rule_id", F.monotonically_increasing_id()
+            ),
+            owner=self,
         )
-        self._fit_caches.append(rules)
 
         if n_seq == 0:
             return rules.withColumn("support", F.lit(0.0)).withColumn(
@@ -538,20 +532,19 @@ class SequentialTopK:
         # persist: _with_periods consumes baskets twice (the 1-row
         # span-bounds aggregate + the main branch), which would re-run
         # the upstream interactions join + basket groupBy
-        self._fit_caches = []
-        baskets = self._baskets(interactions).persist()
-        self._fit_caches.append(baskets)
+        baskets = materialize(self._baskets(interactions), owner=self)
         with_periods = self._with_periods(baskets)
         clustered, _ = self._cluster(with_periods)
-        clustered = clustered.cache()
+        clustered = materialize(clustered, owner="sequential")
         _lap("cluster")  # SOM codebook fit (eager); assignment stays lazy
 
         self.baskets_ = clustered
-        self.sequences_ = self._sequences(clustered).cache()
-        # materializing sequences ALSO writes clustered's cache blocks
-        # (first scan of a cached plan materializes it) — no separate
-        # clustered.count() pass needed
-        self.sequences_.count()  # O(users) rows
+        # O(users) rows; materializing sequences ALSO writes
+        # clustered's cache blocks (first scan of a cached plan
+        # materializes it) — no separate clustered.count() pass needed
+        self.sequences_ = materialize(
+            self._sequences(clustered), owner="sequential", eager=True
+        )
         # the tag alphabet (≤ grid cells × periods values) is fixed
         # once sequences exist — collect it ONCE for both rule_counts
         # (fit) and recommend() mask building
@@ -564,8 +557,9 @@ class SequentialTopK:
             .collect()
         )
         _lap("sequences")
-        self.rules_ = self._mine_rules(self.sequences_).cache()
-        self.rules_.count()  # ≤ max_rules rows
+        self.rules_ = materialize(  # ≤ max_rules rows
+            self._mine_rules(self.sequences_), owner="sequential", eager=True
+        )
         _lap("rules")
 
         # seen = distinct (user, item): derive it from the CACHED
@@ -576,10 +570,12 @@ class SequentialTopK:
         # Built BEFORE the vote pool (r15) so max_user_items below is
         # one tiny aggregate over this cache instead of a second full
         # scan + join of the raw interactions.
-        self.seen_ = clustered.select(
-            "user_id", F.explode("items").alias("item_id")
-        ).distinct().cache()
-        self.seen_.count()
+        self.seen_ = materialize(
+            clustered.select("user_id", F.explode("items").alias("item_id"))
+            .distinct(),
+            owner="sequential",
+            eager=True,
+        )
         _lap("seen")
 
         # candidate pool: items of last-period transactions, voted per
@@ -612,19 +608,19 @@ class SequentialTopK:
         wv = Window.partitionBy("transaction_cluster").orderBy(
             F.desc("votes"), F.asc("item_id")
         )
-        self.cluster_votes_ = (
+        self.cluster_votes_ = materialize(  # ≤ clusters × vote_prefilter rows
             votes.withColumn("_vr", F.row_number().over(wv))
             .where(F.col("_vr") <= eff_prefilter)
-            .drop("_vr")
-            .cache()
+            .drop("_vr"),
+            owner="sequential",
+            eager=True,
         )
-        self.cluster_votes_.count()  # ≤ clusters × vote_prefilter rows
         _lap("votes")
         # every model DataFrame (baskets_/sequences_/rules_/votes/seen)
-        # is materialized above — the fit-scoped intermediates can go
-        for df in self._fit_caches:
-            df.unpersist()
-        self._fit_caches = []
+        # is materialized above — the fit-scoped intermediates
+        # (baskets, SOM features, FPGrowth lattice, intermediate rule
+        # set), owned by this instance, can go
+        release(self)
         self.timings_ = timings
         return self
 

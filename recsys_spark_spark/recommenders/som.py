@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..lifecycle import materialize, release
+
 
 class BatchSOM:
     """h×w batch SOM over a dense ``array<double>`` feature column."""
@@ -196,10 +198,8 @@ class BatchSOM:
         # every Lloyd iteration rescans it (few fat partitions:
         # per-task Arrow setup dominates on ~100k rows spread over 32
         # partitions)
-        sampled = False
         if sample_pred is not None:
-            df = df.where(sample_pred).coalesce(8).persist()
-            sampled = True
+            df = materialize(df.where(sample_pred).coalesce(8), owner=self)
         # NOT persisted in the unsampled branch: caching a projection
         # whose columns mix nested higher-order functions with the
         # downstream pandas UDF trips Spark 4.1's interpreted
@@ -261,8 +261,7 @@ class BatchSOM:
                 sums[r["bmu"]] += np.array(r["s"])
 
             self._apply_update(counts, sums, self._sigma(it))
-        if sampled:
-            df.unpersist()
+        release(self)
         return self
 
     def transform(

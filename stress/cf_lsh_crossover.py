@@ -75,7 +75,8 @@ print(f"ratings {n} over {C*UPC} users x {N_ITEMS} items; "
       f"(hottest item {stats['hot']} raters)", flush=True)
 
 from recsys_spark_spark.functions.similarity import pairwise_similarity
-from recsys_spark_spark.operators.cf_lsh import lsh_pairwise_similarity, release_last_state
+from recsys_spark_spark.lifecycle import release
+from recsys_spark_spark.operators.cf_lsh import lsh_pairwise_similarity
 
 t0 = time.perf_counter()
 exact = pairwise_similarity(r, "cosine", "user", directed=False)
@@ -101,7 +102,7 @@ found = hi.join(
 ).count()
 print(f"recall on sim >= {TAU}: {found}/{n_hi} = {found / max(1, n_hi):.3f}",
       flush=True)
-release_last_state()
+release("cf_lsh")
 verdict = "LSH WINS" if t_lsh < t_exact else "EXACT WINS"
 print(f"CROSSOVER VERDICT at this density: {verdict} "
       f"(exact {t_exact:.1f}s vs lsh {t_lsh:.1f}s)", flush=True)
@@ -150,7 +151,7 @@ t0 = time.perf_counter()
 n_lsh2 = lsh_pairwise_similarity(r2, "cosine", "user", directed=False).count()
 t_lsh2 = time.perf_counter() - t0
 print(f"LSH with hot keys: {t_lsh2:.1f}s -> {n_lsh2:,} pairs", flush=True)
-release_last_state()
+release("cf_lsh")
 print("note: the engine's production guidance stands regardless — "
       "max_raters_per_item caps hot keys for BOTH paths; this phase "
       "measures the uncapped regime the r5 claim was about", flush=True)

@@ -39,7 +39,7 @@ print(f"graph: {n_edges:,} edges over ~{N:,} nodes, "
       f"{HUBS} hubs at ~{N//2//HUBS:,} in-degree", flush=True)
 
 from recsys_spark_spark.operators.pagerank import pagerank
-from recsys_spark_spark.operators.cache_tracking import release_tracked
+from recsys_spark_spark.lifecycle import release
 
 def run(iters: int) -> tuple[float, float, list]:
     t0 = time.perf_counter()
@@ -47,7 +47,7 @@ def run(iters: int) -> tuple[float, float, list]:
     total = pr.agg(F.sum("pr").alias("s")).collect()[0]["s"]
     top = pr.orderBy(F.desc("pr")).limit(HUBS).collect()
     wall = time.perf_counter() - t0
-    release_tracked()
+    release("pagerank")
     return wall, total, top
 
 w5, total5, top5 = run(5)

@@ -69,7 +69,7 @@ def main() -> None:
 
     from recsys_spark_spark.plans import pipeline as _pipeline
     from recsys_spark_spark.plans.registry import bench_queries
-    from recsys_spark_spark.recommenders import als as _als
+    from recsys_spark_spark.lifecycle import release
 
     _pipeline.PROFILE_CLEAN = True
     spark = get_spark_ui()
@@ -127,7 +127,7 @@ def main() -> None:
             for s in stages[:12]
         ]
         if name == "als_topk":
-            _als.release_last_state()
+            release("als")
         print(f"{name}: {t_total:.2f}s", flush=True)
 
         # SQL-tab operator metrics for this query's executions: maps
@@ -142,7 +142,7 @@ def main() -> None:
                 or (e.get("jobDescription") or "").startswith(f"bench:{name}")
             ]
             nodes = []
-            for e in execs[-6:]:
+            for e in new_execs or execs[-6:]:
                 detail = rest(spark, f"sql/{e['id']}")
                 for nd in detail.get("nodes", []):
                     mets = {

@@ -1,10 +1,16 @@
-"""Library entry points must not leak session-lifetime caches
-(operators/cache_tracking.py — the shared form of the ALS/cf_lsh
-release pattern, round-6)."""
+"""Library entry points must not leak session-lifetime caches, and the
+package caches through one owner-keyed pool (recsys_spark_spark/
+lifecycle.py)."""
 
 from __future__ import annotations
 
+import re
+import sys
+from pathlib import Path
+
 from pyspark.sql import functions as F
+
+from recsys_spark_spark import lifecycle
 
 
 def _persistent_ids(spark):
@@ -12,13 +18,16 @@ def _persistent_ids(spark):
 
 
 def test_ann_and_pagerank_caches_release_to_baseline(spark):
-    from recsys_spark_spark.operators.cache_tracking import release_tracked
+    """ANN bases and PageRank's edge/node/degree caches outlive their
+    calls (the returned frames are lazy over them); their owners'
+    release must return the session's persistent-RDD set to
+    baseline."""
     from recsys_spark_spark.operators.ivf import cosine_knn_ivf
     from recsys_spark_spark.operators.knn import cosine_knn_lsh
     from recsys_spark_spark.operators.pagerank import pagerank
     from recsys_spark_spark.operators.pq import cosine_knn_pq
 
-    release_tracked()  # drain anything earlier tests left behind
+    lifecycle.release()  # drain anything earlier tests left behind
     base_ids = _persistent_ids(spark)
 
     vecs = spark.range(80).select(
@@ -43,71 +52,92 @@ def test_ann_and_pagerank_caches_release_to_baseline(spark):
     # evict OTHER tests' dead caches under a shared session (r6
     # full-suite lesson) — only ids NEW since base are ours to release
     assert _persistent_ids(spark) - base_ids  # the new caches exist...
-    release_tracked()
+    for owner in ("knn", "ivf", "pq", "pagerank"):
+        lifecycle.release(owner)
     assert _persistent_ids(spark) - base_ids == set()  # ...all released
+    assert lifecycle._pool == []
 
 
 def test_scoped_release_only_evicts_own_caches(spark):
-    """r6 ADVICE ownership model: two consumers sharing a session use
-    scope tokens; releasing one owner's caches must leave the other's
-    persisted, and a bare release still drains everything."""
-    from recsys_spark_spark.operators.cache_tracking import (
-        release_tracked,
-        scope,
-        track,
-    )
-
-    release_tracked()
+    """Two owners sharing a session: releasing one owner's caches must
+    leave the other's persisted, and a bare release still drains
+    everything."""
+    lifecycle.release()
     base_ids = _persistent_ids(spark)
 
-    a, b = scope(), scope()
-    df_a = track(spark.range(10).cache(), owner=a)
-    df_b = track(spark.range(20).cache(), owner=b)
-    df_a.count(), df_b.count()
+    a = object()  # an object owner, e.g. a model instance
+    df_a = lifecycle.materialize(spark.range(10), owner=a, eager=True)
+    df_b = lifecycle.materialize(spark.range(20), owner="b", eager=True)
     assert len(_persistent_ids(spark) - base_ids) == 2
 
-    release_tracked(a)  # evicts ONLY owner a's cache
+    lifecycle.release(a)  # evicts ONLY owner a's cache
     assert len(_persistent_ids(spark) - base_ids) == 1
+    assert not df_a.is_cached
     assert df_b.storageLevel.useMemory  # b untouched
 
-    release_tracked()  # bare form drains the rest regardless of owner
+    lifecycle.release()  # bare form drains the rest regardless of owner
     assert _persistent_ids(spark) - base_ids == set()
 
 
 def test_track_release_thread_safe(spark):
-    """r7 ADVICE: the registry mutation is lock-guarded, so concurrent
-    track/release from threads sharing the session can neither lose an
+    """The pool mutation is lock-guarded, so concurrent registration
+    and release from threads sharing the session can neither lose an
     entry (a cache that is never released) nor double-release one.
-    Hammer the list with racing owners and assert exact accounting:
-    every tracked cache ends uncached, and the registry ends empty."""
+    Hammer the pool with racing owners and assert exact accounting:
+    every release runs exactly once, every cache ends uncached, and the
+    pool ends empty."""
     import threading
 
-    from recsys_spark_spark.operators import cache_tracking as ct
-
-    ct.release_tracked()  # drain anything earlier tests left behind
+    lifecycle.release()  # drain anything earlier tests left behind
     n_threads, n_each = 8, 25
     dfs = []
+    calls: dict[tuple[int, int], int] = {}
     lock = threading.Lock()
 
-    def worker(_i: int) -> None:
-        tok = ct.scope()
+    def bump(key):
+        with lock:
+            calls[key] = calls.get(key, 0) + 1
+
+    def worker(i: int) -> None:
+        owner = object()
         mine = []
         for j in range(n_each):
-            df = spark.range(j + 1).cache()
-            ct.track(df, owner=tok)
-            mine.append(df)
-        ct.release_tracked(tok)
+            mine.append(lifecycle.materialize(spark.range(j + 1), owner=owner))
+            lifecycle.on_release(lambda k=(i, j): bump(k), owner=owner)
+        lifecycle.release(owner)
         with lock:
             dfs.extend(mine)
 
     threads = [
         threading.Thread(target=worker, args=(i,)) for i in range(n_threads)
     ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # switch threads often: widen the races
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
 
     assert len(dfs) == n_threads * n_each
     assert all(not df.is_cached for df in dfs)
-    assert ct._tracked == []
+    assert calls == {(i, j): 1 for i in range(n_threads) for j in range(n_each)}
+    assert lifecycle._pool == []
+
+
+def test_lifecycle_module_is_the_only_cache_site():
+    """One mechanism: no module of the package persists a DataFrame
+    except through lifecycle.materialize (localCheckpoint truncates
+    lineage and is not a cache, so it is exempt)."""
+    pkg = Path(lifecycle.__file__).parent
+    hits = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != Path(lifecycle.__file__)
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"\.(persist|cache)\(", line)
+    ]
+    assert hits == []

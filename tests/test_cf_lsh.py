@@ -171,14 +171,14 @@ def test_lsh_topk_runs_end_to_end(spark, clustered_ratings):
 
 def test_lsh_releases_cached_state(spark):
     """lsh_pairwise_similarity caches the rating relation (it feeds the
-    signature pass and both profile sides); release_last_state() must
-    return the session's persistent-RDD set to baseline — a library
-    entry point may not leak a session-lifetime cache per call
-    (round-5 lesson, recommenders/als.py::release_last_state).
+    signature pass and both profile sides) under the "cf_lsh" owner;
+    lifecycle.release("cf_lsh") must return the session's persistent-RDD
+    set to baseline — a library entry point may not leak a
+    session-lifetime cache per call.
 
     Uses its OWN uncached input (not the module fixture, whose cache
     would legitimately materialize mid-test and confound the set)."""
-    from recsys_spark_spark.operators.cf_lsh import release_last_state
+    from recsys_spark_spark import lifecycle
 
     def persistent_ids():
         return set(
@@ -189,16 +189,16 @@ def test_lsh_releases_cached_state(spark):
         [(u, i, float(1 + (u * i) % 5)) for u in range(30) for i in range(u % 7 + 2)],
         "user_id int, item_id int, rating double",
     )
-    release_last_state()  # drain anything earlier tests left behind
+    lifecycle.release("cf_lsh")  # drain anything earlier tests left behind
     base = persistent_ids()
     sims = lsh_pairwise_similarity(ratings, "cosine", "user")
     sims.count()  # materialize while the cache is alive
     # compare by SET DIFFERENCE, not count: under a shared session the
     # ContextCleaner may concurrently evict OTHER tests' dead caches,
-    # so absolute counts move on their own (caught in the r6 full-suite
-    # run) — only ids NEW since `base` are this call's responsibility
+    # so absolute counts move on their own — only ids NEW since `base`
+    # are this call's responsibility
     assert persistent_ids() - base  # the new cache exists...
-    release_last_state()
+    lifecycle.release("cf_lsh")
     assert persistent_ids() - base == set()  # ...and is fully released
 
 

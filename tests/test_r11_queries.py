@@ -330,44 +330,53 @@ def test_twin_switch_thresholds_ordered_by_cost_class():
 
 def test_release_query_state_clears_session_caches(spark):
     """The sweep helper must actually drop SQL-cache entries and the
-    tracked pool (the accumulated-cache OOM class it exists for)."""
-    from recsys_spark_spark.operators import cache_tracking
+    lifecycle pool (the accumulated-cache OOM class it exists for)."""
+    from recsys_spark_spark import lifecycle
     from recsys_spark_spark.plans.registry import release_query_state
 
     df = spark.range(100).cache()
     df.count()
-    cache_tracking.track(spark.range(50).cache())
+    lifecycle.materialize(spark.range(50), owner="test")
     ck = spark.range(30).localCheckpoint()  # the graph-family leak class
     ck.count()
     assert df.storageLevel.useMemory
     assert len(list(spark.sparkContext._jsc.getPersistentRDDs().keys())) > 0
     release_query_state(spark)
     assert not df.storageLevel.useMemory  # clearCache dropped it
-    assert cache_tracking._tracked == []
+    assert lifecycle._pool == []
     # localCheckpoint blocks are persistent RDDs, invisible to
     # clearCache — the drain must drop them too (a 1g JVM died on the
     # accumulation two queries after item_graph_triangles, r11)
     assert list(spark.sparkContext._jsc.getPersistentRDDs().keys()) == []
 
 
-def test_drive_all_yields_and_releases(spark):
+def test_drive_all_yields_and_releases(spark, sf_dir):
     """registry.drive_all: yields (name, rows, secs) per query and
-    leaves no tracked caches behind (the flat-memory sweep contract
-    the cert harness depends on)."""
-    from recsys_spark_spark.operators import cache_tracking
+    leaves nothing cached behind at any yield — no persistent RDD, no
+    SQL cache entry, no lifecycle pool entry (the flat-memory sweep
+    contract the cert harness depends on).  The queries cover the
+    lifecycle's owners: ANN bases (knn), ALS biases + broadcast +
+    factor RDDs, the dedup window/cut caches and the semdedup
+    relations."""
+    from recsys_spark_spark import lifecycle
     from recsys_spark_spark.plans.registry import drive_all
 
-    out = list(
-        drive_all(
-            spark,
-            "/root/testdata/sf0.001",
-            names=["events_daily", "embedding_knn_lsh"],
-        )
-    )
-    assert [n for n, _, _ in out] == ["events_daily", "embedding_knn_lsh"]
-    assert all(rows > 0 and secs > 0 for _, rows, secs in out)
-    # the LSH query tracks an internal cache; drive_all must drain it
-    assert cache_tracking._tracked == []
+    names = [
+        "events_daily",
+        "embedding_knn_lsh",
+        "als_topk",
+        "doc_dedup_cut",
+        "embedding_semdedup",
+    ]
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    seen = []
+    for name, rows, secs in drive_all(spark, sf_dir, names=names):
+        assert rows > 0 and secs > 0, name
+        assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty(), name
+        assert cache_manager.isEmpty(), name
+        assert lifecycle._pool == [], name
+        seen.append(name)
+    assert seen == names
 
 
 # --- content LSH-candidate switch (the catalog-scale path) -------------------
