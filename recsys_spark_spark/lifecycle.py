@@ -1,8 +1,24 @@
 """Cache lifecycle: the one place this package persists a DataFrame.
 
-Every cached relation goes through :func:`materialize`, which persists
-it and registers its release in one pool keyed by an owner.  The owner
-is a module name (``"als"``, ``"cf_lsh"``, ``"dedup"``,
+Every cached relation goes through one of two primitives, and each
+registers its release in one pool keyed by an owner:
+
+- :func:`materialize` persists a frame and keeps its plan.  A released
+  relation is recomputed if its plan runs again, so releasing it never
+  changes a result, only when work is done.
+- :func:`checkpoint` computes a frame now into executor-local blocks
+  (an eager ``localCheckpoint``) and returns a frame whose plan is a
+  scan of those blocks: lineage-free.  Every plan built on it
+  afterwards is analyzed and optimized over that small leaf instead of
+  the full upstream plan.  The blocks are the only copy, so a lazy plan
+  over the frame fails after its release, or after the executor that
+  holds them is lost.
+
+Use :func:`checkpoint` for a model boundary that later plans are built
+on (the neighborhood models' ranked top-k); use :func:`materialize`
+everywhere else.
+
+The owner is a module name (``"als"``, ``"cf_lsh"``, ``"dedup"``,
 ``"neighborhood"``, ...) for caches that must outlive the call that
 made them (the returned DataFrame is lazy over them), or an object
 (a model instance) that releases its own caches at the end of a fit or
@@ -11,11 +27,9 @@ on a refit.  State that is not a DataFrame joins the same pool through
 
 :func:`release` runs one owner's releases, or every release when no
 owner is given; ``plans.registry.release_query_state`` calls the bare
-form between queries.  A released relation is recomputed if its plan
-runs again, so releasing never changes a result, only when work is
-done.  Release only once every result still needed is collected,
-written or cached by the caller: a lazy plan over a destroyed
-broadcast fails instead of recomputing.
+form between queries.  Release only once every result still needed is
+collected, written or cached by the caller: a lazy plan over a released
+checkpoint or a destroyed broadcast fails instead of recomputing.
 """
 
 from __future__ import annotations
@@ -62,6 +76,17 @@ def materialize(df: DataFrame, *, owner: object, eager: bool = False) -> DataFra
     on_release(df.unpersist, owner=owner)
     if eager:
         df.count()
+    return df
+
+
+def checkpoint(df: DataFrame, *, owner: object) -> DataFrame:
+    """Compute ``df`` now (an eager ``localCheckpoint`` at
+    MEMORY_AND_DISK), register the unpersist of its blocks under
+    ``owner`` and return the lineage-free frame over them."""
+    df = df.localCheckpoint(eager=True)
+    # the checkpointed RDD is the leaf of the new frame's plan
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    on_release(lambda: rdd.unpersist(False), owner=owner)
     return df
 
 

@@ -18,8 +18,8 @@ Scala Set.take(i) — an UNORDERED prefix.  We use the properly ordered
 ranking: selected_i = the i highest-scored items.
 
 AP@k trick: each hit at rank r contributes Σ_{i=r..k} 1/i to the sum,
-so AP = (1/k)·Σ_hits c(rank) with c precomputed — a join against a
-k-row coefficient table instead of a per-user loop.
+so AP = (1/k)·Σ_hits c(rank) with c precomputed — a literal CASE over
+rank instead of a per-user loop.
 """
 
 from __future__ import annotations
@@ -129,22 +129,20 @@ def ranking_metrics(
     Users in ``recommended`` with no relevant row score 0 (X2's
     empty-relevant rule).
     """
-    coeff = spark.createDataFrame(
-        [
-            (r, ap_coefficient(k, r), dcg_coefficient(r))
-            for r in range(1, k + 1)
-        ],
-        ["rank", "c", "g"],
-    )
+    del spark  # kept for the public signature; the coefficients are literals
     # SET semantics, like the reference (and compat.RankingMetrics,
     # which materializes Python sets): duplicate (user, item) rows in
     # either input would multiply the hits join and push P@k past 1.0
     relevant = relevant.select("user_id", "item_id").distinct()
     hits = recommended.join(relevant, ["user_id", "item_id"]).select(
-        "user_id", "rank"
+        "user_id",
+        "rank",
+        _rank_case(k, lambda r: ap_coefficient(k, r)).alias("c"),
+        _rank_case(k, dcg_coefficient).alias("g"),
     )
     per_user_hits = (
-        hits.join(F.broadcast(coeff), "rank")
+        # a rank outside 1..k has no coefficient (NULL) and drops out
+        hits.where(F.col("c").isNotNull())
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_hits"),
@@ -188,6 +186,16 @@ def ranking_metrics(
             .alias("rr_at_k"),
         )
     )
+
+
+def _rank_case(k: int, coefficient):
+    """CASE rank WHEN 1 THEN coefficient(1) ... WHEN k THEN coefficient(k)
+    END, each value the same Python double literal the oracle ships;
+    NULL for any other rank."""
+    col = F.when(F.col("rank") == 1, F.lit(coefficient(1)))
+    for r in range(2, k + 1):
+        col = col.when(F.col("rank") == r, F.lit(coefficient(r)))
+    return col
 
 
 def _ndcg_col(k: int):

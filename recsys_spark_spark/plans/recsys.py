@@ -292,19 +292,6 @@ K_ITEMS = 5
 CHILD_K = 20
 MIN_CO = 5
 
-# the shared per-user rank cache must be at least as deep as the
-# deepest k requested against a shared scored DF (see _rank_items)
-from ..recommenders.neighborhood import RANK_CACHE_K as _RANK_CACHE_K  # noqa: E402
-
-# explicit raise, not assert: under python -O an assert is stripped and
-# _rank_items would silently truncate the hybrid children to the cache
-# depth instead of CHILD_K
-if CHILD_K > _RANK_CACHE_K:
-    raise ValueError(
-        f"hybrid CHILD_K ({CHILD_K}) exceeds RANK_CACHE_K "
-        f"({_RANK_CACHE_K}) — deepen the shared rank cache"
-    )
-
 #: Skew guard for the co-rated self-join (O(Σ n_i²) pair rows per hot
 #: item).  500 is a deliberate no-op at oracle/bench scale — the
 #: observed max raters-per-item is 49 at sf0.01 and 53 at sf0.1, so
@@ -432,12 +419,12 @@ def hybrid_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (HybridRecommenderTopK.scala:69-79,116-120).
 
     The two axis models are independent DAGs, so their one-off
-    materializations are submitted from two driver threads — Spark's
-    scheduler interleaves the jobs and each axis' straggler stages
-    overlap the other's compute instead of serializing behind it (the
-    blend itself then composes cache reads).  Ratings materialize
-    first so the axes race on a warm cache, not on computing the
-    shared subtree twice."""
+    checkpoints are taken from two driver threads — Spark's scheduler
+    interleaves the jobs and each axis' straggler stages overlap the
+    other's compute instead of serializing behind it (the blend itself
+    then plans over the two checkpoints).  Ratings materialize first so
+    the axes race on a warm cache, not on computing the shared subtree
+    twice."""
     import time as _time
     from concurrent.futures import ThreadPoolExecutor
 
@@ -469,24 +456,19 @@ def hybrid_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         prefilter_neighbors=PREFILTER,
         materialize=False,
     )
-    # The axis materialization target is the RANK_CACHE_K ranked cache
-    # (r14): the pre-rank scored relation is no longer cached (see
-    # _rank_items — it was 2 × ~550 MiB of storage with zero reuse),
-    # so each thread computes its axis THROUGH the rank window into
-    # the O(users·20) ranked cache the blend and the standalone
-    # children read.
-    u = _rank_items(u_scored, CHILD_K, share=True)
-    i = _rank_items(i_scored, CHILD_K, share=True)
 
-    def _timed(pair):
-        name, d = pair
+    # each thread computes its axis THROUGH the rank window into the
+    # checkpointed O(users·CHILD_K) ranked model (see _rank_items)
+    def _axis(pair):
+        name, scored = pair
         t0 = _time.perf_counter()
-        d.count()
+        ranked = _rank_items(scored, CHILD_K, share=True)
         timings[name] = round(_time.perf_counter() - t0, 3)
+        return ranked
 
     _t0 = _time.perf_counter()
     with ThreadPoolExecutor(2) as ex:
-        list(ex.map(_timed, (("axis_user", u), ("axis_item", i))))
+        u, i = ex.map(_axis, (("axis_user", u_scored), ("axis_item", i_scored)))
     # the per-axis walls overlap; "axes_wall" is the actual elapsed span
     timings["axes_wall"] = round(_time.perf_counter() - _t0, 3)
     last_hybrid_timings = timings

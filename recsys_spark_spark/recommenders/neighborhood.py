@@ -54,29 +54,9 @@ SIM_ROUND = 7
 SCORE_ROUND = 6
 
 
-def _materialize(model: DataFrame) -> DataFrame:
-    """Eagerly compute a cached neighbor model (cheap: O(entities·N) rows).
-
-    ``cache()`` only *registers* the plan — blocks become reusable when
-    first computed.  A single action that composes TWO models (the
-    hybrid blend) would otherwise execute both quadratic pair joins
-    from scratch inside one job with zero reuse (measured 58-98 s vs
-    ~9+12 s for the children alone).  Forcing materialization here
-    makes every subsequent action — the other hybrid child, standalone
-    top-K, ranking eval — a cache read."""
-    model.count()
-    return model
-
-
 def _user_means(ratings: DataFrame) -> DataFrame:
     """Per-user mean over *rated* entries (UserBasedRating...scala:41-45)."""
     return ratings.groupBy("user_id").agg(F.avg("rating").alias("mean_r"))
-
-
-#: depth of the shared per-user rank cache — must cover the deepest
-#: k any consumer of a shared scored DF requests (the hybrid blend's
-#: CHILD_K; plans/recsys.py asserts CHILD_K <= RANK_CACHE_K)
-RANK_CACHE_K = 20
 
 
 def _rank_items(
@@ -84,37 +64,31 @@ def _rank_items(
 ) -> DataFrame:
     """Per-user top-k by (score desc, item_id asc).
 
-    ``share=True`` (the shared-model paths): the window runs ONCE at
-    RANK_CACHE_K depth and is cached by plan identity, so the hybrid
-    blend (k=20) and the standalone top-K children (k=5) all read the
-    same O(users·20)-row ranked artifact instead of each re-sorting
-    the full multi-million-row scored relation — the rank filter is
-    then a cheap cache-read ``rank <= k``.  row_number over the same
-    ordering is prefix-stable, so filtering the deeper ranking is
-    exactly the shallower one.
+    ``share=True`` (the shared-model paths): the O(users·k)-row ranked
+    relation is checkpointed (``lifecycle.checkpoint``, owner
+    ``"neighborhood"``) as the axis' model boundary.  The checkpoint is
+    eager, so one action composing two models (the hybrid blend) never
+    runs both quadratic axes inside one job.  Everything built on the
+    axis afterwards — the blend, the ranking metrics, a caller's own
+    persist — plans over a scan of the checkpoint instead of the full
+    axis lineage (thousands of plan lines per axis under a cache, which
+    keeps it), so the driver no longer re-analyzes the axis for every
+    later stage.
 
-    This ranked relation is the ONLY cache level on the scored path
-    since r14: the pre-rank ``scored`` relation used to be cached too
-    (2 × ~550 MiB storage at sf0.1 for the two hybrid axes), but every
-    consumer reads it exactly once — through this window — so the
-    extra cache bought no reuse and its storage squeezed execution
-    memory enough to push the axis sorts into multi-GB spills on a
-    contended host (guide §5: cache only what is reused; measured in
-    OPTIMIZATION_r14.md)."""
+    The ranked relation is the only materialized level on the scored
+    path: the pre-rank ``scored`` relation is read exactly once,
+    through this window, so caching it bought no reuse, and its
+    storage pushed the axis sorts into multi-GB spills on a contended
+    host (measured in OPTIMIZATION_r14.md)."""
     w = Window.partitionBy("user_id").orderBy(F.desc("score"), F.asc("item_id"))
-    if share and k_items <= RANK_CACHE_K:
-        ranked = lifecycle.materialize(
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= RANK_CACHE_K)
-            .select("user_id", "item_id", "score", "rank"),
-            owner="neighborhood",
-        )
-        return ranked.where(F.col("rank") <= k_items)
-    return (
+    ranked = (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k_items)
         .select("user_id", "item_id", "score", "rank")
     )
+    if share:
+        return lifecycle.checkpoint(ranked, owner="neighborhood")
+    return ranked
 
 
 def _axis_sims(
@@ -163,12 +137,10 @@ def user_based_scored(
 ) -> DataFrame:
     """Pre-rank scored candidates ``(user_id, item_id, score)`` for
     user k-NN — everything in :func:`user_based_topk` except the final
-    per-user rank filter.  NOT cached (r14): sharing happens one level
-    up, at the RANK_CACHE_K ranked relation (see _rank_items) — every
-    consumer of this relation reads it exactly once, through that
-    window.  ``materialize`` is kept for API compatibility; the eager
-    materialization now happens on the ranked cache in the *_topk
-    wrappers."""
+    per-user rank filter.  NOT materialized: every consumer reads it
+    exactly once, through the rank window of _rank_items, whose output
+    is the checkpointed model.  ``materialize`` is kept for API
+    compatibility; the *_topk wrappers act on it."""
     sims = _axis_sims(
         ratings,
         kernel=kernel,
@@ -275,7 +247,7 @@ def user_based_scored(
             ).alias("score"),
         )
     )
-    del materialize  # see docstring: materialization moved to the ranked cache
+    del materialize  # see docstring: the *_topk wrappers act on it
     return scored
 
 
@@ -302,8 +274,9 @@ def user_based_topk(
     that keeps this plan feasible at 100 TB.  Exact reference semantics
     = ``prefilter_neighbors=None``.
 
-    ``materialize=False`` builds the plan without running any eager
-    Spark job (see _share_scored).
+    With ``prefilter_neighbors`` set, the ranked top-k is checkpointed
+    as the model (see _rank_items); ``materialize=False`` skips that
+    and builds the plan without running any Spark job.
 
     ``use_lsh_candidates=True`` swaps the co-rated pair self-join for
     sign-LSH candidate generation with exact rerank — the
@@ -319,11 +292,8 @@ def user_based_topk(
         materialize=materialize,
         use_lsh_candidates=use_lsh_candidates,
     )
-    share = prefilter_neighbors is not None
-    out = _rank_items(scored, k_items, share=share)
-    if share and materialize:
-        _materialize(out)  # fills the RANK_CACHE_K ranked cache
-    return out
+    share = prefilter_neighbors is not None and materialize
+    return _rank_items(scored, k_items, share=share)
 
 
 def item_based_scored(
@@ -337,7 +307,7 @@ def item_based_scored(
     use_lsh_candidates: bool = False,
 ) -> DataFrame:
     """Pre-rank scored candidates for item k-NN — :func:`item_based_topk`
-    minus the final rank filter (see _share_scored)."""
+    minus the final rank filter (see user_based_scored)."""
     sims = _axis_sims(
         ratings,
         kernel=kernel,
@@ -384,11 +354,8 @@ def item_based_topk(
         materialize=materialize,
         use_lsh_candidates=use_lsh_candidates,
     )
-    share = prefilter_neighbors is not None
-    out = _rank_items(scored, k_items, share=share)
-    if share and materialize:
-        _materialize(out)  # fills the RANK_CACHE_K ranked cache
-    return out
+    share = prefilter_neighbors is not None and materialize
+    return _rank_items(scored, k_items, share=share)
 
 
 def scored_from_item_sims(
@@ -400,8 +367,8 @@ def scored_from_item_sims(
 ) -> DataFrame:
     """Pre-rank scored candidates ``(user_id, item_id, score)`` from a
     directed item-similarity DataFrame — :func:`topk_from_item_sims`
-    minus the final per-user rank filter.  NOT cached since r14 (see
-    user_based_scored: sharing lives at the ranked cache)."""
+    minus the final per-user rank filter.  NOT materialized (see
+    user_based_scored: the ranked model is the checkpoint)."""
     if prefilter_neighbors is not None:
         # the classic item-CF model shape: each item keeps its N most
         # similar items; bounds the candidate join at scale
@@ -456,7 +423,7 @@ def scored_from_item_sims(
             qround(F.col("num") / F.col("den"), SCORE_ROUND).alias("score"),
         )
     )
-    del materialize  # see user_based_scored: moved to the ranked cache
+    del materialize  # see user_based_scored: the *_topk wrappers act on it
     return scored
 
 
@@ -479,11 +446,8 @@ def topk_from_item_sims(
     scored = scored_from_item_sims(
         sims, ratings, k_neighbors, prefilter_neighbors, materialize
     )
-    share = prefilter_neighbors is not None
-    out = _rank_items(scored, k_items, share=share)
-    if share and materialize:
-        _materialize(out)  # fills the RANK_CACHE_K ranked cache
-    return out
+    share = prefilter_neighbors is not None and materialize
+    return _rank_items(scored, k_items, share=share)
 
 
 def predict_user_based(

@@ -90,6 +90,14 @@ def get_spark(
         # testdata events.parquet carries TIMESTAMP(NANOS) which Spark
         # rejects by default; read as long nanos, converted in sources
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # PySpark's call-site capture for error messages: with it on,
+        # every F.* / Column call costs ~5 extra py4j round-trips
+        # (active-session lookup, conf.get, PySparkCurrentOrigin
+        # set/clear) plus a Python stack walk — 123 such calls in one
+        # CF axis build, inside 2,015 round-trips with 0.70 s blocked
+        # on the socket.  Trade-off: Spark error messages lose the
+        # Python call-site fragment.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

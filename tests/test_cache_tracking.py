@@ -79,6 +79,29 @@ def test_scoped_release_only_evicts_own_caches(spark):
     assert _persistent_ids(spark) - base_ids == set()
 
 
+def test_checkpoint_releases_with_its_owner(spark):
+    """lifecycle.checkpoint: the lineage-free frame holds the source's
+    rows, another owner's release leaves it in place, and its own
+    owner's release unpersists its blocks and empties the pool."""
+    lifecycle.release()
+    base_ids = _persistent_ids(spark)
+
+    src = spark.range(50).select("id", (F.col("id") * 3).alias("y"))
+    ck = lifecycle.checkpoint(src, owner="ck")
+    assert sorted(ck.collect()) == sorted(src.collect())
+    ck_ids = _persistent_ids(spark) - base_ids
+    assert len(ck_ids) == 1
+
+    lifecycle.materialize(spark.range(5), owner="other", eager=True)
+    lifecycle.release("other")  # another owner: the checkpoint stays
+    assert _persistent_ids(spark) - base_ids == ck_ids
+    assert sorted(ck.collect()) == sorted(src.collect())
+
+    lifecycle.release("ck")
+    assert _persistent_ids(spark) - base_ids == set()
+    assert lifecycle._pool == []
+
+
 def test_track_release_thread_safe(spark):
     """The pool mutation is lock-guarded, so concurrent registration
     and release from threads sharing the session can neither lose an

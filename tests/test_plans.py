@@ -198,15 +198,16 @@ def test_merged_dedup_docs_single_scan(spark, sf_dir, queries):
 
 
 def test_child_topk_plans_read_scored_cache(spark, sf_dir, queries):
-    """Round-4 perf contract, r14 form: the standalone CF children read
-    a CACHED shared relation (since r14 the RANK_CACHE_K ranked cache,
-    shared with hybrid via plan identity; before r14 also the pre-rank
-    scored DF, dropped because it had zero reuse and 2 x ~550 MiB of
-    storage) — losing the cache would silently re-run the whole
-    candidate subtree per query (8-9 s apiece at sf0.1)."""
+    """Round-4 perf contract, checkpoint form: the standalone CF
+    children read the checkpointed ranked model (a scan of its blocks)
+    and nothing else — no window and no join in the plan,
+    so the candidate subtree is never re-run per query (8-9 s apiece at
+    sf0.1) and later plans stay small."""
     for name in ("user_topk_cosine", "item_topk_cosine"):
         p = plan_of(queries[name].fn(spark, sf_dir))
-        assert "InMemoryTableScan" in p, f"{name}: ranked cache not in plan"
+        assert "Scan ExistingRDD" in p, f"{name}: ranked checkpoint not in plan"
+        assert "Window" not in p, f"{name}: rank window re-run"
+        assert "Join" not in p, f"{name}: candidate subtree re-run"
 
 
 def test_bench_set_is_stable():
