@@ -127,7 +127,6 @@ class UserBasedTopKRecommender(_BaseTopK):
             self._ratings,
             k_neighbors=self.k_users,
             kernel=self.similarity,
-            materialize=False,
         )
 
 
@@ -160,7 +159,6 @@ class ItemBasedTopKRecommender(_BaseTopK):
             self._ratings,
             k_neighbors=self.k_similar_items,
             kernel=self.similarity,
-            materialize=False,
         )
 
 
@@ -203,9 +201,7 @@ class ContentBasedTopKRecommender(_BaseTopK):
         if self._features is None:
             raise RuntimeError("set_features() first")
         sims = content_similarities(self._features, self.similarity)
-        return scored_from_item_sims(
-            sims, self._ratings, self.k_similar_items, materialize=False
-        )
+        return scored_from_item_sims(sims, self._ratings, self.k_similar_items)
 
 
 class HybridRecommenderTopK(_BaseTopK):

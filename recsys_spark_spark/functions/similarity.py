@@ -98,6 +98,24 @@ def with_kernel_column(
     return df.withColumn("sim", sim)
 
 
+def _drop_hot_keys(r: DataFrame, max_raters_per_item: int | None) -> DataFrame:
+    """Drop the ``(ent, key, r)`` rows of join keys with more than
+    ``max_raters_per_item`` rows (the skew guard for the quadratic
+    self-join); no-op when the cap is None.  Hot keys are by
+    construction FEW (each contributes n² pair rows), so a broadcast
+    anti-join beats a full count-join: the fact table streams once
+    against a tiny in-memory set."""
+    if max_raters_per_item is None:
+        return r
+    hot = (
+        r.groupBy("key")
+        .agg(F.count("*").alias("_kn"))
+        .where(F.col("_kn") > max_raters_per_item)
+        .select("key")
+    )
+    return r.join(F.broadcast(hot), "key", "left_anti")
+
+
 def pairwise_similarity(
     ratings: DataFrame,
     kernel: str | tuple[str, ...] = "cosine",
@@ -144,17 +162,7 @@ def pairwise_similarity(
         F.col(ent).alias("ent"), F.col(key).alias("key"), F.col("rating").alias("r")
     )
 
-    if max_raters_per_item is not None:
-        # hot keys are by construction FEW (each contributes n² pair
-        # rows) → broadcast anti-join beats a full count-join: the
-        # fact table streams once against a tiny in-memory set
-        hot = (
-            r.groupBy("key")
-            .agg(F.count("*").alias("_kn"))
-            .where(F.col("_kn") > max_raters_per_item)
-            .select("key")
-        )
-        r = r.join(F.broadcast(hot), "key", "left_anti")
+    r = _drop_hot_keys(r, max_raters_per_item)
 
     # per-entity scalar stats — one shuffle on ent, reused on both sides
     stats = r.groupBy("ent").agg(
@@ -314,14 +322,7 @@ def pairwise_similarity_for_pairs(
     r = ratings.select(
         F.col(ent).alias("ent"), F.col(key).alias("key"), F.col("rating").alias("r")
     )
-    if max_raters_per_item is not None:
-        hot = (
-            r.groupBy("key")
-            .agg(F.count("*").alias("_kn"))
-            .where(F.col("_kn") > max_raters_per_item)
-            .select("key")
-        )
-        r = r.join(F.broadcast(hot), "key", "left_anti")
+    r = _drop_hot_keys(r, max_raters_per_item)
 
     stats = r.groupBy("ent").agg(
         F.sum("r").alias("sum_r"),

@@ -14,16 +14,18 @@ registers its release in one pool keyed by an owner:
   over the frame fails after its release, or after the executor that
   holds them is lost.
 
-Use :func:`checkpoint` for a model boundary that later plans are built
-on (the neighborhood models' ranked top-k); use :func:`materialize`
-everywhere else.
+Use :func:`checkpoint` for a leaf that later plans are built on (the
+neighborhood models' ranked top-k, a CF axis' ratings); use
+:func:`materialize` everywhere else.
 
 The owner is a module name (``"als"``, ``"cf_lsh"``, ``"dedup"``,
 ``"neighborhood"``, ...) for caches that must outlive the call that
-made them (the returned DataFrame is lazy over them), or an object
-(a model instance) that releases its own caches at the end of a fit or
-on a refit.  State that is not a DataFrame joins the same pool through
-:func:`on_release` (a broadcast's ``destroy``, MLlib's factor RDDs).
+made them (the returned DataFrame is lazy over them), or an object: a
+model instance that releases its own caches at the end of a fit or on
+a refit, or a fresh ``object()`` for state that lives only inside one
+call, which the call releases before it returns.  State that is not a
+DataFrame joins the same pool through :func:`on_release` (a
+broadcast's ``destroy``, MLlib's factor RDDs).
 
 :func:`release` runs one owner's releases, or every release when no
 owner is given; ``plans.registry.release_query_state`` calls the bare

@@ -36,8 +36,11 @@ from __future__ import annotations
 
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .. import lifecycle
 
 #: convergence backstop: pointer-jumping converges in O(log diameter)
 #: PROPAGATION rounds, so 25 covers diameters beyond 2^25 — any real
@@ -103,14 +106,17 @@ def connected_components(
     and ``rounds``."""
     t0 = time.perf_counter()
     # undirected: one generator explode, not a union of two plans of
-    # the (possibly expensive) edge subtree.  localCheckpoint, NOT
+    # the (possibly expensive) edge subtree.  A checkpoint, NOT a
     # cache (r15): the loop references this relation in EVERY round's
     # plan, and a cache keeps the full upstream logical plan (e.g. the
     # whole MinHash verify pipeline) inside each round — Catalyst then
     # re-analyzes/re-optimizes that subtree for every localCheckpoint
     # job of the loop, measured as ~0.1-0.5 s driver gaps between the
-    # loop's micro-jobs.  The checkpoint truncates lineage once.
-    und = (
+    # loop's micro-jobs.  The checkpoint truncates lineage once; it is
+    # owned by this call and released before returning, since both
+    # paths return frames that no longer read it.
+    owner = object()
+    und = lifecycle.checkpoint(
         edges.select(
             F.explode(
                 F.array(
@@ -120,8 +126,8 @@ def connected_components(
             ).alias("_e")
         )
         .select("_e.*")
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        owner=owner,
     )
     if timings_out is not None:
         timings_out["edges_labels_init"] = round(time.perf_counter() - t0, 3)
@@ -133,18 +139,20 @@ def connected_components(
     n_und = und.count()
     if n_und <= LOCAL_EDGE_BUDGET:
         rows = [(r["u"], r["v"]) for r in und.collect()]
+        lifecycle.release(owner)
         ids = sorted({u for u, _ in rows})
         comp = _union_find(rows, ids)
         id_type = edges.schema[src].dataType
-        spark = edges.sparkSession
         from pyspark.sql.types import StructField, StructType
 
         schema = StructType(
             [StructField("id", id_type), StructField("comp", id_type)]
         )
-        out = spark.createDataFrame(
-            [(i, comp[i]) for i in ids], schema
-        )
+        # from pandas (Arrow under the engine's session): a JVM-side
+        # relation, so consumer stages start no Python workers, unlike
+        # the pickled Python RDD a list of tuples becomes
+        pdf = pd.DataFrame({"id": ids, "comp": [comp[i] for i in ids]})
+        out = edges.sparkSession.createDataFrame(pdf, schema)
         if timings_out is not None:
             timings_out["iterate"] = round(time.perf_counter() - t_loop, 3)
             timings_out["rounds"] = 0
@@ -223,6 +231,7 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_rounds} rounds"
         )
+    lifecycle.release(owner)
     if timings_out is not None:
         timings_out["iterate"] = round(time.perf_counter() - t_loop, 3)
         timings_out["rounds"] = rounds

@@ -162,8 +162,10 @@ def histogram_quantiles(
         (F.sum("n").over(wc) - F.col("n")).alias("cum_prev"),
     )
     tot = hist.groupBy(*key_cols).agg(F.sum("n").alias("n_total"))
-    spark = hist.sparkSession
-    qdf = spark.createDataFrame([(float(q),) for q in qs], "q double")
+    # the grid as a one-row literal explode: no Python RDD to ship
+    qdf = hist.sparkSession.range(1).select(
+        F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q")
+    )
     spec = tot.crossJoin(F.broadcast(qdf)).withColumn(
         "rq", F.col("q") * F.col("n_total")
     )

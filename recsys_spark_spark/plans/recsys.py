@@ -422,40 +422,21 @@ def hybrid_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoints are taken from two driver threads — Spark's scheduler
     interleaves the jobs and each axis' straggler stages overlap the
     other's compute instead of serializing behind it (the blend itself
-    then plans over the two checkpoints).  Ratings materialize first so
-    the axes race on a warm cache, not on computing the shared subtree
-    twice."""
+    then plans over the two checkpoints).  Both axes read one
+    lineage-free ratings leaf (``ratings_leaf``), checkpointed first
+    and released once both ranked models are checkpointed."""
     import time as _time
     from concurrent.futures import ThreadPoolExecutor
 
     from ..recommenders.neighborhood import (
         _rank_items,
         item_based_scored,
+        ratings_leaf,
         user_based_scored,
     )
 
     global last_hybrid_timings
     timings: dict[str, float] = {}
-    _t0 = _time.perf_counter()
-    ratings = _cached_ratings(spark, sf_dir)
-    ratings.count()
-    timings["ratings"] = round(_time.perf_counter() - _t0, 3)
-    u_scored = user_based_scored(
-        ratings,
-        K_NEIGHBORS,
-        "cosine",
-        max_raters_per_item=MAX_RATERS_PER_ITEM,
-        prefilter_neighbors=PREFILTER,
-        materialize=False,
-    )
-    i_scored = item_based_scored(
-        ratings,
-        K_NEIGHBORS,
-        "cosine",
-        max_raters_per_item=MAX_RATERS_PER_ITEM,
-        prefilter_neighbors=PREFILTER,
-        materialize=False,
-    )
 
     # each thread computes its axis THROUGH the rank window into the
     # checkpointed O(users·CHILD_K) ranked model (see _rank_items)
@@ -467,8 +448,25 @@ def hybrid_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return ranked
 
     _t0 = _time.perf_counter()
-    with ThreadPoolExecutor(2) as ex:
-        u, i = ex.map(_axis, (("axis_user", u_scored), ("axis_item", i_scored)))
+    with ratings_leaf(_cached_ratings(spark, sf_dir)) as ratings:
+        timings["ratings"] = round(_time.perf_counter() - _t0, 3)
+        u_scored = user_based_scored(
+            ratings,
+            K_NEIGHBORS,
+            "cosine",
+            max_raters_per_item=MAX_RATERS_PER_ITEM,
+            prefilter_neighbors=PREFILTER,
+        )
+        i_scored = item_based_scored(
+            ratings,
+            K_NEIGHBORS,
+            "cosine",
+            max_raters_per_item=MAX_RATERS_PER_ITEM,
+            prefilter_neighbors=PREFILTER,
+        )
+        _t0 = _time.perf_counter()
+        with ThreadPoolExecutor(2) as ex:
+            u, i = ex.map(_axis, (("axis_user", u_scored), ("axis_item", i_scored)))
     # the per-axis walls overlap; "axes_wall" is the actual elapsed span
     timings["axes_wall"] = round(_time.perf_counter() - _t0, 3)
     last_hybrid_timings = timings

@@ -31,6 +31,14 @@ BEFORE ranking so that rank decisions are stable across engines —
 last-ulp float noise must not flip a top-k boundary when results are
 hash-compared against a SQL oracle.
 
+Shared-model path (``prefilter_neighbors`` set and ``materialize``):
+an axis build reads ratings from a lineage-free leaf (``ratings_leaf``,
+a per-call ``lifecycle.checkpoint`` of ``(user_id, item_id, rating)``)
+and ends in a checkpoint of its ranked top-k (``_rank_items``).  The
+leaf is released as soon as the ranked model is checkpointed, since the
+model no longer reads it; what a call leaves behind is the ranked model
+alone, under owner ``"neighborhood"``.
+
 Scale notes: every stage is a key-partitioned shuffle Catalyst can
 plan; the only quadratic term is the co-rated pair join, capped via
 ``max_raters_per_item`` (hot-item cutoff) or replaced by LSH
@@ -38,6 +46,9 @@ plan; the only quadratic term is the co-rated pair join, capped via
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -59,6 +70,37 @@ def _user_means(ratings: DataFrame) -> DataFrame:
     return ratings.groupBy("user_id").agg(F.avg("rating").alias("mean_r"))
 
 
+@contextmanager
+def ratings_leaf(ratings: DataFrame, share: bool = True) -> Iterator[DataFrame]:
+    """The ratings an axis build reads: with ``share``, a lineage-free
+    ``(user_id, item_id, rating)`` checkpoint owned by this call and
+    released when the block exits; otherwise ``ratings`` itself (no
+    Spark job runs).
+
+    Every stage of an axis reads ratings (sims, hot-key guard, stats,
+    means, candidate joins, seen-set anti-join).  Over the leaf:
+
+    - AQE reuses an exchange that two of those stages share
+      (``ReusedExchange``); over a cached relation it never does;
+    - the upstream plan, e.g. a CV split with its fold literal, runs in
+      the one checkpoint job, so the generated classes of every later
+      stage are identical across folds and hit the codegen cache.
+
+    The block must end with every result it needs checkpointed or
+    collected (``_rank_items(share=True)``): plans over the leaf fail
+    after its release."""
+    if not share:
+        yield ratings
+        return
+    owner = object()
+    try:
+        yield lifecycle.checkpoint(
+            ratings.select("user_id", "item_id", "rating"), owner=owner
+        )
+    finally:
+        lifecycle.release(owner)
+
+
 def _rank_items(
     scored: DataFrame, k_items: int, share: bool = False
 ) -> DataFrame:
@@ -73,7 +115,9 @@ def _rank_items(
     persist — plans over a scan of the checkpoint instead of the full
     axis lineage (thousands of plan lines per axis under a cache, which
     keeps it), so the driver no longer re-analyzes the axis for every
-    later stage.
+    later stage.  Once it is taken, the axis' ratings leaf (see
+    ``ratings_leaf``) has no reader left, and the caller's ``with``
+    block releases it.
 
     The ranked relation is the only materialized level on the scored
     path: the pre-rank ``scored`` relation is read exactly once,
@@ -132,15 +176,13 @@ def user_based_scored(
     n_cols: int | None = None,
     max_raters_per_item: int | None = None,
     prefilter_neighbors: int | None = None,
-    materialize: bool = True,
     use_lsh_candidates: bool = False,
 ) -> DataFrame:
     """Pre-rank scored candidates ``(user_id, item_id, score)`` for
     user k-NN — everything in :func:`user_based_topk` except the final
     per-user rank filter.  NOT materialized: every consumer reads it
     exactly once, through the rank window of _rank_items, whose output
-    is the checkpointed model.  ``materialize`` is kept for API
-    compatibility; the *_topk wrappers act on it."""
+    is the checkpointed model."""
     sims = _axis_sims(
         ratings,
         kernel=kernel,
@@ -157,16 +199,13 @@ def user_based_scored(
     if prefilter_neighbors is not None:
         wp = Window.partitionBy("user_id").orderBy(F.desc("sim"), F.asc("neighbor"))
         # the pruned neighbor list IS the fitted k-NN model —
-        # O(users·N) rows.  The cache registers by analyzed plan, so
-        # every query in the session that builds the same model
-        # (standalone top-K, the hybrid child, ranking eval) reuses
-        # one materialization of the quadratic pair join instead of
-        # re-running it
-        sims = lifecycle.materialize(
+        # O(users·N) rows, read once by the candidate join below.  Not
+        # cached: on the shared path it is built over a per-call
+        # ratings leaf, so no later plan can match it
+        sims = (
             sims.withColumn("prn", F.row_number().over(wp))
             .where(F.col("prn") <= prefilter_neighbors)
-            .drop("prn"),
-            owner="neighborhood",
+            .drop("prn")
         )
 
     neigh_r = ratings.select(
@@ -247,7 +286,6 @@ def user_based_scored(
             ).alias("score"),
         )
     )
-    del materialize  # see docstring: the *_topk wrappers act on it
     return scored
 
 
@@ -282,18 +320,18 @@ def user_based_topk(
     sign-LSH candidate generation with exact rerank — the
     extreme-scale switch (see _axis_sims / operators/cf_lsh.py).
     """
-    scored = user_based_scored(
-        ratings,
-        k_neighbors=k_neighbors,
-        kernel=kernel,
-        n_cols=n_cols,
-        max_raters_per_item=max_raters_per_item,
-        prefilter_neighbors=prefilter_neighbors,
-        materialize=materialize,
-        use_lsh_candidates=use_lsh_candidates,
-    )
     share = prefilter_neighbors is not None and materialize
-    return _rank_items(scored, k_items, share=share)
+    with ratings_leaf(ratings, share) as leaf:
+        scored = user_based_scored(
+            leaf,
+            k_neighbors=k_neighbors,
+            kernel=kernel,
+            n_cols=n_cols,
+            max_raters_per_item=max_raters_per_item,
+            prefilter_neighbors=prefilter_neighbors,
+            use_lsh_candidates=use_lsh_candidates,
+        )
+        return _rank_items(scored, k_items, share=share)
 
 
 def item_based_scored(
@@ -303,7 +341,6 @@ def item_based_scored(
     n_cols: int | None = None,
     max_raters_per_item: int | None = None,
     prefilter_neighbors: int | None = None,
-    materialize: bool = True,
     use_lsh_candidates: bool = False,
 ) -> DataFrame:
     """Pre-rank scored candidates for item k-NN — :func:`item_based_topk`
@@ -320,9 +357,7 @@ def item_based_scored(
         F.col("item_b").alias("neighbor_item"),
         qround("sim", SIM_ROUND).alias("sim"),
     )
-    return scored_from_item_sims(
-        sims, ratings, k_neighbors, prefilter_neighbors, materialize
-    )
+    return scored_from_item_sims(sims, ratings, k_neighbors, prefilter_neighbors)
 
 
 def item_based_topk(
@@ -344,18 +379,18 @@ def item_based_topk(
 
     ``use_lsh_candidates``: see :func:`user_based_topk`.
     """
-    scored = item_based_scored(
-        ratings,
-        k_neighbors=k_neighbors,
-        kernel=kernel,
-        n_cols=n_cols,
-        max_raters_per_item=max_raters_per_item,
-        prefilter_neighbors=prefilter_neighbors,
-        materialize=materialize,
-        use_lsh_candidates=use_lsh_candidates,
-    )
     share = prefilter_neighbors is not None and materialize
-    return _rank_items(scored, k_items, share=share)
+    with ratings_leaf(ratings, share) as leaf:
+        scored = item_based_scored(
+            leaf,
+            k_neighbors=k_neighbors,
+            kernel=kernel,
+            n_cols=n_cols,
+            max_raters_per_item=max_raters_per_item,
+            prefilter_neighbors=prefilter_neighbors,
+            use_lsh_candidates=use_lsh_candidates,
+        )
+        return _rank_items(scored, k_items, share=share)
 
 
 def scored_from_item_sims(
@@ -363,7 +398,6 @@ def scored_from_item_sims(
     ratings: DataFrame,
     k_neighbors: int,
     prefilter_neighbors: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Pre-rank scored candidates ``(user_id, item_id, score)`` from a
     directed item-similarity DataFrame — :func:`topk_from_item_sims`
@@ -371,19 +405,15 @@ def scored_from_item_sims(
     user_based_scored: the ranked model is the checkpoint)."""
     if prefilter_neighbors is not None:
         # the classic item-CF model shape: each item keeps its N most
-        # similar items; bounds the candidate join at scale
+        # similar items; bounds the candidate join at scale.  Not
+        # cached, like the user-axis model (see user_based_scored)
         wp = Window.partitionBy("item_id").orderBy(
             F.desc("sim"), F.asc("neighbor_item")
         )
-        # cached for the same plan-identity reuse as the user-axis
-        # model (see user_based_scored): item top-K, the hybrid
-        # child, and content-based top-K each rebuild this exact
-        # O(items·N)-row model
-        sims = lifecycle.materialize(
+        sims = (
             sims.withColumn("prn", F.row_number().over(wp))
             .where(F.col("prn") <= prefilter_neighbors)
-            .drop("prn"),
-            owner="neighborhood",
+            .drop("prn")
         )
 
     user_r = ratings.select(
@@ -423,7 +453,6 @@ def scored_from_item_sims(
             qround(F.col("num") / F.col("den"), SCORE_ROUND).alias("score"),
         )
     )
-    del materialize  # see user_based_scored: the *_topk wrappers act on it
     return scored
 
 
@@ -443,11 +472,10 @@ def topk_from_item_sims(
     with identical scoring (ItemBasedTopKRecommender.scala:62-70,
     ContentBasedTopKRecommender.scala:71-79: Σ sim·r / Σ|sim|).
     """
-    scored = scored_from_item_sims(
-        sims, ratings, k_neighbors, prefilter_neighbors, materialize
-    )
     share = prefilter_neighbors is not None and materialize
-    return _rank_items(scored, k_items, share=share)
+    with ratings_leaf(ratings, share) as leaf:
+        scored = scored_from_item_sims(sims, leaf, k_neighbors, prefilter_neighbors)
+        return _rank_items(scored, k_items, share=share)
 
 
 def predict_user_based(

@@ -98,6 +98,23 @@ def get_spark(
         # on the socket.  Trade-off: Spark error messages lose the
         # Python call-site fragment.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated-class cache (static; default 100 entries).  One CF
+        # fold (split, two axes, hybrid, ranking metrics) compiles ~145
+        # distinct generated classes, so at 100 the LRU evicts every
+        # class before its next use: a warm fold of ~3.5k ratings made
+        # 154-159 Janino compilations at 18-21 ms each, ~3 s of a 6-8 s
+        # fold, even when the identical fold ran again.  2000 is >10x a
+        # fold's working set; classes average ~2.5 KB of bytecode, so a
+        # full cache holds ~5 MB.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # The cache is keyed by generated source, and by default the
+        # class name carries the codegen stage id, which AQE assigns as
+        # it re-plans after each stage finishes, so the ids follow which
+        # stage finished first: one plan run twice got different ids
+        # and recompiled 4-10 classes per CF axis.  Without the id the
+        # second build of an axis compiles 0.  Trade-off: JVM stack
+        # traces name the class GeneratedIterator, without the stage.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

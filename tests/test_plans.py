@@ -334,3 +334,110 @@ def test_cooccurrence_lift_distributed_topn(spark, sf_dir, queries):
     p = plan_of(queries["item_cooccurrence_lift"].fn(spark, sf_dir))
     assert "TakeOrderedAndProject" in p
     assert "CartesianProduct" not in p
+
+
+def _compiled(spark) -> int:
+    """Classes Janino has compiled in this JVM so far (whole-stage and
+    expression codegen alike)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _grid_ratings(spark):
+    """60 users x 10 distinct items each over 41 items, ratings 1-5,
+    from spark.range (no Python RDD)."""
+    from pyspark.sql import functions as F
+
+    j = F.col("id") % 10
+    user = (F.col("id") / 10).cast("long")
+    return spark.range(600).select(
+        user.alias("user_id"),
+        ((user * 7 + j * 3) % 41).alias("item_id"),
+        (1 + (user + j) % 5).cast("double").alias("rating"),
+    )
+
+
+def test_cf_axis_rebuild_compiles_nothing(spark):
+    """The session's generated-class cache holds a CF axis' working
+    set: building the same shared-path axis again compiles 0 classes
+    (at the default 100-entry cache a warm CV fold recompiled ~155)."""
+    from recsys_spark_spark import lifecycle
+    from recsys_spark_spark.recommenders.neighborhood import user_based_topk
+
+    knn = dict(k_neighbors=6, k_items=4, prefilter_neighbors=12,
+               max_raters_per_item=90)
+    ratings = _grid_ratings(spark)
+    first = user_based_topk(ratings, **knn).collect()
+    before = _compiled(spark)
+    second = user_based_topk(ratings, **knn).collect()
+    assert _compiled(spark) - before == 0
+    assert sorted(first) == sorted(second)
+    lifecycle.release("neighborhood")
+
+
+def test_cf_axis_classes_shared_across_folds(spark):
+    """The CV split's fold literal stays in the ratings-leaf checkpoint
+    job, so every later stage of the fold-0 axis reuses the classes the
+    fold-4 axis compiled: under a quarter of the cold build's count."""
+    from recsys_spark_spark import lifecycle
+    from recsys_spark_spark.metrics.evaluation import split_ratings
+    from recsys_spark_spark.recommenders.neighborhood import item_based_topk
+
+    knn = dict(k_neighbors=7, k_items=3, prefilter_neighbors=11,
+               max_raters_per_item=97)
+    ratings = _grid_ratings(spark)
+    counts = []
+    for fold in (4, 0):
+        train, _ = split_ratings(ratings, fold=fold)
+        before = _compiled(spark)
+        item_based_topk(train, **knn).collect()
+        counts.append(_compiled(spark) - before)
+    cold, warm = counts
+    assert cold > 0 and warm * 4 < cold, counts
+    lifecycle.release("neighborhood")
+
+
+def test_cf_axis_reads_a_ratings_leaf(spark):
+    """Each axis builds on a lineage-free ratings leaf, not on the
+    caller's cached relation: the executed axis plan scans the leaf
+    (Scan ExistingRDD), has no InMemoryTableScan, and AQE reuses at
+    least one exchange between the axis' ratings-derived stages (it
+    never does over a cached leaf).  The leaf is released with the
+    block."""
+    from recsys_spark_spark import lifecycle
+    from recsys_spark_spark.recommenders.neighborhood import (
+        _rank_items,
+        ratings_leaf,
+        user_based_scored,
+    )
+
+    owner = object()
+    cached = lifecycle.materialize(_grid_ratings(spark), owner=owner, eager=True)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    base = len(rdds())
+    with ratings_leaf(cached) as leaf:
+        assert len(rdds()) == base + 1
+        ranked = _rank_items(
+            user_based_scored(leaf, 5, prefilter_neighbors=10, max_raters_per_item=80),
+            4,
+        )
+        ranked.collect()
+        tree = tree_of(ranked)
+    assert len(rdds()) == base
+    lifecycle.release(owner)
+    assert "Scan ExistingRDD" in tree
+    assert "InMemoryTableScan" not in tree
+    assert tree.count("ReusedExchange") >= 1, tree
+
+
+def test_lazy_cf_axis_runs_no_job(spark):
+    """With materialize=False the axis plan is built without running a
+    Spark job: no ratings leaf and no ranked checkpoint are taken."""
+    from recsys_spark_spark.recommenders.neighborhood import user_based_topk
+
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None))
+    user_based_topk(
+        _grid_ratings(spark), 5, 4, prefilter_neighbors=10, materialize=False
+    )
+    assert len(tracker.getJobIdsForGroup(None)) == before
