@@ -1,13 +1,17 @@
 #!/usr/bin/env python
 """Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE JSON line:
+Prints two JSON lines: the full record
   {"metric": "...", "value": total_sec, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...}
+   "queries": {name: sec, ...}, "stages": {name: {phase: sec, ...}},
+   "families": {...}, "scaling": {...}, "sf": ..., ...}
+then a compact record with the grand total as the very last line.
 
 Each query is timed end-to-end (plan + execute + count via a cheap
 aggregation action that forces full materialization without collecting
-rows to the driver).
+rows to the driver).  ``stages`` splits that wall into the query's
+top-level phases (``recsys_spark_spark.phases``), ``build_other`` and
+``action`` (see :func:`stage_split`).
 """
 
 from __future__ import annotations
@@ -16,6 +20,8 @@ import json
 import os
 import time
 
+from recsys_spark_spark import phases
+from recsys_spark_spark.lifecycle import release
 from recsys_spark_spark.plans.registry import bench_queries
 from recsys_spark_spark.session import get_spark
 
@@ -135,6 +141,21 @@ def normalized_grand_jvm(total: float, jvm_ghashes: float | None):
     return round(total * jvm_ghashes / REFERENCE_JVM_GHASHES, 3), True
 
 
+def stage_split(logged: list, build_s: float, wall_s: float) -> dict:
+    """``stages[name]`` for one query: its top-level phases, then
+    ``build_other`` (call time no phase covers) and ``action`` (the
+    hash action), which together sum to the query wall.  Sub-phases
+    are listed under ``sub`` and not summed."""
+    top = {p.name: p.seconds for p in logged if not p.sub}
+    out = {k: round(v, 3) for k, v in top.items()}
+    out["build_other"] = round(build_s - sum(top.values()), 3)
+    out["action"] = round(wall_s - build_s, 3)
+    sub = {p.name: round(p.seconds, 3) for p in logged if p.sub}
+    if sub:
+        out["sub"] = sub
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -155,14 +176,6 @@ def main() -> None:
     # registry.bench_queries() spans both correctness tiers — the
     # bench set must not rotate (see its docstring)
     bench = bench_queries()
-
-    # corpus_clean drifted 26.5 s (driver) vs 5.5-6.5 s (local) in
-    # round 4 with no attribution — profile its internal stages
-    # (same total work, see clean_corpus docstring)
-    from recsys_spark_spark.plans import pipeline as _pipeline
-    from recsys_spark_spark.lifecycle import release
-
-    _pipeline.PROFILE_CLEAN = True
 
     # warm the JVM + parquet footers once with a trivial action
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
@@ -211,82 +224,24 @@ def main() -> None:
         df.selectExpr("bit_xor(xxhash64(*)) AS h").collect()
         t_total = time.perf_counter() - t0
         timings[name] = round(t_total, 3)
-        if name == "sequential_topk":
-            from recsys_spark_spark.plans import recsys as _recsys
-
-            fit = dict(_recsys.last_sequential_timings or {})
-            # full attribution: 'fit_other' = fn-call time not covered
-            # by a timed fit stage (baskets/periods build, plan
-            # assembly); 'recommend' = executing the recommend() DAG +
-            # the result hash.  Stages now sum to the query wall time.
-            fit["fit_other"] = round(t_build - sum(fit.values()), 3)
-            fit["recommend"] = round(t_total - t_build, 3)
-            stages[name] = fit
-        elif name == "hybrid_topk":
-            from recsys_spark_spark.plans import recsys as _recsys
-
-            h = dict(_recsys.last_hybrid_timings or {})
-            # axis_user/axis_item overlap (two driver threads);
-            # axes_wall is their combined elapsed span, so
-            # ratings + axes_wall + blend == query wall time
-            h["blend"] = round(
-                t_total - h.get("ratings", 0.0) - h.get("axes_wall", 0.0), 3
-            )
-            stages[name] = h
-        elif name == "als_topk":
-            from recsys_spark_spark.plans import recsys as _recsys
-
-            a = dict(_recsys.last_als_timings or {})
-            # fit_and_index is the eager part (biases + MLlib fit +
-            # item-model collect); serve = the lazy GEMM execution
-            a["serve"] = round(t_total - a.get("fit_and_index", 0.0), 3)
-            stages[name] = a
+        stages[name] = stage_split(phases.take(), t_build, t_total)
+        if name == "als_topk":
             # als_topk runs FIRST (alphabetical) — release its cached
             # bias frames, the item-model broadcast and MLlib's
             # persisted factor RDDs so leaked state cannot pressure
             # the queries that follow (the round-4 driver artifact
             # showed exactly those queries drifting 2-4×)
             release("als")
-        elif name == "events_stream_quantile_sketch":
-            from recsys_spark_spark.plans import sketch as _sketch
-
-            st = dict(_sketch.last_stream_sketch_timings or {})
-            # drain = stream construction + availableNow drain through
-            # the exactly-once sink; the remainder is the batch
-            # read-back + merge + quantile execution (+ result hash)
-            st["readback_quantiles"] = round(
-                t_total - st.get("stream_drain", 0.0), 3
-            )
-            stages[name] = st
-        elif name == "corpus_clean":
-            c = dict(_pipeline.last_clean_timings or {})
-            c["assembly"] = round(t_total - sum(c.values()), 3)
-            stages[name] = c
-        elif name == "neardup_components":
-            # r8 deliberate addition: the hottest single stage of the
-            # dedup composition (MinHash pair join → transitive
-            # components) as a first-class line — edges_labels_init is
-            # where the banded pair join executes; emit_hash is the
-            # lazy keeper projection + result hash
-            from recsys_spark_spark.plans import dedup as _dedup
-
-            nc = dict(_dedup.last_components_timings or {})
-            n_rounds = nc.pop("rounds", None)
-            nc["emit_hash"] = round(t_total - sum(nc.values()), 3)
-            if n_rounds is not None:
-                nc["rounds"] = n_rounds
-            stages[name] = nc
-        elif name == "corpus_train_ready":
-            # r7 deliberate addition: the flagship four-stage dedup
-            # composition (gate → exact dedup → transitive near-dup →
-            # span cut).  The three eager stages come from the plan fn;
-            # cut_rebuild is the lazy remainder (span relation + text
-            # rebuild + final join/hash).
-            tr = dict(_pipeline.last_train_ready_timings or {})
-            tr["cut_rebuild"] = round(t_total - sum(tr.values()), 3)
-            stages[name] = tr
 
     total = round(sum(timings.values()), 3)
+    # queries that share a cache read together: corpus_clean and
+    # corpus_train_ready build one gated-survivor persist
+    families = {
+        "corpus": round(
+            timings.get("corpus_clean", 0.0) + timings.get("corpus_train_ready", 0.0),
+            3,
+        )
+    }
 
     # scale-curve evidence: replay the bench set at sf0.01 AFTER the
     # cold headline pass (protocol above stays round-comparable; the
@@ -350,6 +305,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "stages": stages,
+                "families": families,
                 "scaling": scaling,
                 "ambient": ambient,
                 "grand_jvm_normalized": grand_jvm_normalized,

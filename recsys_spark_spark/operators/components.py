@@ -34,13 +34,12 @@ in any pair); both shuffle on id keys, nothing is quadratic.
 
 from __future__ import annotations
 
-import time
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import lifecycle
+from ..phases import phase
 
 #: convergence backstop: pointer-jumping converges in O(log diameter)
 #: PROPAGATION rounds, so 25 covers diameters beyond 2^25 — any real
@@ -92,19 +91,18 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_rounds: int = MAX_ROUNDS,
-    timings_out: dict | None = None,
 ) -> DataFrame:
     """``(id, component)`` for every node appearing in ``edges``, where
     ``component`` is the minimum node id reachable via undirected
     edges.  Ids must be orderable (the min-id convention doubles as
     the deterministic keeper rule: keeper ⇔ id == component).
 
-    ``timings_out`` (optional, for bench attribution): filled with
-    ``edges_labels_init`` (materializing the undirected edge cache +
-    initial labels — this is where the upstream PAIR plan executes,
-    e.g. the MinHash band join), ``iterate`` (the propagation loop)
-    and ``rounds``."""
-    t0 = time.perf_counter()
+    Phases: ``edges_labels_init`` (the undirected edge checkpoint —
+    where the upstream PAIR plan executes, e.g. the MinHash band join)
+    and ``iterate`` (the union-find or the propagation loop).  On the
+    distributed path the returned frame reads checkpointed labels owned
+    by ``"components"``; everything else the call checkpoints is
+    released before it returns."""
     # undirected: one generator explode, not a union of two plans of
     # the (possibly expensive) edge subtree.  A checkpoint, NOT a
     # cache (r15): the loop references this relation in EVERY round's
@@ -116,48 +114,55 @@ def connected_components(
     # owned by this call and released before returning, since both
     # paths return frames that no longer read it.
     owner = object()
-    und = lifecycle.checkpoint(
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+    try:
+        with phase("edges_labels_init"):
+            und = lifecycle.checkpoint(
+                edges.select(
+                    F.explode(
+                        F.array(
+                            F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
+                            F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+                        )
+                    ).alias("_e")
                 )
-            ).alias("_e")
-        )
-        .select("_e.*")
-        .distinct(),
-        owner=owner,
-    )
-    if timings_out is not None:
-        timings_out["edges_labels_init"] = round(time.perf_counter() - t0, 3)
-
-    # bounded LOCAL path: tiny edge lists (the near-dup norm) resolve
-    # with a driver union-find instead of a multi-job iterative loop —
-    # exact same (id, comp) relation, same schema; see LOCAL_EDGE_BUDGET
-    t_loop = time.perf_counter()
-    n_und = und.count()
-    if n_und <= LOCAL_EDGE_BUDGET:
-        rows = [(r["u"], r["v"]) for r in und.collect()]
+                .select("_e.*")
+                .distinct(),
+                owner=owner,
+            )
+        with phase("iterate"):
+            # bounded LOCAL path: tiny edge lists (the near-dup norm)
+            # resolve with a driver union-find instead of a multi-job
+            # iterative loop — exact same (id, comp) relation, same
+            # schema; see LOCAL_EDGE_BUDGET
+            if und.count() <= LOCAL_EDGE_BUDGET:
+                return _local_components(und, edges.schema[src].dataType)
+            return _pointer_jumping(und, max_rounds, owner)
+    finally:
         lifecycle.release(owner)
-        ids = sorted({u for u, _ in rows})
-        comp = _union_find(rows, ids)
-        id_type = edges.schema[src].dataType
-        from pyspark.sql.types import StructField, StructType
 
-        schema = StructType(
-            [StructField("id", id_type), StructField("comp", id_type)]
-        )
-        # from pandas (Arrow under the engine's session): a JVM-side
-        # relation, so consumer stages start no Python workers, unlike
-        # the pickled Python RDD a list of tuples becomes
-        pdf = pd.DataFrame({"id": ids, "comp": [comp[i] for i in ids]})
-        out = edges.sparkSession.createDataFrame(pdf, schema)
-        if timings_out is not None:
-            timings_out["iterate"] = round(time.perf_counter() - t_loop, 3)
-            timings_out["rounds"] = 0
-        return out
 
+def _local_components(und: DataFrame, id_type) -> DataFrame:
+    """:func:`_union_find` over the collected undirected edges, as an
+    ``(id, comp)`` frame."""
+    from pyspark.sql.types import StructField, StructType
+
+    rows = [(r["u"], r["v"]) for r in und.collect()]
+    ids = sorted({u for u, _ in rows})
+    comp = _union_find(rows, ids)
+    schema = StructType([StructField("id", id_type), StructField("comp", id_type)])
+    # from pandas (Arrow under the engine's session): a JVM-side
+    # relation, so consumer stages start no Python workers, unlike
+    # the pickled Python RDD a list of tuples becomes
+    pdf = pd.DataFrame({"id": ids, "comp": [comp[i] for i in ids]})
+    return und.sparkSession.createDataFrame(pdf, schema)
+
+
+def _pointer_jumping(und: DataFrame, max_rounds: int, owner: object) -> DataFrame:
+    """The distributed loop.  Each round's neighbor step is
+    checkpointed under the caller's ``owner``; each round's labels
+    under their own token, released as soon as the next round's
+    labels supersede them.  The final labels pass to ``"components"``,
+    since the returned frame reads them."""
     # Iterative plans MUST truncate lineage each round: the pointer
     # jump self-joins the round's label relation, so the logical plan
     # would DOUBLE per round (2^rounds nodes — Catalyst OOMs on a
@@ -166,13 +171,13 @@ def connected_components(
     # localCheckpoint(eager) cuts the plan to the computed partitions.
     # On a cluster with executor churn, set a checkpoint dir and use
     # .checkpoint() instead — same contract, fault-tolerant storage.
-    labels = (
+    labels_owner = object()
+    labels = lifecycle.checkpoint(
         und.select(F.col("u").alias("id"))
         .distinct()
-        .select("id", F.col("id").alias("comp"))
-        .localCheckpoint()
+        .select("id", F.col("id").alias("comp")),
+        owner=labels_owner,
     )
-    rounds = 0
 
     label_sum = None
     # + 1: the sum-unchanged check confirms convergence one round
@@ -185,18 +190,18 @@ def connected_components(
             .groupBy(F.col("u").alias("id"))
             .agg(F.min("comp").alias("nbr_comp"))
         )
-        stepped = (
-            labels.join(nbr_min, "id", "left")
-            .select(
+        stepped = lifecycle.checkpoint(
+            labels.join(nbr_min, "id", "left").select(
                 "id",
                 F.least(
                     F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
                 ).alias("comp"),
-            )
-            .localCheckpoint()
+            ),
+            owner=owner,
         )
         # 2) pointer jump: comp ← comp's comp (path halving)
-        jumped = (
+        round_owner = object()
+        jumped = lifecycle.checkpoint(
             stepped.alias("s")
             .join(
                 stepped.select(
@@ -208,9 +213,11 @@ def connected_components(
             .select(
                 F.col("id"),
                 F.coalesce(F.col("comp2"), F.col("comp")).alias("comp"),
-            )
-            .localCheckpoint()
+            ),
+            owner=round_owner,
         )
+        lifecycle.release(labels_owner)  # superseded; jumped is lineage-free
+        labels, labels_owner = jumped, round_owner
         # Convergence via the monotone-sum invariant: every step can
         # only DECREASE a label (min/least throughout), so the label
         # sum is strictly decreasing until the fixpoint — an O(1)-
@@ -219,22 +226,18 @@ def connected_components(
         # relations every round).  decimal(38,0) because a sum of
         # 64-bit ids can overflow long, which ANSI mode escalates to
         # a job failure.
-        new_sum = jumped.agg(
+        new_sum = labels.agg(
             F.sum(F.col("comp").cast("decimal(38,0)"))
         ).collect()[0][0]
-        labels = jumped
-        rounds += 1
         if new_sum == label_sum:
             break
         label_sum = new_sum
     else:
+        lifecycle.release(labels_owner)
         raise RuntimeError(
             f"connected_components did not converge in {max_rounds} rounds"
         )
-    lifecycle.release(owner)
-    if timings_out is not None:
-        timings_out["iterate"] = round(time.perf_counter() - t_loop, 3)
-        timings_out["rounds"] = rounds
+    lifecycle.on_release(lambda: lifecycle.release(labels_owner), owner="components")
     return labels.select("id", "comp")
 
 

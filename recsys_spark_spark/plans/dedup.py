@@ -40,13 +40,6 @@ from .registry import register, register_demoted
 NEARDUP_THRESHOLD = 0.5
 MAX_HAMMING = 3
 
-#: bench stage attribution for neardup_components (r8 bench addition:
-#: the hottest single stage of corpus_train_ready — MinHash pairs →
-#: transitive components — gets its own round-over-round number, so a
-#: pair-join regression is attributable without re-deriving it from
-#: the composition's stage dict); set on each call, read by bench.py
-last_components_timings: dict | None = None
-
 
 @register(
     "neardup_minhash_lsh",
@@ -140,12 +133,10 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label propagation (operators/components.py); oracle: recursive
     CTE reachability.  ``keeper`` = 1 on the component's min doc_id —
     the deterministic survivor."""
-    global last_components_timings
     pairs = minhash_neardup_pairs(
         table(spark, sf_dir, "documents"), threshold=NEARDUP_THRESHOLD
     )
-    last_components_timings = {}
-    comp = connected_components(pairs, timings_out=last_components_timings)
+    comp = connected_components(pairs)
     return comp.select(
         F.col("id").alias("doc_id"),
         F.col("comp").cast("bigint").alias("component"),

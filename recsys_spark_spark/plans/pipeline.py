@@ -37,6 +37,7 @@ from ..operators.dedup import (
     ngram_jaccard_pairs,
     shingles_sql,
 )
+from ..phases import phase
 from ..sources.readers import table
 from .dedup import NEARDUP_THRESHOLD
 from .registry import register, register_demoted
@@ -45,18 +46,6 @@ from .text import quality_exprs
 #: drop the bottom ~decile at sf0.01 (measured q10 = 0.458) — a real
 #: pipeline tunes this on a held-out labeled slice
 QUALITY_MIN = 0.46
-
-#: bench-only: when True, clean_corpus materializes its internal
-#: persists eagerly and publishes the stage split here (see its
-#: docstring — total work is unchanged, only WHEN it runs moves)
-PROFILE_CLEAN = False
-last_clean_timings: dict | None = None
-
-#: bench attribution for corpus_train_ready (r7 — the flagship
-#: LLM-pipeline composition joined the bench set): gate/pairs+CC/anti
-#: splits, published when PROFILE_CLEAN is set; bench.py adds the
-#: lazy cut+rebuild remainder
-last_train_ready_timings: dict | None = None
 
 #: languages the downstream tokenizer does not support (demo value —
 #: non-vacuous: the synthetic corpus has 5 langs incl. 'zh')
@@ -197,36 +186,15 @@ def clean_corpus(
     keeper — bounded under-deletion.  When full transitive-group
     resolution matters, run the pairs through
     operators/components.connected_components (the registered
-    ``neardup_components`` query) and keep ``id == component``.
-
-    When ``PROFILE_CLEAN`` is set (bench.py does), the two internal
-    persists are materialized eagerly with timed actions and the
-    split is published in ``last_clean_timings`` — total work is
-    unchanged (both relations are computed exactly once into their
-    caches either way; profiling only moves WHEN), so the headline
-    number stays comparable while attributing the round-4 driver-box
-    drift (26.5 s driver vs 5.5–6.5 s local) to a named stage."""
+    ``neardup_components`` query) and keep ``id == component``."""
     surv = _gated_survivors(docs, quality_min, drop_langs)
 
     pairs = ngram_jaccard_pairs(surv, neardup_threshold)
-    # tiny (dropped doc ids) — persisting lets the profile branch
-    # count it without the final anti-join recomputing the pair join
+    # tiny (dropped doc ids) — cached so a second action on the result
+    # reads it instead of re-running the pair join
     dropped = materialize(
         pairs.select(F.col("id_b").alias("doc_id")).distinct(), owner="pipeline"
     )
-    if PROFILE_CLEAN:
-        import time as _time
-
-        global last_clean_timings
-        _t0 = _time.perf_counter()
-        surv.count()  # materialize gate + exact dedup into the persist
-        _t1 = _time.perf_counter()
-        dropped.count()  # materialize the shingle pair join + verify
-        _t2 = _time.perf_counter()
-        last_clean_timings = {
-            "gate_exact_dedup": round(_t1 - _t0, 3),
-            "neardup_pairs": round(_t2 - _t1, 3),
-        }
     return surv.join(dropped, "doc_id", "left_anti").select(
         "doc_id", "lang", "n_tokens", "quality"
     )
@@ -920,34 +888,15 @@ def corpus_train_ready(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is dropped by the final select
     surv = _gated_survivors(table(spark, sf_dir, "documents"))
 
-    import time as _time
-
-    _t0 = _time.perf_counter()
-    if PROFILE_CLEAN:
-        # materialize gate + exact dedup into the persist NOW so the
-        # stage split attributes it (total work unchanged — the cache
-        # is computed exactly once either way)
-        surv.count()
-    _t1 = _time.perf_counter()
-
-    pairs = minhash_neardup_pairs(surv, threshold=NEARDUP_THRESHOLD)
     # connected_components is EAGER (iterative pointer-jumping over
-    # localCheckpoints), so timing the call captures pairs + CC
-    comp = connected_components(pairs)
-    _t2 = _time.perf_counter()
+    # checkpoints), so this phase covers the pair plan + CC
+    with phase("pairs_components"):
+        pairs = minhash_neardup_pairs(surv, threshold=NEARDUP_THRESHOLD)
+        comp = connected_components(pairs)
     dropped = comp.where(F.col("id") != F.col("comp")).select(
         F.col("id").alias("doc_id")
     )
     surv2 = materialize(surv.join(dropped, "doc_id", "left_anti"), owner="pipeline")
-    if PROFILE_CLEAN:
-        surv2.count()
-        global last_train_ready_timings
-        _t3 = _time.perf_counter()
-        last_train_ready_timings = {
-            "gate_exact_dedup": round(_t1 - _t0, 3),
-            "pairs_components": round(_t2 - _t1, 3),
-            "neardup_antijoin": round(_t3 - _t2, 3),
-        }
 
     cut = dedup_cut_docs(surv2, n=DUP_WINDOW)
     return surv2.join(cut, "doc_id").select(

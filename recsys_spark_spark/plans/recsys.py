@@ -20,6 +20,7 @@ from ..functions.rounding import qround
 from ..functions.similarity import pairwise_similarity
 from ..lifecycle import materialize
 from ..operators.dedup import hash60_sql
+from ..phases import phase
 from ..recommenders.neighborhood import item_based_topk, user_based_topk
 from ..recommenders.hybrid import hybrid_topk
 from ..sources.readers import ratings_from_sales
@@ -425,8 +426,8 @@ def hybrid_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     then plans over the two checkpoints).  Both axes read one
     lineage-free ratings leaf (``ratings_leaf``), checkpointed first
     and released once both ranked models are checkpointed."""
-    import time as _time
     from concurrent.futures import ThreadPoolExecutor
+    from contextlib import ExitStack
 
     from ..recommenders.neighborhood import (
         _rank_items,
@@ -435,21 +436,18 @@ def hybrid_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         user_based_scored,
     )
 
-    global last_hybrid_timings
-    timings: dict[str, float] = {}
-
     # each thread computes its axis THROUGH the rank window into the
     # checkpointed O(users·CHILD_K) ranked model (see _rank_items)
     def _axis(pair):
         name, scored = pair
-        t0 = _time.perf_counter()
-        ranked = _rank_items(scored, CHILD_K, share=True)
-        timings[name] = round(_time.perf_counter() - t0, 3)
-        return ranked
+        with phase(name):
+            return _rank_items(scored, CHILD_K, share=True)
 
-    _t0 = _time.perf_counter()
-    with ratings_leaf(_cached_ratings(spark, sf_dir)) as ratings:
-        timings["ratings"] = round(_time.perf_counter() - _t0, 3)
+    with ExitStack() as scope:
+        with phase("ratings"):
+            ratings = scope.enter_context(
+                ratings_leaf(_cached_ratings(spark, sf_dir))
+            )
         u_scored = user_based_scored(
             ratings,
             K_NEIGHBORS,
@@ -464,12 +462,9 @@ def hybrid_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_raters_per_item=MAX_RATERS_PER_ITEM,
             prefilter_neighbors=PREFILTER,
         )
-        _t0 = _time.perf_counter()
-        with ThreadPoolExecutor(2) as ex:
+        # the two axis phases overlap; "axes_wall" is their elapsed span
+        with phase("axes_wall"), ThreadPoolExecutor(2) as ex:
             u, i = ex.map(_axis, (("axis_user", u_scored), ("axis_item", i_scored)))
-    # the per-axis walls overlap; "axes_wall" is the actual elapsed span
-    timings["axes_wall"] = round(_time.perf_counter() - _t0, 3)
-    last_hybrid_timings = timings
     return hybrid_topk(u, i, weight_a=0.6, weight_b=0.4, k_items=K_ITEMS)
 
 
@@ -987,27 +982,11 @@ def user_cf_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: fit-stage wall-clock of the LAST sequential_topk run (cluster /
-#: sequences / rules / votes) — read by bench.py into the "stages"
-#: field of its JSON line
-last_sequential_timings: dict | None = None
-
-#: bench.py reads this after timing hybrid_topk — per-axis
-#: materialization walls (overlapping driver threads) + the blend
-#: remainder; same contract as last_sequential_timings
-last_hybrid_timings: dict | None = None
-
-#: eager (fit + item-model collect) portion of the last als_topk call;
-#: the bench derives serve = wall − fit_and_index
-last_als_timings: dict | None = None
-
-
 @register_demoted("sequential_topk", bench=True)
 def sequential_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M10/M11: cluster-sequence rule recommendations.  No DuckDB
     oracle (KMeans + FPGrowth are not SQL-expressible); correctness is
     covered by property tests in tests/test_sequential.py."""
-    global last_sequential_timings
     from ..recommenders.sequential import SequentialTopK
     from ..sources.readers import table
 
@@ -1020,9 +999,7 @@ def sequential_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").alias("item_id"),
         F.col("l_shipdate").alias("ts"),
     )
-    model = SequentialTopK(k_items=K_ITEMS).fit(interactions)
-    last_sequential_timings = model.timings_
-    return model.recommend()
+    return SequentialTopK(k_items=K_ITEMS).fit(interactions).recommend()
 
 
 @register_demoted(
@@ -1056,19 +1033,12 @@ def als_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_als.py).  Promoted into the round-4 driver window
     (rows-only check) and the bench set so the one MLlib-native model
     family is perf-tracked too."""
-    import time as _time
-
     from ..recommenders.als import als_topk
 
-    global last_als_timings
-    _t0 = _time.perf_counter()
-    out = als_topk(_cached_ratings(spark, sf_dir), k_items=K_ITEMS)
     # als_topk is eager through fit + item-model collect; the GEMM
     # serving itself is the lazy remainder the caller's action pays
-    last_als_timings = {
-        "fit_and_index": round(_time.perf_counter() - _t0, 3)
-    }
-    return out
+    with phase("fit_and_index"):
+        return als_topk(_cached_ratings(spark, sf_dir), k_items=K_ITEMS)
 
 
 # ---------------------------------------------------------------------------

@@ -108,11 +108,6 @@ def events_value_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (tier-independent lookup — the registered/demoted split rotates)
 _SKETCH_ORACLE = oracle_of("events_value_quantile_sketch")
 
-#: bench attribution (same pattern as recsys.last_*_timings): the
-#: drain wall time of the last events_stream_quantile_sketch call —
-#: bench.py derives the batch read-back/quantile share from it
-last_stream_sketch_timings: dict | None = None
-
 #: state-store partitions for the streamed sketch — sized to the
 #: state's key cardinality (days × types windows), not the session's
 #: batch shuffle width; see the query docstring for the measured A/B
@@ -155,27 +150,24 @@ def events_stream_quantile_sketch(
     STARTS and pinned by the checkpoint thereafter, so the batch
     merge/quantile stages below still run at the session width."""
     from ..functions.scratch import scratch_dir
-    import time
-
+    from ..phases import phase
     from ..streaming.sinks import read_batched, write_stream_exactly_once
     from ..streaming.windows import histogram_sketch_stream, read_events_stream
 
-    global last_stream_sketch_timings
-    t0 = time.perf_counter()
-    workdir = scratch_dir("stream_sketch_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS))
-    try:
-        stream = histogram_sketch_stream(read_events_stream(spark, sf_dir))
-        q = write_stream_exactly_once(
-            stream, f"{workdir}/store", f"{workdir}/ck", output_mode="update"
+    with phase("stream_drain"):
+        workdir = scratch_dir("stream_sketch_")
+        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    last_stream_sketch_timings = {
-        "stream_drain": round(time.perf_counter() - t0, 3)
-    }
+        try:
+            stream = histogram_sketch_stream(read_events_stream(spark, sf_dir))
+            q = write_stream_exactly_once(
+                stream, f"{workdir}/store", f"{workdir}/ck", output_mode="update"
+            )
+            q.awaitTermination()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     stored = read_batched(spark, f"{workdir}/store")
     rolled = merge_histograms(stored, key_cols=["event_type"])
     return histogram_quantiles(

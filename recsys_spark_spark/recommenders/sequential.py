@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..lifecycle import materialize, release
+from ..phases import phase
 
 
 def rule_counts(
@@ -259,10 +260,6 @@ class SequentialTopK:
     #: and rule_counts both need it; re-collecting per call paid an
     #: extra Spark job and risked the two mask builders drifting)
     tags_: list | None = field(default=None, repr=False)
-    #: wall-clock seconds per fit stage (cluster / sequences / rules /
-    #: votes) — populated by fit(); bench.py reports it so stage-level
-    #: regressions are visible round-over-round
-    timings_: dict | None = field(default=None, repr=False)
 
     # ---------------- fit stages ----------------
 
@@ -515,52 +512,43 @@ class SequentialTopK:
         sequences = |users|, rules ≤ max_rules, votes ≤
         clusters×vote_prefilter) — so (a) the final recommend() action
         composes cache READS instead of re-deriving every stage inside
-        one job, and (b) per-stage wall-clock lands in ``timings_``,
-        giving bench.py the stage breakdown the 28-40 s run-to-run
-        spread needs for diagnosis."""
-        import time as _time
-
-        timings: dict[str, float] = {}
-        _t0 = _time.perf_counter()
-
-        def _lap(stage: str) -> None:
-            nonlocal _t0
-            now = _time.perf_counter()
-            timings[stage] = round(now - _t0, 3)
-            _t0 = now
-
-        # persist: _with_periods consumes baskets twice (the 1-row
-        # span-bounds aggregate + the main branch), which would re-run
-        # the upstream interactions join + basket groupBy
-        baskets = materialize(self._baskets(interactions), owner=self)
-        with_periods = self._with_periods(baskets)
-        clustered, _ = self._cluster(with_periods)
-        clustered = materialize(clustered, owner="sequential")
-        _lap("cluster")  # SOM codebook fit (eager); assignment stays lazy
+        one job, and (b) each stage's wall-clock is a phase
+        (``cluster`` / ``sequences`` / ``rules`` / ``seen`` /
+        ``votes``), giving bench.py the stage breakdown the 28-40 s
+        run-to-run spread needs for diagnosis."""
+        with phase("cluster"):  # SOM codebook fit (eager); assignment stays lazy
+            # persist: _with_periods consumes baskets twice (the 1-row
+            # span-bounds aggregate + the main branch), which would
+            # re-run the upstream interactions join + basket groupBy
+            baskets = materialize(self._baskets(interactions), owner=self)
+            with_periods = self._with_periods(baskets)
+            clustered, _ = self._cluster(with_periods)
+            clustered = materialize(clustered, owner="sequential")
 
         self.baskets_ = clustered
-        # O(users) rows; materializing sequences ALSO writes
-        # clustered's cache blocks (first scan of a cached plan
-        # materializes it) — no separate clustered.count() pass needed
-        self.sequences_ = materialize(
-            self._sequences(clustered), owner="sequential", eager=True
-        )
-        # the tag alphabet (≤ grid cells × periods values) is fixed
-        # once sequences exist — collect it ONCE for both rule_counts
-        # (fit) and recommend() mask building
-        self.tags_ = sorted(
-            r["t"]
-            for r in self.sequences_.select(
-                F.explode("items").alias("t")
+        with phase("sequences"):
+            # O(users) rows; materializing sequences ALSO writes
+            # clustered's cache blocks (first scan of a cached plan
+            # materializes it) — no separate clustered.count() pass
+            # needed
+            self.sequences_ = materialize(
+                self._sequences(clustered), owner="sequential", eager=True
             )
-            .distinct()
-            .collect()
-        )
-        _lap("sequences")
-        self.rules_ = materialize(  # ≤ max_rules rows
-            self._mine_rules(self.sequences_), owner="sequential", eager=True
-        )
-        _lap("rules")
+            # the tag alphabet (≤ grid cells × periods values) is fixed
+            # once sequences exist — collect it ONCE for both
+            # rule_counts (fit) and recommend() mask building
+            self.tags_ = sorted(
+                r["t"]
+                for r in self.sequences_.select(
+                    F.explode("items").alias("t")
+                )
+                .distinct()
+                .collect()
+            )
+        with phase("rules"):
+            self.rules_ = materialize(  # ≤ max_rules rows
+                self._mine_rules(self.sequences_), owner="sequential", eager=True
+            )
 
         # seen = distinct (user, item): derive it from the CACHED
         # clustered baskets (they hold every interaction's item string,
@@ -570,13 +558,13 @@ class SequentialTopK:
         # Built BEFORE the vote pool (r15) so max_user_items below is
         # one tiny aggregate over this cache instead of a second full
         # scan + join of the raw interactions.
-        self.seen_ = materialize(
-            clustered.select("user_id", F.explode("items").alias("item_id"))
-            .distinct(),
-            owner="sequential",
-            eager=True,
-        )
-        _lap("seen")
+        with phase("seen"):
+            self.seen_ = materialize(
+                clustered.select("user_id", F.explode("items").alias("item_id"))
+                .distinct(),
+                owner="sequential",
+                eager=True,
+            )
 
         # candidate pool: items of last-period transactions, voted per
         # cluster (reference transform :126-149, A9); pre-ranked to the
@@ -589,39 +577,38 @@ class SequentialTopK:
         # string cast is injective), so max items/user is a count over
         # the cache — identical value to the old count_distinct over
         # the raw interactions join.
-        max_user_items = (
-            self.seen_.groupBy("user_id")
-            .agg(F.count("*").alias("n"))
-            .agg(F.max("n"))
-            .collect()[0][0]
-            or 0
-        )  # one scalar — O(1) driver state
-        eff_prefilter = min(self.vote_prefilter, self.k_items + max_user_items)
-        last = clustered.where(F.col("period_id") == self.n_periods - 1)
-        votes = (
-            last.select(
-                "transaction_cluster", F.explode("items").alias("item_id")
+        with phase("votes"):
+            max_user_items = (
+                self.seen_.groupBy("user_id")
+                .agg(F.count("*").alias("n"))
+                .agg(F.max("n"))
+                .collect()[0][0]
+                or 0
+            )  # one scalar — O(1) driver state
+            eff_prefilter = min(self.vote_prefilter, self.k_items + max_user_items)
+            last = clustered.where(F.col("period_id") == self.n_periods - 1)
+            votes = (
+                last.select(
+                    "transaction_cluster", F.explode("items").alias("item_id")
+                )
+                .groupBy("transaction_cluster", "item_id")
+                .agg(F.count("*").alias("votes"))
             )
-            .groupBy("transaction_cluster", "item_id")
-            .agg(F.count("*").alias("votes"))
-        )
-        wv = Window.partitionBy("transaction_cluster").orderBy(
-            F.desc("votes"), F.asc("item_id")
-        )
-        self.cluster_votes_ = materialize(  # ≤ clusters × vote_prefilter rows
-            votes.withColumn("_vr", F.row_number().over(wv))
-            .where(F.col("_vr") <= eff_prefilter)
-            .drop("_vr"),
-            owner="sequential",
-            eager=True,
-        )
-        _lap("votes")
+            wv = Window.partitionBy("transaction_cluster").orderBy(
+                F.desc("votes"), F.asc("item_id")
+            )
+            self.cluster_votes_ = materialize(  # ≤ clusters × vote_prefilter rows
+                votes.withColumn("_vr", F.row_number().over(wv))
+                .where(F.col("_vr") <= eff_prefilter)
+                .drop("_vr"),
+                owner="sequential",
+                eager=True,
+            )
         # every model DataFrame (baskets_/sequences_/rules_/votes/seen)
         # is materialized above — the fit-scoped intermediates
         # (baskets, SOM features, FPGrowth lattice, intermediate rule
         # set), owned by this instance, can go
         release(self)
-        self.timings_ = timings
         return self
 
     # ---------------- recommend ----------------

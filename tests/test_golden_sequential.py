@@ -24,6 +24,7 @@ from fractions import Fraction
 import numpy as np
 from pyspark.sql import functions as F
 
+from recsys_spark_spark import phases
 from recsys_spark_spark.recommenders.sequential import SequentialTopK
 from recsys_spark_spark.recommenders.som import BatchSOM
 
@@ -224,12 +225,12 @@ def test_batchsom_matches_numpy_twin(spark):
 
 
 def test_fit_records_stage_timings(spark):
-    """bench.py's 'stages' field depends on fit() populating timings_ —
-    guard the contract."""
-    model = _FixedClusterSeq(n_periods=2, min_support_count=1).fit(
-        _interactions(spark)
-    )
-    assert set(model.timings_) == {
+    """bench.py's 'stages' field depends on fit() recording its five
+    phases — guard the contract."""
+    phases.take()
+    _FixedClusterSeq(n_periods=2, min_support_count=1).fit(_interactions(spark))
+    logged = phases.take()
+    assert {p.name for p in logged} == {
         "cluster", "sequences", "rules", "votes", "seen"
     }
-    assert all(v >= 0 for v in model.timings_.values())
+    assert all(p.seconds >= 0 and not p.sub for p in logged)
