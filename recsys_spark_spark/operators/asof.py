@@ -104,7 +104,7 @@ def asof_join_chunked(
     1. the union-trick carry runs WITHIN (key, time-chunk), so no
        task ever sorts more than one key-chunk of rows — the plain
        form's per-key unbounded window sort is the measured hot-key
-       straggler class (stress/rolling_twin_stress.py: 8× at 2M rows
+       straggler class (PERF.md "GHOST REPLICAS": 8× at 2M rows
        per key for per-row-maintenance frames; ``last(ignorenulls)``
        is cheaper per row but a 10M-event key still lands one task);
     2. one tiny per-(key, present-chunk) relation summarizes each

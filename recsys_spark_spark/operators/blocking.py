@@ -27,7 +27,7 @@ combinable) sizes the blocks; blocks past ``max_block`` are DROPPED
 drop, the ``plans/caps.py`` discipline).  Candidate volume is then
 bounded by ``sum_blocks c² ≤ max_block × n_rows × n_passes`` —
 LINEAR in rows at fixed cap, the property that keeps the join alive
-at 100 TB (measured in stress/blocked_join_stress.py).  The verify
+at 100 TB (measured in PERF.md, "Blocked fuzzy join").  The verify
 (``levenshtein`` — built into BOTH Spark and DuckDB, so the whole
 pipeline carries a value-hash oracle) touches candidates only.
 """

@@ -94,13 +94,6 @@ def pair_counts(sym_vocab: DataFrame) -> DataFrame:
     )
 
 
-def top_pair(sym_vocab: DataFrame) -> tuple[str, str, int] | None:
-    """The next merge rule: argmax pair by (cnt DESC, a ASC, b ASC) —
-    one TakeOrderedAndProject row to the driver (O(1) state)."""
-    rows = top_pairs(sym_vocab, 1)
-    return rows[0] if rows else None
-
-
 def top_pairs(sym_vocab: DataFrame, m: int) -> list[tuple[str, str, int]]:
     """The top ``m`` pairs by (cnt DESC, a ASC, b ASC) — one
     TakeOrderedAndProject job (per-partition top-m, tiny driver

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import qround
 from ..lifecycle import materialize
+from ..phases import phase
 
 N_HASHES = 64
 ROWS_PER_BAND = 4
@@ -319,32 +320,33 @@ def minhash_neardup_pairs(
     # (see readers.spread_scan).
     from ..sources.readers import spread_scan
 
-    sh = materialize(
-        shingle_rows(spread_scan(docs), id_col, text_col, shingle),
-        owner="dedup",
-        eager=True,
-    )
-    sigs = minhash_signatures(sh, n_hashes, hash_mode)
-    # cand feeds the id set AND the co join
-    cand = materialize(
-        lsh_candidate_pairs(band_rows(sigs, rows_per_band, n_hashes), max_bucket),
-        owner="dedup",
-        eager=True,
-    )
-    # r14: the exact-verify co-count join only reads shingles of docs
-    # that appear in a candidate pair — a tiny subset on a healthy
-    # corpus.  Restricting sh ONCE (broadcast semi-join on the
-    # candidate ids) replaces the two full sh streams of the co join
-    # with two scans of a small cached remnant; sizes stay the FULL
-    # per-doc counts (computed from sh, unchanged values).  cand and
-    # sh_c are O(near-dup docs) rows — KB-scale persists, unlike sh.
-    ids = cand.select(
-        F.explode(F.array("id_a", "id_b")).alias("id")
-    ).distinct()
-    # sh_c feeds both sides of the co join
-    sh_c = materialize(
-        sh.join(F.broadcast(ids), "id", "semi"), owner="dedup", eager=True
-    )
+    with phase("minhash_pairs"):
+        sh = materialize(
+            shingle_rows(spread_scan(docs), id_col, text_col, shingle),
+            owner="dedup",
+            eager=True,
+        )
+        sigs = minhash_signatures(sh, n_hashes, hash_mode)
+        # cand feeds the id set AND the co join
+        cand = materialize(
+            lsh_candidate_pairs(band_rows(sigs, rows_per_band, n_hashes), max_bucket),
+            owner="dedup",
+            eager=True,
+        )
+        # r14: the exact-verify co-count join only reads shingles of docs
+        # that appear in a candidate pair — a tiny subset on a healthy
+        # corpus.  Restricting sh ONCE (broadcast semi-join on the
+        # candidate ids) replaces the two full sh streams of the co join
+        # with two scans of a small cached remnant; sizes stay the FULL
+        # per-doc counts (computed from sh, unchanged values).  cand and
+        # sh_c are O(near-dup docs) rows — KB-scale persists, unlike sh.
+        ids = cand.select(
+            F.explode(F.array("id_a", "id_b")).alias("id")
+        ).distinct()
+        # sh_c feeds both sides of the co join
+        sh_c = materialize(
+            sh.join(F.broadcast(ids), "id", "semi"), owner="dedup", eager=True
+        )
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     return verify_jaccard(cand, sh_c, threshold, sizes=sizes)
 

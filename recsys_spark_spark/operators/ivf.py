@@ -63,22 +63,6 @@ N_PROBE = 8
 SIM_ROUND = 7
 
 
-def _cell_sims(X: np.ndarray, C: np.ndarray) -> np.ndarray:
-    """n×k matrix of 7dp-quantized cosines against the codebook.
-    The quantizer is the numpy twin of qround(·, 7):
-    floor(x·1e7 + 0.5)/1e7 — the same IEEE-754 op sequence, so
-    identical doubles quantize identically across engines.
-
-    NOTE: the pandas UDFs below inline this math instead of calling
-    it — UDF bodies must be self-contained (no references to this
-    module) because the driver may have path-injected the package and
-    the Python workers then cannot import it (same constraint as
-    operators/knn.py's signature UDF)."""
-    xn = np.sqrt((X * X).sum(1))[:, None]
-    cn = np.sqrt((C * C).sum(1))[None, :]
-    return np.floor(((X @ C.T) / (xn * cn)) * 1e7 + 0.5) / 1e7
-
-
 def seed_centroids(
     base: DataFrame,
     id_col: str = "vec_id",

@@ -8,12 +8,12 @@ hot key's row count (from ``events_key_skew_audit`` /
 r10/r11 stress measurements showed the crossover is NOT one number —
 it scales with the window's per-row maintenance cost:
 
-    carry class          crossover measured             stress file
-    range_frame          8.02x at 2M, 4.63x at 10M      rolling_twin_stress.py
-    running_sum          4x at 10M                      sessions_skew_stress.py
-    flag_sum (sessions)  1.73x at 2M (one 2M-row key)   sessions_skew_stress.py
+    carry class          crossover measured             PERF.md section
+    range_frame          8.02x at 2M, 4.63x at 10M      GHOST REPLICAS
+    running_sum          4x at 10M                      Sessionization hot-user
+    flag_sum (sessions)  1.73x at 2M (one 2M-row key)   Sessionization hot-user
     one_row_lag          same class as flag_sum         —
-    asof_struct          1.10x at 4M, 2.57x at 20M      asof_twin_stress.py
+    asof_struct          1.10x at 4M, 2.57x at 20M      as-of bounded-task twin
 
 A RANGE frame pays per-row frame maintenance and crosses over two
 sizes earlier than the as-of carry (``last(ignorenulls)`` — the
@@ -83,8 +83,8 @@ def recommend_window_form(hot_key_rows: int, carry_class: str) -> str:
     """``'plain'`` or ``'chunked'`` for a window of ``carry_class``
     whose hottest key holds ``hot_key_rows`` rows (take
     ``skew_ratio × rows/n_keys`` from the skew audit).  Unknown carry
-    classes raise — a new twin must be measured (its stress file) and
-    added to the table before it can be auto-selected."""
+    classes raise — a new twin must be measured (recorded in PERF.md)
+    and added to the table before it can be auto-selected."""
     try:
         threshold = CARRY_CLASS_CROSSOVER_ROWS[carry_class]
     except KeyError:

@@ -35,7 +35,7 @@ from ..operators.quant import (
     knn_int8_sql,
 )
 from .llm import KNN_K, KNN_QUERIES
-from .registry import register, register_demoted
+from .registry import register
 
 #: testdata embeddings are 64-dim (TESTDATA.md); the Spark side infers
 #: the dim from the data, the oracle needs it statically.
@@ -213,7 +213,7 @@ def _lsh_neardup_pairs(
     )
 
 
-@register_demoted("embedding_neardup_pairs", oracle=EMB_NEARDUP_PAIRS_SQL)
+@register("embedding_neardup_pairs", oracle=EMB_NEARDUP_PAIRS_SQL)
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup: all pairs above a cosine threshold
     (exact, dimension-join form).  At 100 TB the candidate generation
@@ -459,7 +459,7 @@ FROM ranked
 """.strip()
 
 
-@register_demoted("embedding_semdedup_scale", oracle=_semdedup_scale_sql())
+@register("embedding_semdedup_scale", oracle=_semdedup_scale_sql())
 def embedding_semdedup_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup at the PRODUCTION threshold (τ=0.9) through the
     LSH-candidate scale path (new r6, VERDICT r5 #6): the pair stage
@@ -703,7 +703,7 @@ def _tagged(df: DataFrame, tag: str) -> DataFrame:
     )
 
 
-@register_demoted(
+@register(
     "embedding_knn_exact",
     oracle=_tagged_union_sql(
         [
@@ -731,7 +731,7 @@ def embedding_knn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _tagged(bf, "bf").unionByName(_tagged(i8, "int8"))
 
 
-@register_demoted(
+@register(
     "embedding_knn_indexed",
     oracle=_tagged_union_sql(
         [

@@ -62,7 +62,7 @@ from .market import lift_basket_rows
 from .recsys import MAX_RATERS_PER_ITEM as CF_MAX_RATERS
 from .recsys import _cached_ratings
 from .mm import dhash_twinned_hashed_ctes
-from .registry import register_demoted
+from .registry import register
 
 
 def cap_histogram(
@@ -191,7 +191,7 @@ SELECT CAST(count(*) AS BIGINT) AS bsz FROM r GROUP BY item_id
 """.strip()
 
 
-@register_demoted(
+@register(
     "dedup_cap_audit",
     oracle="\nUNION ALL\n".join(
         [

@@ -35,7 +35,7 @@ from ..operators.dedup import (
 )
 from ..operators.incremental import incremental_neardup_sql
 from ..sources.readers import table
-from .registry import register, register_demoted
+from .registry import register
 
 NEARDUP_THRESHOLD = 0.5
 MAX_HAMMING = 3
@@ -147,7 +147,7 @@ def neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_demoted(
+@register(
     "neardup_dedup_docs",
     oracle=f"""
 SELECT d.doc_id, d.lang, d.n_chars
@@ -295,7 +295,7 @@ INCR_SHARD_PRED = "doc_id % 10 = 0"
 INCR_CORPUS_PRED = "doc_id % 10 <> 0"
 
 
-@register_demoted(
+@register(
     "dedup_incremental",
     oracle=incremental_neardup_sql(INCR_CORPUS_PRED, INCR_SHARD_PRED),
 )
@@ -319,7 +319,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus per run; this path touches ONLY the new shard's text plus
     signature-sized store relations, so per-shard cost is O(shard +
     candidates) however large the corpus grows — measured in
-    stress/incremental_dedup_stress.py (corpus 50k -> 400k docs, fixed
+    PERF.md, "r13 frontier: incremental dedup" (corpus 50k -> 400k docs, fixed
     2k shard: full batch re-dedup 16.8 -> 35.9 s and climbing with the
     corpus, incremental match 4.1 -> 5.1 s near-FLAT with 100/100
     planted cross-split dups found at every size).  The candidate join

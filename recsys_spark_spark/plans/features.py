@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import qround, qround_sql
 from ..sources.readers import table
-from .registry import register_demoted
+from .registry import register
 
 #: winsorization tail fractions (classic 1%/99%)
 WINSOR_LO = 0.01
@@ -124,7 +124,7 @@ def events_user_target_encoding(
 MAD_K = 1.4826
 
 
-@register_demoted(
+@register(
     "events_value_robust_scaled",
     oracle=f"""
 WITH med AS (
@@ -384,7 +384,7 @@ WHERE e.value IS NOT NULL
 """.strip()
 
 
-@register_demoted("events_value_features", oracle=EVENTS_VALUE_FEATURES_SQL)
+@register("events_value_features", oracle=EVENTS_VALUE_FEATURES_SQL)
 def events_value_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE per-fact feature row carrying the whole value-feature family:
     exact winsorize band (p01/p99 → winsorized/minmax), its 100 TB

@@ -16,7 +16,7 @@ from ..functions.rounding import qround_sql
 from ..lifecycle import materialize
 from ..operators.pagerank import PR_ROUND, corating_edges, pagerank
 from .recsys import RATINGS_CTE, _cached_ratings
-from .registry import register, register_demoted
+from .registry import register
 
 PAGERANK_ITERS = 5
 PAGERANK_DAMPING = 0.85
@@ -80,7 +80,7 @@ SELECT id AS item_id, pr AS pagerank FROM it{iters}
 """
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "item_pagerank",
     oracle=_pagerank_sql(),

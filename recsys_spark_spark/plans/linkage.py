@@ -25,14 +25,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import table
-from .registry import register, register_demoted
+from .registry import register
 
 #: drop deletion-variant buckets larger than this before the pair
 #: join (hot-bucket guard, same idiom as operators/knn.py max_bucket)
 MAX_BUCKET = 1000
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "customer_name_fuzzy_pairs",
     oracle=f"""
@@ -235,7 +235,7 @@ def _er_block_sql() -> str:
     return "\n  UNION ALL ".join(parts)
 
 
-@register_demoted(
+@register(
     "customer_name_er_matches",
     oracle=f"""
 WITH n AS (SELECT DISTINCT c_name AS name FROM customer),
@@ -289,7 +289,7 @@ def customer_name_er_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the dense pair listing.
 
     Scale shape: candidates <= max_block x n x n_passes — LINEAR in
-    rows at fixed cap.  Measured (stress/blocked_join_stress.py,
+    rows at fixed cap.  Measured (PERF.md, "Blocked fuzzy join",
     realistic ER corpus: entity clusters with planted 2-substitution
     typos): the naive all-pairs join is plainly quadratic and dead at
     40k names (49 s -> 154 s -> 517 s for 10k/20k/40k) while the

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import qround, qround_sql
 
 from ..sources.readers import table
-from .registry import register, register_demoted
+from .registry import register
 
 R6 = 6
 KNN_QUERIES = 20  # vec_id < 20 are the query vectors
@@ -88,7 +88,7 @@ FROM keys WINDOW w AS (PARTITION BY variant, dup_key)
 """
 
 
-@register_demoted(
+@register(
     "dedup_docs",
     oracle=_DEDUP_DOCS_ORACLE,
 )
@@ -171,7 +171,7 @@ def normalized_dup_groups(docs: DataFrame) -> DataFrame:
 
 
 # --- corpus token frequency ------------------------------------------------
-@register_demoted(
+@register(
     "top_tokens",
     oracle="""
 SELECT token, n, CAST(rk AS INTEGER) AS rank FROM (
@@ -215,7 +215,7 @@ def top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_PAIRS_TOPK = 25
 
 
-@register_demoted(
+@register(
     "corpus_bpe_pair_counts",
     oracle=f"""
 WITH wc AS (
@@ -275,7 +275,7 @@ def corpus_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- text quality / language stats by metadata -----------------------------
-@register_demoted(
+@register(
     "doc_stats_by_lang",
     oracle="""
 SELECT lang,
@@ -394,7 +394,7 @@ def embedding_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- embedding aggregation --------------------------------------------------
-@register_demoted(
+@register(
     "embedding_centroids_by_label",
     oracle="""
 WITH e AS (
@@ -427,7 +427,7 @@ def embedding_centroids_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- n-gram-LM quality scoring ---------------------------------------------
-@register_demoted(
+@register(
     # r7 rotation-latency merge: the former doc_bigram_logprob registry
     # entry (green r6) was FOLDED IN here — both were (doc_id, logprob)
     # grain, so one registry row now certifies both LM orders.

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import qround, qround_sql
 from ..lifecycle import materialize
 from ..sources.readers import table
-from .registry import register, register_demoted
+from .registry import register
 
 #: drop baskets larger than this before the pair self-join (hot-key
 #: guard; testdata max basket is 13 lines, so this is a provable no-op
@@ -57,7 +57,7 @@ def lift_basket_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "item_cooccurrence_lift",
     oracle=f"""

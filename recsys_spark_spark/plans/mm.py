@@ -19,10 +19,10 @@ from ..operators.multimodal import (
     with_binary_content,
 )
 from ..sources.readers import table
-from .registry import register, register_demoted
+from .registry import register
 
 
-@register_demoted(
+@register(
     "multimodal_features_frames",
     oracle=f"""
 WITH feats AS (
@@ -214,7 +214,7 @@ FROM (
     return "\nUNION ALL\n".join(arms)
 
 
-@register_demoted("multimodal_video_frames", oracle=_video_frames_sql())
+@register("multimodal_video_frames", oracle=_video_frames_sql())
 def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video demux + per-frame decode + resize (new r6, retiring
     the engine's LAST deterministic-fake harness): every document gets
@@ -321,7 +321,7 @@ FROM hashed
 """.strip()
 
 
-@register_demoted(
+@register(
     "multimodal_image_dhash_dedup", oracle=_image_dhash_dedup_sql()
 )
 def multimodal_image_dhash_dedup(
@@ -428,7 +428,7 @@ WHERE hamming BETWEEN 1 AND 3
 """.strip()
 
 
-@register_demoted(
+@register(
     "image_dhash_near_pairs", oracle=_image_dhash_near_pairs_sql()
 )
 def image_dhash_near_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -40,7 +40,7 @@ from ..operators.dedup import (
 from ..phases import phase
 from ..sources.readers import table
 from .dedup import NEARDUP_THRESHOLD
-from .registry import register, register_demoted
+from .registry import register
 from .text import quality_exprs
 
 #: drop the bottom ~decile at sf0.01 (measured q10 = 0.458) — a real
@@ -306,7 +306,7 @@ PACK_BUDGET = 256
 PACK_SHARDS = 8
 
 
-@register_demoted(
+@register(
     "corpus_pack",
     oracle=f"""
 WITH t AS (
@@ -441,7 +441,7 @@ CHUNK_TOKENS = 64
 CHUNK_STRIDE = 48
 
 
-@register_demoted(
+@register(
     "doc_chunks",
     bench=True,
     oracle=f"""
@@ -511,7 +511,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 LINE_TOKENS = 12
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "corpus_line_dedup",
     oracle=f"""
@@ -737,7 +737,7 @@ def mixture_sample(d: DataFrame, k: float = MIX_K) -> DataFrame:
 TEMP_ALPHA = 0.5
 
 
-@register_demoted(
+@register(
     "corpus_lang_temperature_weights",
     oracle="""
 WITH c AS (
@@ -1118,7 +1118,7 @@ def corpus_sampling_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- leakage-safe temporal split ----------------------------------------------
-@register_demoted(
+@register(
     "events_user_temporal_split",
     oracle="""
 SELECT event_id, user_id,

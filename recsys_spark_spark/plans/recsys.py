@@ -24,7 +24,7 @@ from ..phases import phase
 from ..recommenders.neighborhood import item_based_topk, user_based_topk
 from ..recommenders.hybrid import hybrid_topk
 from ..sources.readers import ratings_from_sales
-from .registry import register, register_demoted
+from .registry import register
 
 # ---------------------------------------------------------------------------
 # oracle SQL templates
@@ -332,7 +332,7 @@ def user_sims(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pair_query(spark, sf_dir, "user", ("cosine", "pearson"))
 
 
-@register_demoted(
+@register(
     # rotation r5: driver-green r1-r4; slot freed for never-checked queries
     "item_sims", oracle=_pair_query_sql("item", ("jaccard", "euclidean"), MIN_CO)
 )
@@ -579,7 +579,7 @@ HAVING sum(abs(sim)) <> 0
 """.strip()
 
 
-@register_demoted(
+@register(
     "content_topk_cosine",
     oracle=_content_topk_sql(PREFILTER, K_NEIGHBORS, K_ITEMS),
 )
@@ -754,7 +754,7 @@ def _split(spark: SparkSession, sf_dir: str):
     return split_ratings(_cached_ratings(spark, sf_dir))
 
 
-@register_demoted(
+@register(
     "cf_predictions",
     oracle=f"""
 SELECT 'user' AS model, * FROM (
@@ -982,7 +982,7 @@ def user_cf_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register_demoted("sequential_topk", bench=True)
+@register("sequential_topk", bench=True)
 def sequential_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M10/M11: cluster-sequence rule recommendations.  No DuckDB
     oracle (KMeans + FPGrowth are not SQL-expressible); correctness is
@@ -1002,7 +1002,7 @@ def sequential_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SequentialTopK(k_items=K_ITEMS).fit(interactions).recommend()
 
 
-@register_demoted(
+@register(
     # rotation r5: driver-green r1-r4; slot freed for never-checked queries
     "rating_stats_per_user",
     oracle=f"""
@@ -1025,7 +1025,7 @@ def rating_stats_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_demoted("als_topk", bench=True)
+@register("als_topk", bench=True)
 def als_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALS factorization top-5 (no DuckDB oracle — iterative ML, like
     sequential_topk; exactness of the GEMM serving is pinned by the
@@ -1056,7 +1056,7 @@ NEG_POOL = 512
 NEG_PER_USER = 10
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "cf_negative_samples",
     oracle=f"""
@@ -1190,7 +1190,7 @@ FROM rec r JOIN pops p USING (item_id)
 """.strip()
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "user_cf_coverage_novelty",
     oracle=_coverage_novelty_sql("cosine", PREFILTER, K_NEIGHBORS, K_ITEMS),
@@ -1411,7 +1411,7 @@ def random_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the oracle compare should never depend on engine null ordering).
 
 
-@register_demoted(
+@register(
     "baseline_topk",
     oracle=f"""
 SELECT 'pop' AS variant, user_id, item_id,

@@ -48,648 +48,52 @@ class QuerySpec:
 QUERIES: dict[str, QuerySpec] = {}
 
 #: Demoted tier: queries with full oracle parity evidence that are NOT
-#: shipped to the driver's correctness harness (it checks at most 50
-#: registry entries per round — observed in CORRECTNESS_r02, which
-#: covered exactly the first 50 of 67 in dict order).  Demoted entries
-#: keep their Spark plan + DuckDB oracle and are parity-checked by
-#: tests/test_oracle_parity.py exactly like registered ones; the
-#: REGISTERED/DEMOTED split ROTATES round-to-round so that every query
-#: earns a driver-green correctness row within two rounds (round 4
-#: swapped 8 long-stable relational rows out for the 8 round-3 demoted
-#: ones).  A demoted entry may still carry ``bench=True`` — the bench
-#: set is independent of the correctness window and stays stable
-#: across rounds so timings are comparable.
+#: shipped to the driver's correctness harness, which checks at most 50
+#: registry entries per round.  Demoted entries keep their Spark plan
+#: and DuckDB oracle and are parity-checked by
+#: tests/test_oracle_parity.py exactly like registered ones.  A demoted
+#: entry may still carry ``bench=True``: the bench set is independent
+#: of the correctness window, so timings stay comparable across
+#: rotations.
 DEMOTED: dict[str, QuerySpec] = {}
 
-#: ROTATION HISTORY / PLAN.
+#: ROTATION RULE.  The window is exactly 50 oracled names, picked each
+#: round: names that have never had a driver row lead, then the names
+#: longest since a green driver row.  At most 120 oracled queries may
+#: exist at once (a 2.4-round cycle on the 50-row window), which
+#: tests/test_oracle_parity.py::test_rotation_cycle_at_or_under_ceiling
+#: enforces; a new oracled query past the ceiling lands together with a
+#: merge of two same-grain queries, which keeps the first name and
+#: variant-tags the rest.  No-oracle rows are never windowed, which
+#: ``_load_all`` enforces.  Per-round state (which names went green
+#: when) lives in ``CORRECTNESS_r*.json`` and git history.
 #:
-#: Round 5 (EXECUTED this round): promoted the 20 demoted entries that
-#: had never had a driver row (cf_negative_samples, corpus_line_dedup,
-#: corpus_mixture_sample, customer_name_fuzzy_pairs,
-#: customer_rfm_segments, doc_pii_scrub, doc_unigram_logprob,
-#: doc_url_domains, events_anomaly_daily, events_daily_dense,
-#: events_dq_audit, events_funnel, events_transition_matrix,
-#: events_value_quantile_sketch, item_cooccurrence_lift, item_pagerank,
-#: neardup_dedup_docs, user_retention_cohorts, user_value_scd2,
-#: user_cf_coverage_novelty) PLUS doc_winnow_fingerprints and
-#: user_sims; demoted 20 multi-round-green rows in exchange plus the
-#: two permanently-``no_oracle`` rows (sequential_topk, als_topk —
-#: their correctness lives in pytest goldens/NumPy twins regardless of
-#: tier, and their bench slots are tier-independent, so keeping them
-#: registered only burned 2 of the driver's 50 oracle slots).  After
-#: the round-5 driver run every oracled query has had a driver-green
-#: row in at least one round (r1–r5 union, verified against
-#: CORRECTNESS_r0{1..4}.json).
-#:
-#: Round 6 (EXECUTED this round): promoted the 21 round-5-born queries
-#: that had never had a driver row (multimodal_ppm_resize,
-#: multimodal_wav_features, events_stream_quantile_sketch,
-#: doc_duplicate_spans, doc_dedup_cut, embedding_knn_pq,
-#: embedding_knn_ivfpq, neardup_group_keepers, corpus_train_ready,
-#: corpus_pps_sample, corpus_splits, doc_bigram_logprob,
-#: embedding_semdedup, top_tokens_cms, events_in_anomaly_windows,
-#: events_dau_wau_stickiness, order_ship_latency, doc_zipf_fit,
-#: item_graph_triangles, brand_region_market_share, doc_readability);
-#: demoted in exchange 21 rows that earned their FIRST driver-green in
-#: CORRECTNESS_r05 (the 20 analytics/pipeline rows promoted in r5 plus
-#: doc_winnow_fingerprints — all now recency ≤ 1 round).
-#:
-#: ROTATION-LATENCY AUDIT (r6, VERDICT r5 #8).  Measured driver-row
-#: recency after the r6 window runs (rounds since last green row,
-#: from CORRECTNESS_r01–r05 + the r6 registration):
-#:   recency 0: 50 (the r6 registered window)
-#:   recency 1: 21 (demoted this round, green r5)
-#:   recency 2: 19 (green r4; was 20 before the merge below)
-#:   recency 3: 11 (green r3 — the q1/q3/q5 relational tier + item_sims)
-#:   never: 4 (sequential_topk + als_topk no-oracle BY DESIGN;
-#:             multimodal_video_frames + embedding_semdedup_scale
-#:             r6-born, queued at the r7 head)
-#: Steady-state arithmetic: after the merge below AND the twelve new
-#: r6-born queries (video frames, scale SemDeDup, BPE pairs,
-#: temperature weights, char entropy, streamed user CMS, winsorize,
-#: target encoding, robust scaler, popularity + random baselines,
-#: k-anonymity), the oracled count is 113 / 50-row window =
-#: 2.26-round cycle — a deliberate breadth-vs-latency trade this
-#: round.  Actions taken: (a) doc_token_stats was MERGED into
-#: doc_quality_scores (same per-doc grain, one scan — the r3
-#: user_sims merge pattern); (b) the r7 plan below promotes ALL 30
-#: recency ≥2 rows plus the never-born r6 queries (38 ≤ 50 budget),
-#: restoring max recency ≤ 2 after r7; (c) two further same-grain
-#: merges are staged for AFTER their members' driver rows land:
-#: doc_bigram_logprob → doc_unigram_logprob (both (doc_id, logprob);
-#: bigram lands r6) and doc_readability → doc_quality_scores (per-doc
-#: scores; lands r6); further merge candidates if latency matters
-#: more than row identity: doc_char_entropy → doc_quality_scores
-#: (per-doc), events_value_normalized + events_user_target_encoding
-#: (per-fact feature columns).
-#:
-#: Round 7 (EXECUTED this round): the pre-staged plan ran verbatim —
-#: promoted the 13 never-driver-row queries (item_sims + the twelve
-#: r6-born), the 10 remaining recency-3 rows (green r3), all 19
-#: recency-2 rows (green r4), and filled the last 8 window slots with
-#: the oldest recency-1 rows (green r5) — doc_unigram_logprob first,
-#: because the staged doc_bigram_logprob merge (executed in the same
-#: commit, with doc_readability → doc_quality_scores) gave it new
-#: bigram columns that deserve an immediate driver row.  The 48 rows
-#: green in CORRECTNESS_r06 rotated out in exchange.  Tier routing is
-#: now CENTRAL (see REGISTERED_WINDOW below): future rotations edit
-#: one tuple instead of ~100 decorator call sites.
-#:
-#: Post-r7 audit (recency = rounds since last driver-green row,
-#: assuming the r7 window runs green):
-#:   recency 0: 50 (the window below)
-#:   recency 1: 46 (the r6-green rows demoted this round, minus the
-#:                  two merged-away names)
-#:   recency 2: 15 (green r5, not re-promoted this round — the
-#:                  cf_negative_samples/linkage/analytics tier)
-#:   never: 2 no-oracle BY DESIGN (sequential_topk + als_topk) + the
-#:          4 r7-born oracled queries (sketch scaler, recall audit,
-#:          skew audit, dhash dedup — at the staged r8 window head)
-#: Steady state: 115 oracled (111 post-merge + 4 r7-born) / 50-row
-#: window = 2.3-round cycle — at the ~115 ceiling VERDICT r6 #8 set;
-#: no further registry entries without a matching merge.  Staged
-#: merges that pull it back (~112) once their members' r7 rows land:
-#: doc_char_entropy → doc_quality_scores (per-doc),
-#: events_value_normalized + events_user_target_encoding +
-#: events_value_normalized_sketch (per-fact feature columns — the
-#: sketch twin shares the winsorize grain, so one merged row can
-#: certify all three after each earns its own driver row first).
-#:
-#: Round 8 (EXECUTED this round): verified CORRECTNESS_r07 50/50 green
-#: first, then the pre-staged plan ran with one staged-merge
-#: adjustment — doc_char_entropy → doc_quality_scores EXECUTED (both
-#: members' r7 rows landed green; the entropy columns now ride the
-#: doc_quality_scores row), so the merged doc_quality_scores takes a
-#: window slot for an immediate driver row on its new columns (the r7
-#: doc_unigram_logprob precedent) and 32 (not 33) recency-1 rows fill
-#: the remainder.  Window = 4 r7-born never-row queries + the 13
-#: recency-2 rows green r5 + merged doc_quality_scores + 32 green-r6
-#: flagships (ANN ×8, neardup ×5, spans/cut, pipeline ×5, CF axis ×7,
-#: streamed sketch + CMS top-k + triangles + join-depth stress + WAV
-#: decode).  The feature-trio merge (events_value_normalized +
-#: events_user_target_encoding + events_value_normalized_sketch → one
-#: per-fact feature row) stays STAGED until the sketch twin's r8 row
-#: lands — execute in r9.
-#:
-#: Post-r8 audit (recency = rounds since last driver-green row,
-#: assuming the r8 window runs green):
-#:   recency 0: 50 (the window below)
-#:   recency 1: 48 (the r7-green rows demoted this round, minus
-#:                  doc_quality_scores kept + doc_char_entropy merged
-#:                  away)
-#:   recency 2: 16 (green r6, not re-promoted this round:
-#:                  decontaminate_docs, doc_bm25_search,
-#:                  doc_repetition_scores, doc_simhash, doc_zipf_fit,
-#:                  event_ratings_projection, events_dau_wau_stickiness,
-#:                  events_in_anomaly_windows, events_prev_gap,
-#:                  events_purchase_view_join, multimodal_ppm_resize,
-#:                  order_ship_latency, sales_rollup,
-#:                  seq_baskets_periods, seq_rule_support,
-#:                  seq_sequences)
-#:   never: 2 no-oracle BY DESIGN (sequential_topk + als_topk) + any
-#:          r8-born queries (image_dhash_near_pairs,
-#:          lineitem_bloom_semijoin, events_join_explosion_audit,
-#:          events_user_temporal_split), staged at the r9 window head
-#: Steady state: 118 oracled (115 r7-end − 1 entropy merge + 4 r8-born:
-#: near-pairs, bloom semi-join, join-explosion audit, temporal split)
-#: / 50-row window = 2.4-round cycle — at the ceiling; the staged r9
-#: feature-trio merge pulls back to ~116.  ROTATION PLAN for
-#: round 9 (pre-staged; verify against CORRECTNESS_r08 first): window
-#: = the 4 r8-born queries (image_dhash_near_pairs,
-#: lineitem_bloom_semijoin, events_join_explosion_audit,
-#: events_user_temporal_split) + ALL 16 recency-2 rows above
-#: (mandatory) + 33 of the 48 recency-1 rows, preferring the r7-born
-#: four (their second row certifies stability) and the heavy
-#: analytics/streaming tier; execute the feature-trio merge in the
-#: same commit once CORRECTNESS_r08 shows the sketch twin green,
-#: pulling the oracled count back to ~113.
-#: Keep sequential_topk / als_topk demoted permanently (no_oracle by
-#: design).  Keep bench=True rows registered or demoted freely — the
-#: bench set is independent of the correctness window.
-#:
-#: Round 9 (EXECUTED this round): verified CORRECTNESS_r08 50/50 green
-#: first, then the pre-staged plan ran with the TWO staged merges
-#: executed in the same commit:
-#:   (a) feature trio — events_value_normalized +
-#:       events_user_target_encoding + events_value_normalized_sketch
-#:       → events_value_features (one per-fact row, 14 columns; the
-#:       standalone functions stay library API);
-#:   (b) ANN family — embedding_knn_bruteforce + embedding_knn_int8 →
-#:       embedding_knn_exact and embedding_knn_ivf +
-#:       embedding_knn_ivf_int8 + embedding_knn_pq +
-#:       embedding_knn_ivfpq → embedding_knn_indexed (tagged unions on
-#:       the shared (query_id, match_id, sim, rank) grain; every
-#:       variant's oracle slice is value-checked exactly as before).
-#:       embedding_knn_bruteforce / embedding_knn_ivf remain
-#:       registered as ORACLE-LESS BENCH CARRIERS (never windowed —
-#:       the bench set is pinned by name across rounds); their
-#:       correctness rides the merged rows, which call the identical
-#:       library functions.
-#: Window = 4 r8-born + all 16 mandatory recency-2 + the 3 merged
-#: rows (immediate driver rows, the doc_unigram_logprob precedent) +
-#: 27 of the 46 surviving recency-1 rows.
-#:
-#: Post-r9 audit (recency = rounds since last driver-green row,
-#: assuming the r9 window runs green):
-#:   recency 0: 50 (the window below)
-#:   recency 1: 43 (the r8 window minus the 7 merged-away oracled
-#:                  names: the sketch twin + six knn variants)
-#:   recency 2: 19 (green r7, not re-promoted this round — mandatory
-#:                  in r10: corpus_pack, corpus_samples,
-#:                  customer_k_anonymity, customer_running_revenue,
-#:                  customer_semi_anti_joins, doc_chunks,
-#:                  doc_stats_by_lang, doc_url_domains, events_daily,
-#:                  itemmean_rmse_mae, multimodal_features_frames,
-#:                  order_customer_set_ops, order_priority_pivot,
-#:                  part_price_median_by_brand, rating_stats_per_user,
-#:                  sales_cube, top_orders_per_customer, top_tokens,
-#:                  user_cf_coverage_novelty)
-#:   never: 2 no-oracle BY DESIGN (sequential_topk + als_topk) + any
-#:          r9-born queries (staged at the r10 window head)
-#: Steady state: 116 oracled (118 − 2 trio-merge − 4 knn-merge + the
-#: 4 r9-born: dedup_cap_audit + the three bounded-task window twins)
-#: / 50-row window = 2.32-round cycle — under the 2.4 ceiling but
-#: close; the staged merges below pull it back.
-#: ROTATION PLAN for round 10 (pre-staged; verify against
-#: CORRECTNESS_r09 first): window = any r9-born queries
-#: (dedup_cap_audit; events_sessions_chunked,
-#: customer_running_revenue_chunked and events_prev_gap_chunked —
-#: the bounded-task window twins
-#: sharing their plain forms' oracles; note
-#: customer_running_revenue's oracle migrated to DECIMAL money
-#: arithmetic in r9, so its mandatory recency-2 slot doubles as the
-#: first driver row of the new semantics) + ALL 19
-#: recency-2 rows above (mandatory) +
-#: ~24 of the 43 recency-1 rows, preferring the heavy
-#: analytics/streaming tier and the r8-born four (their second row
-#: certifies stability).  STAGED MERGE for r10 (execute once both
-#: members' r9 rows land green): popularity_topk + random_topk →
-#: one baseline_topk row with a variant tag — both share the
-#: (user_id, item_id, score, rank) grain and exist purely as ranking
-#: baselines; pulls oracled 116 → 115.  FURTHER STAGED (execute in r10 or
-#: r11 once each twin's first driver row lands green): merge each
-#: bounded-task window twin with its plain form as ONE variant-tagged
-#: row (identical grain and columns by construction — a 'variant'
-#: column distinguishes plain/chunked and the shared oracle stays,
-#: replayed once per variant tag): events_sessions(+_chunked),
-#: customer_running_revenue(+_chunked), events_prev_gap(+_chunked) —
-#: pulls oracled to 112 and certifies both plans in one slot
-#: forever.  Rejected merge candidates,
-#: for the record: the neardup trio (minhash/ngram/simhash) shares
-#: the pair grain but minhash_lsh is a BENCH row whose timing line
-#: must stay attributable, and jaccard-vs-hamming value columns
-#: would union awkwardly; corpus_pps_sample + corpus_mixture_sample
-#: differ in grain (per-doc sample vs per-source rate).
-#:
-#: Round 10 (EXECUTED this round): verified CORRECTNESS_r09 50/50
-#: green first (zero err), then the pre-staged plan ran verbatim:
-#: window = the 4 r9-born queries (dedup_cap_audit + the three
-#: bounded-task window twins; customer_running_revenue's mandatory
-#: slot doubles as the first driver row of the r9 DECIMAL money
-#: semantics) + ALL 19 mandatory recency-2 rows + the staged
-#: baseline_topk merge EXECUTED in this commit (popularity_topk +
-#: random_topk -> one variant-tagged row on the (variant, user_id,
-#: item_id, score, rank) grain; both members landed green r9, the
-#: precondition held; oracled 116 -> 115) + 26 of the 43 recency-1
-#: rows, preferring the heavy analytics/streaming tier
-#: (corpus_train_ready, hybrid_topk, the neardup family, the CF eval
-#: family, stream quantile sketch, skew/DQ audits).
-#:
-#: Post-r10 audit (recency = rounds since last driver-green row,
-#: assuming the r10 window runs green):
-#:   recency 0: 50 (the window below)
-#:   recency 1: 48 (the r9 window minus the 2 merged-away names
-#:                  popularity_topk / random_topk)
-#:   recency 2: 17 (green r8, not re-promoted this round — mandatory
-#:                  in r11: brand_region_market_share,
-#:                  cf_negative_samples, corpus_line_dedup,
-#:                  corpus_mixture_sample, corpus_pps_sample,
-#:                  corpus_splits, corpus_vocab,
-#:                  customer_name_fuzzy_pairs, customer_rfm_segments,
-#:                  doc_dedup_cut, doc_duplicate_spans,
-#:                  doc_quality_scores, events_daily_dense,
-#:                  multimodal_image_dhash_dedup,
-#:                  multimodal_wav_features, top_tokens_cms,
-#:                  user_value_scd2)
-#:   never: 2 no-oracle BY DESIGN (sequential_topk + als_topk) + the
-#:          oracle-less bench carriers + the 4 r10-born names
-#:          (embedding_hard_negatives, orders_rolling_7d_revenue +
-#:          its ghost-replica bounded-task twin
-#:          orders_rolling_7d_revenue_chunked sharing the same oracle,
-#:          events_attribution_last_touch — each sf0.01 AND sf0.1
-#:          oracle-parity-verified at birth, planted-fixture +
-#:          hypothesis pytests in tests/test_r10_queries.py, the twin
-#:          crossover measured in stress/rolling_twin_stress.py;
-#:          staged at the r11 head)
-#: Steady state: 119 oracled (115 + 4 r10-born) / 50-row window =
-#: 2.38-round cycle — at the ceiling; the three executed twin merges
-#: below pull back to 2.32 and the rolling pair's own merge (r12)
-#: to 2.30.
-#:
-#: Round 11 (EXECUTED this round): verified CORRECTNESS_r10 50/50
-#: green first (zero err), then the pre-staged plan ran verbatim:
-#: window = the 4 r10-born queries (embedding_hard_negatives,
-#: orders_rolling_7d_revenue + its ghost-replica twin
-#: orders_rolling_7d_revenue_chunked, events_attribution_last_touch)
-#: + ALL 17 mandatory recency-2 rows + the THREE twin variant merges
-#: EXECUTED in this commit (precondition held — every member
-#: driver-green by r10): events_sessions(+_chunked),
-#: customer_running_revenue(+_chunked), events_prev_gap(+_chunked)
-#: each became ONE variant-tagged row keeping the PLAIN name
-#: ((variant, ...) grain, shared oracle replayed once per tag — the
-#: baseline_topk precedent; oracled 119 -> 116, cycle 2.32); the
-#: three merged rows take window slots for immediate driver rows on
-#: their new variant columns + 26 of the 46 surviving recency-1 rows,
-#: preferring the tiers r10 skipped (the r9-merged trio's second
-#: rows, the r8-born four's second rows, the ANN/embedding family,
-#: the seq trio, TPC-H q1/q3/q5, multimodal decode, streaming CMS,
-#: the as-of family — companions to this round's asof twin work).
-#:
-#: Post-r11 audit (recency = rounds since last driver-green row,
-#: assuming the r11 window runs green):
-#:   recency 0: 50 (the window below)
-#:   recency 1: 46 (the r10 window minus the 3 merged-away chunked
-#:                  names minus embedding_knn_recall_audit, re-promoted
-#:                  this round for its r11-changed variant grain)
-#:   recency 2: 21 (green r9, not re-promoted this round — mandatory
-#:                  in r12: item_pagerank — displaced by the
-#:                  re-promoted recall audit — plus cf_predictions,
-#:                  corpus_bpe_pair_counts,
-#:                  corpus_lang_temperature_weights,
-#:                  decontaminate_docs, dedup_docs, doc_bm25_search,
-#:                  doc_pii_scrub, doc_repetition_scores, doc_simhash,
-#:                  doc_unigram_logprob, doc_winnow_fingerprints,
-#:                  doc_zipf_fit, event_ratings_projection,
-#:                  events_dau_wau_stickiness,
-#:                  events_in_anomaly_windows, events_json_props,
-#:                  events_value_robust_scaled, neardup_dedup_docs,
-#:                  order_ship_latency, sales_rollup)
-#:   never: 2 no-oracle BY DESIGN (sequential_topk + als_topk) + the
-#:          oracle-less bench carriers + the 5 r11-born queries
-#:          (staged at the r12 window head, each born with
-#:          sf0.001+sf0.01+sf0.1 oracle parity):
-#:          embedding_hard_negatives_ivf (filter-aware IVF — its PLAN
-#:          is already driver-certified this round through the
-#:          windowed recall audit's 'hard_neg_ivf' variant, whose
-#:          oracle splices its SQL verbatim),
-#:          events_attribution_last_touch_chunked (the as-of
-#:          bounded-task twin, plain form's oracle verbatim; crossover
-#:          measured in stress/asof_twin_stress.py),
-#:          events_stream_attribution (stream-stream join +
-#:          exactly-once sink certified against the independent
-#:          quadratic-argmax oracle), and the two correlated-subquery
-#:          shapes q17_small_quantity_revenue / q22_dormant_high_value
-#:          (correlated oracles vs decorrelated Spark plans),
-#:          events_distinct_sketch_rollup (the oracled KMV/Theta
-#:          bottom-k distinct sketch; merge-vs-direct independent
-#:          algorithms), and embedding_hard_negatives_lsh (the
-#:          filter-aware LSH route; its plan driver-certified via the
-#:          windowed recall audit's 'hard_neg_lsh' variant).
-#: Steady state: 123 oracled (116 + the 7 r11-born) / 50-row window =
-#: 2.46-round cycle — over the 2.4 ceiling until the
-#: staged merges below execute (the r12 rolling merge brings 120, the
-#: r13 attribution merge 119; the attribution FAMILY is the next
-#: merge frontier: plain/chunked/streaming share one oracle and could
-#: converge on a single 3-variant row by r13, bringing 118).
-#: FURTHER STAGED MERGE for r13 (execute once the chunked twin's and
-#: streaming twin's first driver rows land green in r12; the plain
-#: form's row lands r11): events_attribution_last_touch(+_chunked)
-#: (+ events_stream_attribution if its r12 row is green) -> one
-#: variant-tagged row keeping the plain name.
-#: Round 12 (EXECUTED this round): verified CORRECTNESS_r11 50/50
-#: green first (zero err), then the pre-staged plan ran verbatim:
-#: window = the 7 r11-born queries (embedding_hard_negatives_ivf,
-#: embedding_hard_negatives_lsh, events_attribution_last_touch_chunked,
-#: events_stream_attribution, q17_small_quantity_revenue,
-#: q22_dormant_high_value, events_distinct_sketch_rollup) + ALL 21
-#: mandatory recency-2 rows + the STAGED rolling-pair merge EXECUTED
-#: in this commit (precondition held — both rows driver-green r11):
-#: orders_rolling_7d_revenue(+_chunked) -> ONE variant-tagged row
-#: keeping the plain name ((variant, custkey, orderkey, order_date,
-#: revenue_7d, n_orders_7d) grain, shared ROLLING_7D_REVENUE_SQL
-#: oracle replayed once per tag — the customer_running_revenue
-#: precedent; oracled 123 -> 122); the merged row takes a window slot
-#: for an immediate driver row on its variant columns + 21 of the 45
-#: recency-1 rows, preferring the tiers r11 skipped (heavy
-#: analytics/streaming: hybrid + corpus pipeline, the neardup family,
-#: the CF eval family, stream quantile sketch, skew/DQ/cap audits,
-#: the CF top-k pair + baseline).
-#:
-#: Post-r12 audit (recency = rounds since last driver-green row,
-#: assuming the r12 window runs green):
-#:   recency 0: 50 (the window below)
-#:   recency 1: 48 (the r11 window minus the merged-away
-#:                  orders_rolling_7d_revenue_chunked minus the
-#:                  re-promoted merged plain name — set arithmetic
-#:                  verified against CORRECTNESS_r11 keys)
-#:   recency 2: 24 (green r10, not re-promoted this round — mandatory
-#:                  in r13: corpus_pack, corpus_samples,
-#:                  customer_k_anonymity, customer_semi_anti_joins,
-#:                  doc_chunks, doc_stats_by_lang, doc_url_domains,
-#:                  embedding_knn_lsh, embedding_semdedup,
-#:                  events_anomaly_daily, events_daily, events_funnel,
-#:                  events_transition_matrix, item_cooccurrence_lift,
-#:                  item_graph_triangles, multimodal_features_frames,
-#:                  order_customer_set_ops, order_priority_pivot,
-#:                  part_price_median_by_brand, sales_cube,
-#:                  top_orders_per_customer, top_tokens,
-#:                  user_retention_cohorts, user_sims)
-#:   never: 2 no-oracle BY DESIGN (sequential_topk + als_topk) + the
-#:          oracle-less bench carriers + the 4 r12-born queries
-#:          (staged at the r13 window head, each born with
-#:          sf0.001+sf0.01+sf0.1 oracle parity + an out-of-repo
-#:          vanilla drive):
-#:          orders_rolling_7d_revenue_auto (the SELF-DRIVING twin
-#:          switch — plan-time hot-key audit dispatching through the
-#:          measured crossover table, decision re-derived by the
-#:          oracle; r11 VERDICT #3),
-#:          embedding_hard_negatives_overfetch (the over-fetch
-#:          fallback of filtered ANN with a genuinely non-pushable
-#:          sim-cap predicate + selectivity-aware probe expansion,
-#:          recall 0.87 audited vs the exact miner; r11 VERDICT #5),
-#:          and customer_name_er_matches (the r12 frontier operator:
-#:          multi-pass blocked fuzzy join / entity resolution,
-#:          operators/blocking.py — segment-pigeonhole blocking,
-#:          cap audit, thresholded-levenshtein verify; naive
-#:          quadratic dead at 40k names vs blocked 2M in 15 s with
-#:          zero planted pairs lost, stress/blocked_join_stress.py;
-#:          r11 VERDICT #8), and doc_url_canonical_dedup (URL
-#:          canonicalization + cross-doc dedup keeper election —
-#:          verdict r11 #8's named alternative; every rule exercised
-#:          by planted noise channels and hand-computed pytests).
-#: ROTATION PLAN for round 13 (pre-staged; verify against
-#: CORRECTNESS_r12 first): window = the 4 r12-born queries above
-#: (never-checked names lead every rotation) + ALL 24 recency-2 rows
-#: above (mandatory) + the TWO staged merges EXECUTED in the same
-#: commit, each merged row taking a slot for an immediate driver row
-#: on its variant columns + 21 of the recency-1 rows, preferring
-#: whichever tier r12 skipped.  Suggested 21 (verify against the
-#: CORRECTNESS set arithmetic first — the merge keepers
-#: events_attribution_last_touch / embedding_hard_negatives enter as
-#: their merged rows, not recency-1 picks): embedding_knn_exact,
-#: embedding_knn_indexed, embedding_knn_recall_audit,
-#: embedding_neardup_pairs, embedding_semdedup_scale,
-#: embedding_centroids_by_label, seq_baskets_periods,
-#: seq_rule_support, seq_sequences, q1_pricing_summary,
-#: q3_top_revenue_orders, q5_region_revenue, multimodal_ppm_resize,
-#: multimodal_video_frames, multimodal_wav_features,
-#: multimodal_image_dhash_dedup, events_asof_last_purchase,
-#: events_sliding_1h, events_stream_user_cms,
-#: events_purchase_view_join, item_sims.
-#: CF-metric merge EXECUTED this round alongside the staged rolling
-#: merge (both members driver-green r10): user_cf_rmse_mae absorbed
-#: itemmean_rmse_mae as ONE model-tagged row keeping the first name
-#: ((model, rmse, mae, n_pairs) grain) — oracled 125 -> 124; the
-#: freed window slot re-promotes user_sims.
-#: MERGE PIPELINE to pull the cycle back toward 2.4 (125 oracled is
-#: 2.50 — over the ceiling until these land; each merge keeps the
-#: first-listed name and variant-tags the rest, shared oracles
-#: replayed once per tag):
-#:   r13: events_attribution_last_touch(+_chunked)
-#:        (+ events_stream_attribution if its r12 row is green —
-#:        all three share ATTRIBUTION_SQL verbatim)      125 -> 123
-#:   r13: embedding_hard_negatives(+_ivf)(+_lsh) — identical
-#:        (query_id, query_label, match_id, match_label, sim, rank)
-#:        grain; precondition: exact form green r11, ivf/lsh green
-#:        r12                                            123 -> 121
-#:   r14: fold embedding_hard_negatives_overfetch into the merged
-#:        hard-negative row (same grain, variant 'overfetch';
-#:        precondition: its own r13 driver row green)    121 -> 120
-#: After the pipeline: 120 oracled = 2.40 cycle — at the ceiling;
-#: next merge frontier, in order: the corpus sampling trio
-#: (pps/mixture/splits, one doc grain), dedup_docs +
-#: doc_url_canonical_dedup (both per-doc keeper mappings).
-#: (orders_rolling_7d_revenue_auto stays standalone: its (form,
-#: hot_key_rows, ...) grain carries the dispatch decision as data and
-#: does not union with the merged rolling row's variant grain.)
-#:
-#: Round 13 (EXECUTED this round): verified CORRECTNESS_r12 50/50
-#: green first (zero err), then the pre-staged plan ran with THREE
-#: merges executed in this commit:
-#:   (a) attribution trio — events_attribution_last_touch(+_chunked)
-#:       (+ events_stream_attribution, its r12 row green) -> ONE
-#:       variant-tagged row keeping the plain name ((variant, day,
-#:       ...) grain; the shared ATTRIBUTION_SQL independent-algorithm
-#:       oracle replays once per tag)                     125 -> 123
-#:   (b) hard-negative family — embedding_hard_negatives(+_ivf)(+_lsh)
-#:       (exact green r11; ivf/lsh green r12) -> ONE variant-tagged
-#:       row keeping the first name; unlike (a) each variant keeps
-#:       its OWN oracle slice (exact dot-join / IVF pipeline / LSH
-#:       banding), unioned with tags                      123 -> 121
-#:   (c) sampling decision table — corpus_samples absorbed
-#:       corpus_mixture_sample + corpus_splits (the named next merge
-#:       frontier; all-docs per-doc decision grain shared by all
-#:       three — the doc_quality_scores join-merge precedent; members
-#:       green r10/r11/r11).  Spark side = ONE documents scan + the
-#:       O(sources) broadcast rate join; oracle = the three former
-#:       standalone SQLs replayed verbatim as CTEs joined on doc_id.
-#:       corpus_pps_sample stays standalone (FILTERED sample grain,
-#:       not an all-docs decision row)                    121 -> 119
-#: Window = the 4 r12-born queries (orders_rolling_7d_revenue_auto,
-#: embedding_hard_negatives_overfetch, customer_name_er_matches,
-#: doc_url_canonical_dedup) + ALL 23 mandatory recency-2 rows (the
-#: r12 audit's list minus user_sims, which the r12 metric-merge slot
-#: re-promoted and which went green r12 — set arithmetic verified
-#: against CORRECTNESS_r01..r12 keys by script this round; the merged
-#: corpus_samples takes its own mandatory slot for an immediate
-#: driver row on its new columns) + the 2 other merged rows
-#: (events_attribution_last_touch, embedding_hard_negatives — the
-#: doc_unigram_logprob immediate-row precedent) + the 21 suggested
-#: recency-1 rows verbatim.
-#:
-#: Post-r13 audit (recency = rounds since last driver-green row,
-#: assuming the r13 window runs green):
-#:   recency 0: 50 (the window below)
-#:   recency 1: 44 (the r12 window minus the 4 merged-away names that
-#:                  were green r12: events_attribution_last_touch_chunked,
-#:                  events_stream_attribution,
-#:                  embedding_hard_negatives_ivf,
-#:                  embedding_hard_negatives_lsh — their plans now
-#:                  certify through the merged variant rows; minus the
-#:                  two merge keepers re-promoted this round)
-#:   recency 2: 23 (green r11, not re-promoted this round — mandatory
-#:                  in r14, verified by script against the
-#:                  CORRECTNESS_r01..r12 keys + this window:
-#:                  brand_region_market_share,
-#:                  cf_negative_samples, content_topk_cosine,
-#:                  corpus_line_dedup, corpus_pps_sample, corpus_vocab,
-#:                  customer_name_fuzzy_pairs, customer_rfm_segments,
-#:                  customer_running_revenue, doc_dedup_cut,
-#:                  doc_duplicate_spans, doc_quality_scores,
-#:                  events_daily_dense, events_join_explosion_audit,
-#:                  events_prev_gap, events_sessions,
-#:                  events_user_temporal_split, events_value_features,
-#:                  events_value_quantile_sketch,
-#:                  image_dhash_near_pairs, lineitem_bloom_semijoin,
-#:                  top_tokens_cms, user_value_scd2 — plus the two
-#:                  merged-away recency-1 names corpus_mixture_sample
-#:                  / corpus_splits REMOVED from every pool)
-#: Steady state: 119 oracled (125 − 2 attribution − 2 hard-neg − 2
-#: sampling) + 1 r13-born (dedup_incremental, the stored-corpus
-#: incremental dedup frontier) = 120 / 50-row window = 2.40-round
-#: cycle — AT the ceiling, back from r12's 2.50.
-#: ROTATION PLAN for round 14 (pre-staged; verify against
-#: CORRECTNESS_r13 first): window = any r13-born queries
-#: (dedup_incremental) + ALL mandatory recency-2 rows (recompute the
-#: list above against CORRECTNESS_r13 keys — embedding_centroids_by_label
-#: is windowed this round and leaves it) + the staged r14 merges
-#: below, each merged row taking a slot for an immediate driver row +
-#: recency-1 fill.  STAGED MERGES for r14 (execute once
-#: preconditions hold, i.e. every member has a driver-green row):
-#:   (a) fold embedding_hard_negatives_overfetch into the merged
-#:       embedding_hard_negatives row as variant 'overfetch' (same
-#:       grain by its docstring; precondition: its r13 row green)
-#:                                                        120 -> 119
-#:   (b) dedup_docs + doc_url_canonical_dedup -> one variant-tagged
-#:       per-doc keeper-mapping row keeping the dedup_docs name
-#:       (precondition: the URL row's r13 driver row green; check
-#:       column grains union cleanly — both map doc_id -> keeper)
-#:                                                        119 -> 118
-#: Rejected merge candidates, for the record:
-#: orders_rolling_7d_revenue_auto (dispatch-decision grain, see
-#: above); corpus_pps_sample into corpus_samples (filtered-sample
-#: grain vs all-docs decision grain).
-#:
-#: Round 14 (EXECUTED this round): verified CORRECTNESS_r13 50/50
-#: green first (zero err, checked by the recency script against
-#: r01..r13), then the pre-staged plan ran verbatim with BOTH staged
-#: merges executed in this commit:
-#:   (a) embedding_hard_negatives_overfetch -> variant 'overfetch' of
-#:       the merged embedding_hard_negatives row (same grain; its own
-#:       r13 driver row green; the overfetch oracle slice — deep-fetch
-#:       IVF + sim-cap post-filter — joins the per-variant UNION)
-#:                                                        120 -> 119
-#:   (b) dedup_docs + doc_url_canonical_dedup -> ONE variant-tagged
-#:       per-doc keeper-mapping row keeping the dedup_docs name
-#:       ((variant, doc_id, dup_key, keeper_doc_id, n_group_docs,
-#:       is_dup) grain; variants exact/normalized/url_canonical; the
-#:       URL row's r13 driver row green; Spark side = ONE documents
-#:       scan -> melt -> ONE window shuffle, fewer shuffles than the
-#:       standalone pair)                                 119 -> 118
-#: Window = dedup_incremental (r13-born frontier, first driver row) +
-#: ALL 23 mandatory recency-2 rows (recomputed by script against
-#: CORRECTNESS_r01..r13: the r13 audit list verbatim) + the 2 merged
-#: keepers (immediate driver row on their new variant columns — the
-#: doc_unigram_logprob precedent) + 24 recency-1 picks (CF/eval
-#: family, neardup family, corpus/train-ready family, q17/q22,
-#: item_pagerank, hybrid_topk).
-#: Post-r14 audit (recency = rounds since last driver-green row,
-#: assuming the r14 window runs green):
-#:   recency 0: 50 (the window below)
-#:   recency 1: 23 (the r13 window minus the 2 merged-away names
-#:                  green r13 — embedding_hard_negatives_overfetch,
-#:                  doc_url_canonical_dedup — minus the 25 window
-#:                  names re-promoted this round)
-#:   recency 2: 21 (green r12, not re-promoted this round — mandatory
-#:                  in r15: corpus_lang_temperature_weights,
-#:                  dedup_cap_audit, doc_bm25_search,
-#:                  doc_repetition_scores, doc_simhash,
-#:                  doc_unigram_logprob, doc_winnow_fingerprints,
-#:                  doc_zipf_fit, event_ratings_projection,
-#:                  events_dau_wau_stickiness,
-#:                  events_distinct_sketch_rollup, events_dq_audit,
-#:                  events_in_anomaly_windows, events_json_props,
-#:                  events_key_skew_audit,
-#:                  events_stream_quantile_sketch,
-#:                  events_value_robust_scaled, order_ship_latency,
-#:                  orders_rolling_7d_revenue, rating_stats_per_user,
-#:                  sales_rollup)
-#: Steady state: 118 oracled post-merge + 2 r14-born oracled rows
-#: (corpus_bpe_encode — the fixed-merge-list encoder, closing r13
-#: VERDICT missing #2; embedding_knn_stored — stored-index serve,
-#: VERDICT #6) = 120 / 50-row window = 2.40-round cycle — AT the
-#: ceiling.
-#: ROTATION PLAN for round 15 (pre-staged; verify against
-#: CORRECTNESS_r14 first): window = r14-born queries
-#: (corpus_bpe_encode, embedding_knn_stored — first driver rows) +
-#: ALL 21 mandatory recency-2 rows above (recompute against
-#: CORRECTNESS_r14 keys) + the staged r15 merges below + recency-1
-#: fill.  STAGED MERGES for r15 (execute once preconditions hold,
-#: i.e. every member has a driver-green row):
-#:   (a) corpus_bpe_encode + corpus_bpe_pair_counts -> one
-#:       variant-tagged BPE row keeping the corpus_bpe_pair_counts
-#:       name is NOT clean (different grains: per-doc token array vs
-#:       per-pair counts) — instead fold corpus_bpe_encode INTO the
-#:       corpus token/vocab family only if its r14+r15 rows prove the
-#:       grain stable; otherwise the default partner is
-#:       (b)'s slot.  Precondition: corpus_bpe_encode driver-green
-#:       r15.                                              120 -> 119
-#:   (b) embedding_knn_stored + embedding_knn_indexed -> one
-#:       variant-tagged indexed-ANN row keeping the
-#:       embedding_knn_indexed name (same (query_id, match_id, sim,
-#:       rank [+ variant]) grain family: 'ivf'/'pq'/'ivfpq' variants
-#:       already share it; 'stored' = the same IVF arithmetic read
-#:       back from parquet).  Precondition: embedding_knn_stored
-#:       driver-green r15.                                 119 -> 118
-#: (If (a)'s grain check fails, (b) alone holds the ceiling at 119
-#: with one more merge from the named frontier: dedup_cap_audit into
-#: the caps family.)
-
-#: THE driver-facing correctness window for this round — exactly the
-#: names whose QuerySpec lands in QUERIES; every other registration
-#: lands in DEMOTED regardless of which decorator the def site uses.
-#: Rotations edit THIS tuple (and the audit comment above) only.
+#: THE driver-facing correctness window: exactly the names whose
+#: QuerySpec lands in QUERIES; every other registration lands in
+#: DEMOTED.  Rotations edit this set only.
 REGISTERED_WINDOW: frozenset[str] = frozenset({
-    # r13-born, never had a driver row (1) — never-checked names lead
-    "dedup_incremental",
-    # merged this round — each variant-tagged row deserves an
-    # immediate driver row on its new variant columns (2)
-    "embedding_hard_negatives",
-    "dedup_docs",
-    # recency 2 — green r11, skipped in r12/r13 (23, mandatory;
-    # recomputed by script against CORRECTNESS_r01..r13)
+    "baseline_topk",
     "brand_region_market_share",
     "cf_negative_samples",
+    "cf_predictions",
     "content_topk_cosine",
+    "corpus_bpe_pair_counts",
+    "corpus_clean",
     "corpus_line_dedup",
     "corpus_pps_sample",
+    "corpus_train_ready",
     "corpus_vocab",
     "customer_name_fuzzy_pairs",
     "customer_rfm_segments",
     "customer_running_revenue",
+    "decontaminate_docs",
+    "dedup_docs",
+    "dedup_incremental",
     "doc_dedup_cut",
     "doc_duplicate_spans",
+    "doc_pii_scrub",
     "doc_quality_scores",
+    "embedding_hard_negatives",
     "events_daily_dense",
     "events_join_explosion_audit",
     "events_prev_gap",
@@ -697,23 +101,11 @@ REGISTERED_WINDOW: frozenset[str] = frozenset({
     "events_user_temporal_split",
     "events_value_features",
     "events_value_quantile_sketch",
-    "image_dhash_near_pairs",
-    "lineitem_bloom_semijoin",
-    "top_tokens_cms",
-    "user_value_scd2",
-    # recency 1 — green r12, demoted r13 (24 picks: CF/eval family,
-    # neardup family, corpus/train-ready family, q17/q22, pagerank,
-    # hybrid flagship)
-    "baseline_topk",
-    "cf_predictions",
-    "corpus_bpe_pair_counts",
-    "corpus_clean",
-    "corpus_train_ready",
-    "decontaminate_docs",
-    "doc_pii_scrub",
     "hybrid_topk",
+    "image_dhash_near_pairs",
     "item_pagerank",
     "item_topk_cosine",
+    "lineitem_bloom_semijoin",
     "neardup_components",
     "neardup_dedup_docs",
     "neardup_group_keepers",
@@ -722,12 +114,14 @@ REGISTERED_WINDOW: frozenset[str] = frozenset({
     "neardup_simhash",
     "q17_small_quantity_revenue",
     "q22_dormant_high_value",
+    "top_tokens_cms",
     "user_cf_coverage_novelty",
     "user_cf_cv5_rmse",
     "user_cf_ranking_eval",
     "user_cf_rmse_mae",
     "user_sims",
     "user_topk_cosine",
+    "user_value_scd2",
 })
 
 
@@ -735,11 +129,10 @@ def register(name: str, oracle: str | None = None, bench: bool = False):
     """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under
     ``name``.
 
-    Since r7 the correctness TIER is routed centrally by
-    ``REGISTERED_WINDOW`` membership, not by which decorator the def
-    site uses — the two decorator names are aliases kept so def sites
-    read naturally and new queries need no registry edit (a name not
-    in the window lands DEMOTED, i.e. staged for the next rotation)."""
+    The correctness tier is routed by ``REGISTERED_WINDOW`` membership:
+    a name in the window lands in QUERIES, any other in DEMOTED, so a
+    new query needs no registry edit and a rotation touches no def
+    site."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in QUERIES or name in DEMOTED:
@@ -749,11 +142,6 @@ def register(name: str, oracle: str | None = None, bench: bool = False):
         return fn
 
     return deco
-
-
-#: alias — tier routing is central (see :func:`register`); kept so def
-#: sites can still document their historical tier intent
-register_demoted = register
 
 
 def oracle_of(name: str) -> str:

@@ -18,13 +18,13 @@ from pyspark.sql import functions as F
 from ..functions.rounding import qround
 
 from ..sources.readers import table
-from .registry import register, register_demoted
+from .registry import register
 
 R6 = 6  # float output rounding (both engines) for stable hashing
 
 
 # --- TPC-H-style aggregation: filters (P3) + group agg (A1/A10) ------------
-@register_demoted(
+@register(
     "q1_pricing_summary",
     bench=True,
     oracle="""
@@ -68,7 +68,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- 3-table join + top-k (J1 + T3) ----------------------------------------
-@register_demoted(
+@register(
     "q3_top_revenue_orders",
     bench=True,
     oracle="""
@@ -119,7 +119,7 @@ def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- 6-table snowflake join (J1-J3) ----------------------------------------
-@register_demoted(
+@register(
     "q5_region_revenue",
     bench=True,
     oracle="""
@@ -184,7 +184,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q17_BRAND = "Brand#13"
 
 
-@register_demoted(
+@register(
     "q17_small_quantity_revenue",
     oracle=f"""
 SELECT CAST(count(*) AS BIGINT) AS n_lines,
@@ -241,7 +241,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q22_DORMANT_SINCE = "2000-01-01"
 
 
-@register_demoted(
+@register(
     "q22_dormant_high_value",
     oracle=f"""
 SELECT c_mktsegment,
@@ -300,7 +300,7 @@ def q22_dormant_high_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- SQL window functions: per-group top-k (T2/T3 relational form) ---------
-@register_demoted(
+@register(
     "top_orders_per_customer",
     oracle="""
 SELECT o_custkey, o_orderkey, o_totalprice, rn
@@ -330,7 +330,7 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- semi + anti joins (E1/J5) ---------------------------------------------
-@register_demoted(
+@register(
     "customer_semi_anti_joins",
     oracle="""
 SELECT 'no_orders_since_1998' AS set_name, c_custkey
@@ -430,7 +430,7 @@ def sales_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- pivot -----------------------------------------------------------------
-@register_demoted(
+@register(
     "order_priority_pivot",
     oracle="""
 SELECT o_orderstatus,
@@ -466,7 +466,7 @@ def order_priority_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- time bucketing (W1/W2) ------------------------------------------------
-@register_demoted(
+@register(
     "events_daily",
     oracle="""
 SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day_start,
@@ -498,7 +498,7 @@ def events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- JSON extraction (L5) --------------------------------------------------
-@register_demoted(
+@register(
     # rotation r5: driver-green r1-r4; slot freed for never-checked queries
     "events_json_props",
     oracle="""
@@ -626,8 +626,8 @@ def events_prev_gap_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per member unchanged — plain is the one-shuffle
     per-user window, chunked bounds every task at one user-day (the
-    hot-key straggler answer, stress-measured in
-    stress/sessions_skew_stress.py)."""
+    hot-key straggler answer, measured in PERF.md, "Sessionization
+    hot-user straggler")."""
     cols = ["event_id", "user_id", "gap_s"]
     plain = events_prev_gap(spark, sf_dir).select(
         F.lit("plain").alias("variant"), *cols
@@ -723,7 +723,8 @@ def events_sessions_chunked(
     ``Window.partitionBy(user_id)`` sorts a user's WHOLE timeline in
     one task, so a single bot user with 10⁸ events becomes an
     hours-long straggler (measured 1.73× on 5M rows with one 2M-event
-    user — stress/sessions_skew_stress.py; events_key_skew_audit's
+    user — PERF.md, "Sessionization hot-user straggler";
+    events_key_skew_audit's
     skew_ratio ≫ n_partitions is the tell to switch to this twin).
 
     Two-phase shape: (1) sessionize WITHIN (user, time-chunk) — the
@@ -805,7 +806,7 @@ def events_sessions_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per member unchanged — chunked bounds every window
     task at one user-day and merges boundary-spanning sessions on the
     tiny per-chunk summary relation (1.73× measured on a 2M-event hot
-    user, stress/sessions_skew_stress.py)."""
+    user, PERF.md "Sessionization hot-user straggler")."""
     cols = ["user_id", "n_sessions", "n_events"]
     plain = events_sessions(spark, sf_dir).select(
         F.lit("plain").alias("variant"), *cols
@@ -817,7 +818,7 @@ def events_sessions_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- exact median / quantiles ---------------------------------------------
-@register_demoted(
+@register(
     "part_price_median_by_brand",
     oracle="""
 SELECT p_brand,
@@ -841,7 +842,7 @@ def part_price_median_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- set operations (E1-E5) ------------------------------------------------
-@register_demoted(
+@register(
     "order_customer_set_ops",
     oracle="""
 SELECT 'with_orders_no_f' AS set_name, count(*) AS n FROM (
@@ -899,7 +900,7 @@ KNOWN_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 _KNOWN_SQL = "(" + ", ".join(f"'{t}'" for t in KNOWN_EVENT_TYPES) + ")"
 
 
-@register_demoted(
+@register(
     "events_dq_audit",
     oracle=f"""
 SELECT CAST(count(*) AS BIGINT) AS n_rows,
@@ -1116,7 +1117,7 @@ K_ANON = 5
 ACCTBAL_BUCKET = 2000.0
 
 
-@register_demoted(
+@register(
     "customer_k_anonymity",
     oracle=f"""
 WITH q AS (
@@ -1212,7 +1213,7 @@ CROSS JOIN (
 """.strip()
 
 
-@register_demoted(
+@register(
     "events_key_skew_audit",
     oracle="\nUNION ALL\n".join(
         _skew_audit_col_sql(c) for c in SKEW_AUDIT_KEYS
@@ -1340,7 +1341,7 @@ CROSS JOIN (
 """.strip()
 
 
-@register_demoted(
+@register(
     "events_join_explosion_audit",
     oracle="\nUNION ALL\n".join(
         _explosion_join_sql(n, l, r) for n, l, r in EXPLOSION_AUDIT_JOINS

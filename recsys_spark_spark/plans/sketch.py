@@ -24,7 +24,7 @@ from ..operators.sketches import (
     merge_histograms,
 )
 from ..sources.readers import table
-from .registry import oracle_of, register, register_demoted
+from .registry import oracle_of, register
 
 _QS = (0.5, 0.9, 0.99)
 
@@ -37,7 +37,7 @@ _W_D = f"CAST({HIST_W} AS DOUBLE)"
 _EST = f"{_LO_D} + {_W_D} * c.bin + {_W_D} * (c.rq - h.cum_prev) / h.n"
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "events_value_quantile_sketch",
     oracle=f"""
@@ -244,7 +244,7 @@ LIMIT {k}
 """.strip()
 
 
-@register_demoted("events_stream_user_cms", oracle=_stream_user_cms_sql())
+@register("events_stream_user_cms", oracle=_stream_user_cms_sql())
 def events_stream_user_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{k} heavy USERS by Count-Min estimate where the counter grid
     is maintained STREAMING-side (new r6 — the second driver-oracled
@@ -316,7 +316,7 @@ def events_stream_user_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Bloom-filter join pruning ------------------------------------------------
-@register_demoted(
+@register(
     "lineitem_bloom_semijoin",
     oracle="""
 SELECT l_returnflag, l_linestatus,
@@ -393,7 +393,7 @@ def _kmv_rank_sql(src: str, part_cols: str) -> str:
     )
 
 
-@register_demoted(
+@register(
     "events_distinct_sketch_rollup",
     oracle=f"""
 WITH hashed AS (

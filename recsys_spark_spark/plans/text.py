@@ -17,7 +17,7 @@ from ..functions.rounding import qround, qround_sql
 from ..operators.dedup import hash60, hash60_sql
 from ..operators.pii import pii_counts, pii_counts_sql, pii_scrub, pii_scrub_sql
 from ..sources.readers import table
-from .registry import register, register_demoted
+from .registry import register
 
 R6 = 6
 
@@ -112,7 +112,7 @@ _ENTROPY_FOLD_SQL = (
 )
 
 
-@register_demoted(
+@register(
     "doc_quality_scores",
     oracle=f"""
 WITH base AS (
@@ -280,7 +280,7 @@ def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- winnowing fingerprints ------------------------------------------------
-@register_demoted(
+@register(
     # rotation r5: driver-green r1-r4; slot freed for never-checked queries
     "doc_winnow_fingerprints",
     oracle=f"""
@@ -355,7 +355,7 @@ def _pii_aug_col():
     )
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "doc_pii_scrub",
     oracle=f"""
@@ -428,7 +428,7 @@ def _url_aug_col():
     )
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "doc_url_domains",
     oracle=f"""

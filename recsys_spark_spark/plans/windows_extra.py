@@ -13,10 +13,10 @@ from ..functions.rounding import qround, qround_sql
 from ..lifecycle import materialize
 from ..operators.asof import asof_join
 from ..sources.readers import table
-from .registry import register, register_demoted
+from .registry import register
 
 
-@register_demoted(
+@register(
     "events_asof_last_purchase",
     oracle="""
 WITH u AS (
@@ -55,7 +55,7 @@ def events_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_demoted(
+@register(
     "events_sliding_1h",
     oracle="""
 WITH starts AS (
@@ -93,7 +93,7 @@ def events_sliding_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_demoted(
+@register(
     "sales_cube",
     oracle="""
 SELECT o.o_orderpriority AS priority, l.l_returnflag AS returnflag,
@@ -273,7 +273,7 @@ def customer_running_revenue_chunked(
     member of the chunked-window-twin family opened by
     events_sessions_chunked: the plain form's running-total window
     sorts a customer's WHOLE order history in one task (the measured
-    hot-key straggler — stress/sessions_skew_stress.py pinned the
+    hot-key straggler — PERF.md's sessionization probe pinned the
     mechanism at 4× on a 10M-row key), while this twin prefix-sums
     within (customer, order month) and offsets each month by the
     exclusive prefix of the tiny per-month totals.  The month chunk is
@@ -328,7 +328,7 @@ def customer_running_revenue_merged(
     return plain.unionByName(chunked)
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "user_retention_cohorts",
     oracle="""
@@ -422,7 +422,7 @@ def retention_cohorts(e: DataFrame) -> DataFrame:
     )
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "events_transition_matrix",
     oracle="""
@@ -490,7 +490,7 @@ def transition_matrix(e: DataFrame) -> DataFrame:
     )
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "events_anomaly_daily",
     oracle="""
@@ -619,7 +619,7 @@ def daily_anomalies(e: DataFrame) -> DataFrame:
 FUNNEL_STEPS = ("signup", "view", "click", "purchase")
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "events_funnel",
     oracle="""
@@ -736,7 +736,7 @@ def funnel(e: DataFrame, steps: tuple[str, ...] = FUNNEL_STEPS) -> DataFrame:
     )
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "customer_rfm_segments",
     oracle="""
@@ -806,7 +806,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "user_value_scd2",
     oracle="""
@@ -887,7 +887,7 @@ def scd2_history(
     )
 
 
-@register_demoted(
+@register(
     # new in r4 (registry window full at 50); rotate REGISTERED in r5
     "events_daily_dense",
     oracle="""
@@ -1443,8 +1443,8 @@ def events_attribution_last_touch_chunked(
     key.  Fifth carry class: the previous chunk's last right-side
     struct — one tiny per-(user, day-chunk) relation plus an
     exclusive ignorenulls prefix, so no task sorts more than one
-    user-day of events.  Crossover measured in
-    stress/asof_twin_stress.py; switch signal = the skew audit's
+    user-day of events.  Crossover measured in PERF.md, "The as-of
+    join gains its bounded-task twin"; switch signal = the skew audit's
     skew_ratio, as for every twin."""
     return last_touch_attribution(
         table(spark, sf_dir, "events"), ATTRIB_WINDOW_US, chunk_s=86_400
@@ -1551,8 +1551,8 @@ def events_attribution_last_touch_merged(
 
     Scale shape per member unchanged: plain = one user shuffle +
     linear carry (operators/asof.py); chunked = per-(user, day-chunk)
-    task bound (asof_join_chunked, crossover in
-    stress/asof_twin_stress.py); streaming = watermark-bounded
+    task bound (asof_join_chunked, crossover in PERF.md's as-of twin
+    section); streaming = watermark-bounded
     stream-stream join through the exactly-once batch_id sink
     (streaming/joins.py)."""
     cols = [
@@ -1708,7 +1708,7 @@ def orders_rolling_7d_revenue_merged(
     each chunk's span-tail as ghost rows into the next chunk and runs
     the RANGE frame within (custkey, chunk), task size bounded by one
     customer-chunk, never a customer's whole history (crossover
-    measured in stress/rolling_twin_stress.py)."""
+    measured in PERF.md, "GHOST REPLICAS")."""
     cols = ["custkey", "orderkey", "order_date", "revenue_7d", "n_orders_7d"]
     plain = orders_rolling_7d_revenue(spark, sf_dir).select(
         F.lit("plain").alias("variant"), *cols
@@ -1731,7 +1731,7 @@ from ..operators.twin_switch import (  # noqa: E402 — after the twins it dispa
 _RANGE_XOVER = CARRY_CLASS_CROSSOVER_ROWS["range_frame"]
 
 
-@register_demoted(
+@register(
     "orders_rolling_7d_revenue_auto",
     oracle=f"""
 WITH hot AS (

@@ -18,6 +18,9 @@ from pyspark.sql import functions as F
 from ..functions.rounding import qround
 from ..lifecycle import materialize, on_release
 
+#: f32 elements in one serving score chunk (32M ≈ 128 MB per task)
+SERVE_CHUNK_F32 = 32_000_000
+
 
 def _biases(ratings: DataFrame):
     """Global mean + item and user offsets (the standard baseline
@@ -58,8 +61,6 @@ def als_fit(
     reg: float = 5.0,
     max_iter: int = 5,
     seed: int = 42,
-    num_blocks: int | None = None,
-    intermediate_storage: str = "MEMORY_ONLY",
 ):
     """Fit explicit-feedback ALS on the bias-centered residuals;
     returns (model, mu, bi, bu) — bi/bu come back CACHED (they are
@@ -75,16 +76,18 @@ def als_fit(
     4 dp vs 10 sweeps at sf0.001 AND sf0.01 — the biases carry most of
     the signal), and each extra sweep is a full shuffle round.
 
-    ``num_blocks=None`` sizes the ALS block grid from the data:
-    MLlib's default 10×10 grid means every one of the 5 sweeps
-    shuffles 100 block pairs regardless of size — pure scheduling
-    overhead on small/medium inputs (measured 4.6 s → 2.2 s at sf0.1)
+    The ALS block grid is sized from the data: MLlib's default 10×10
+    grid means every one of the 5 sweeps shuffles 100 block pairs
+    regardless of size — pure scheduling overhead on small/medium inputs (measured 4.6 s → 2.2 s at sf0.1)
     while at 100 TB the ~2M-ratings-per-block target yields the many
     blocks a large cluster needs (capped by parallelism: more blocks
     than cores only adds exchange rounds).  Residuals are cached for
     the fit (ALS evaluates its input lineage per block-build), and the
     factor/intermediate RDDs stay MEMORY_ONLY — the blocks are rank×
-    entity floats, orders of magnitude smaller than the ratings."""
+    entity floats, orders of magnitude smaller than the ratings.  Under
+    deliberate CPU co-load neither a finer or coarser grid nor
+    MEMORY_AND_DISK intermediates recovered the fit time; MEMORY_AND_DISK
+    was strictly worse (PERF.md, "als_topk fit-contention A/B")."""
     from pyspark.ml.recommendation import ALS
 
     mu, bi, bu = _biases(ratings)
@@ -94,12 +97,11 @@ def als_fit(
         _residuals(ratings, mu, bi, bu).select("user_id", "item_id", "rating"),
         owner="als",
     )
-    if num_blocks is None:
-        nnz = resid.count()  # O(1) driver result; also primes the cache
-        parallelism = ratings.sparkSession.sparkContext.defaultParallelism
-        # ≥4 blocks for parallelism, but never more blocks than cores
-        # (a local[2] session must not pay a 4×4 grid's exchanges)
-        num_blocks = min(parallelism, max(4, nnz // 2_000_000 + 1)) or 1
+    nnz = resid.count()  # O(1) driver result; also primes the cache
+    parallelism = ratings.sparkSession.sparkContext.defaultParallelism
+    # ≥4 blocks for parallelism, but never more blocks than cores
+    # (a local[2] session must not pay a 4×4 grid's exchanges)
+    num_blocks = min(parallelism, max(4, nnz // 2_000_000 + 1)) or 1
     als = ALS(
         rank=rank,
         regParam=reg,
@@ -112,11 +114,7 @@ def als_fit(
         nonnegative=False,
         numUserBlocks=num_blocks,
         numItemBlocks=num_blocks,
-        # ``intermediate_storage`` is the r9 fit-contention A/B lever:
-        # MEMORY_AND_DISK trades re-computation of evicted in-block
-        # structures for disk reads when a co-loaded host squeezes the
-        # executor heap (stress/als_fit_contention_ab.py)
-        intermediateStorageLevel=intermediate_storage,
+        intermediateStorageLevel="MEMORY_ONLY",
         finalStorageLevel="MEMORY_ONLY",
     )
     model = als.fit(resid)
@@ -165,13 +163,8 @@ def als_topk(
     reg: float = 5.0,
     max_iter: int = 5,
     seed: int = 42,
-    headroom: int | None = None,
     max_broadcast_items: int = 1_000_000,
     candidate_pad: int = 64,
-    chunk_budget_f32: int = 32_000_000,
-    serve_partitions: int | None = None,
-    num_blocks: int | None = None,
-    intermediate_storage: str = "MEMORY_ONLY",
 ) -> DataFrame:
     """Top-K UNRATED items per user via ALS — EXACT over the full
     unrated catalog.
@@ -203,24 +196,12 @@ def als_topk(
 
     Returns ``(user_id, item_id, score, rank)``.
     """
-    model, mu, bi, bu = als_fit(
-        ratings, rank, reg, max_iter, seed, num_blocks, intermediate_storage
-    )
+    model, mu, bi, bu = als_fit(ratings, rank, reg, max_iter, seed)
     # O(1)-result driver check (als_fit is already eager)
     n_items = model.itemFactors.count()
     if n_items > max_broadcast_items:
-        return als_topk_blocked(ratings, model, mu, bi, bu, k_items, headroom)
-    return _als_topk_exact(
-        ratings,
-        model,
-        mu,
-        bi,
-        bu,
-        k_items,
-        candidate_pad,
-        chunk_budget_f32=chunk_budget_f32,
-        serve_partitions=serve_partitions,
-    )
+        return als_topk_blocked(ratings, model, mu, bi, bu, k_items)
+    return _als_topk_exact(ratings, model, mu, bi, bu, k_items, candidate_pad)
 
 
 def _als_topk_exact(
@@ -231,17 +212,15 @@ def _als_topk_exact(
     bu: DataFrame,
     k_items: int,
     candidate_pad: int = 64,
-    chunk_budget_f32: int = 32_000_000,
-    serve_partitions: int | None = None,
 ) -> DataFrame:
     """Seen-masked GEMM serving over broadcast item factors (see
     :func:`als_topk`).  Driver-side state is O(items×rank) — the item
     model, bounded by the caller's ``max_broadcast_items`` gate.
 
-    ``chunk_budget_f32`` bounds the per-task f32 score chunk (elements;
-    32M ≈ 128 MB) and ``serve_partitions`` the GEMM task count —
-    the two serve-side contention levers A/B'd in round 8 (PERF.md).
-    The shipped default is 4 × defaultParallelism: with exactly one
+    ``SERVE_CHUNK_F32`` bounds the per-task f32 score chunk (elements;
+    32M ≈ 128 MB) and the GEMM runs in 4 × defaultParallelism tasks —
+    the two serve-side contention levers A/B'd in PERF.md ("als_topk
+    serve-contention A/B under deliberate co-load").  With exactly one
     long GEMM task per core, ONE descheduled task under external
     co-load adds a full task length to the stage tail (measured 49 s
     worst case vs a 10-13 s band under a 64-process hog); 4× shorter
@@ -291,11 +270,7 @@ def _als_topk_exact(
     # size and would serialize the whole serving pass.  An explicit
     # numPartitions repartition is exempt from AQE coalescing and
     # spreads the GEMM across the cluster.
-    users = users.repartition(
-        serve_partitions
-        if serve_partitions is not None
-        else 4 * spark.sparkContext.defaultParallelism
-    )
+    users = users.repartition(4 * spark.sparkContext.defaultParallelism)
 
     # output id columns keep the factor-frame types (ALS ids are int)
     uid_t = users.schema["user_id"].dataType.simpleString()
@@ -306,7 +281,7 @@ def _als_topk_exact(
     # bound the f32 score chunk at ~128 MB regardless of catalog size
     # (users/chunk shrinks as items grow; 1 600 users at 20k items,
     # 32 users at the 1M-item broadcast ceiling)
-    chunk_users = max(8, min(1024, chunk_budget_f32 // max(1, len(item_ids))))
+    chunk_users = max(8, min(1024, SERVE_CHUNK_F32 // max(1, len(item_ids))))
 
     def _serve(batches):
         item_ids_, V_, biv_ = bc.value
@@ -431,7 +406,6 @@ def als_topk_blocked(
     bi: DataFrame,
     bu: DataFrame,
     k_items: int = 5,
-    headroom: int | None = None,
 ) -> DataFrame:
     """Large-catalog fallback: MLlib blocked ``recommendForAllUsers``
     with the exact anti-join headroom (``max(ratings per user)`` so k
@@ -440,15 +414,14 @@ def als_topk_blocked(
     bias is re-added, so an item outside the residual top-(k+headroom)
     with an exceptional bias can be missed — use when the item model
     exceeds the broadcast budget of the exact path."""
-    if headroom is None:
-        # O(1) driver result, not a data collect
-        headroom = (
-            ratings.groupBy("user_id")
-            .agg(F.count("*").alias("c"))
-            .agg(F.max("c"))
-            .collect()[0][0]
-            or 0
-        )
+    # O(1) driver result, not a data collect
+    headroom = (
+        ratings.groupBy("user_id")
+        .agg(F.count("*").alias("c"))
+        .agg(F.max("c"))
+        .collect()[0][0]
+        or 0
+    )
     rec = model.recommendForAllUsers(k_items + headroom)
     fresh = _flat_scored(rec, mu, bi, bu).join(
         ratings.select("user_id", "item_id"), ["user_id", "item_id"], "left_anti"

@@ -1,13 +1,12 @@
-"""Full-registry vanilla certification harness (r11 — makes the r10
-wrap's ad-hoc sweep a permanent, reproducible artifact).
+"""Full-registry vanilla certification sweep.
 
-Drives EVERY named query (both tiers) in a VANILLA SparkSession from
-outside the repo's cwd assumptions, hash-compares each oracled query
-against DuckDB at sf0.01, and — the r10 lesson turned into code —
-releases per-query session state between queries via
-``registry.release_query_state`` so the sweep finishes on a DEFAULT
+The one sweep of BOTH registry tiers in a VANILLA SparkSession (the
+session shape the driver builds, without this package's configs): it
+drives every named query, hash-compares each oracled query against
+DuckDB at sf0.01, and releases per-query session state between queries
+via ``registry.release_query_state`` so the sweep finishes on a DEFAULT
 JVM heap (a 1g vanilla session OOMed after ~80 queries of accumulated
-model caches before this existed; PERF.md r10 wrap).
+model caches before that release existed; PERF.md r10 wrap).
 
 Usage:  python stress/full_registry_cert.py [sf_dir]
                 [--driver-memory 8g] [--start-after NAME] [--fails a,b]
@@ -25,7 +24,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402

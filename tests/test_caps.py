@@ -123,8 +123,38 @@ def test_minhash_band_cap_drops_hot_band(spark):
         (r["id_a"], r["id_b"])
         for r in minhash_neardup_pairs(docs, threshold=0.5, max_bucket=None).collect()
     }
+    # exactly C(6, 2) pairs more than capped: all of the hot cluster's
+    assert uncapped - capped == {(a, b) for a in range(1, 7) for b in range(a + 1, 7)}
     assert (10, 11) in uncapped
-    assert {(a, b) for a in range(1, 7) for b in range(a + 1, 7)} <= uncapped
+
+
+def test_minhash_band_buckets_scale_with_replication(spark, sf_dir):
+    """Replicating every document r times multiplies every band
+    bucket's size by exactly r (identical texts share every band), so
+    a corpus-wide duplication lifts the worst bucket by the same
+    factor the band cap has to absorb."""
+    from recsys_spark_spark.operators.dedup import (
+        band_rows,
+        minhash_signatures,
+        shingle_rows,
+    )
+    from recsys_spark_spark.sources.readers import table
+
+    def sizes(docs):
+        return sorted(
+            r["n"]
+            for r in band_rows(minhash_signatures(shingle_rows(docs)))
+            .groupBy("band", "bsig")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        )
+
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    reps = spark.range(3).select(F.col("id").alias("rep"))
+    docs3 = docs.crossJoin(reps).select(
+        (F.col("doc_id") + F.col("rep") * 10_000_000).alias("doc_id"), "text"
+    )
+    assert [3 * n for n in sizes(docs)] == sizes(docs3)
 
 
 def test_minhash_cap_oracle_symmetry(spark):

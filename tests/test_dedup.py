@@ -201,7 +201,10 @@ def test_duplicate_spans_planted(spark):
     run inside otherwise-unique text → exactly one maximal span each,
     covering exactly the shared run; a doc repeating a window only
     WITHIN itself is not flagged (min_docs counts DISTINCT docs)."""
-    from recsys_spark_spark.operators.dedup import duplicate_spans
+    from recsys_spark_spark.operators.dedup import (
+        duplicate_spans,
+        duplicate_window_rows,
+    )
 
     shared = " ".join(f"s{i}" for i in range(8))          # 8 shared tokens
     doc1 = "a1 a2 a3 " + shared + " a4 a5"                # span tokens 4..11
@@ -219,6 +222,10 @@ def test_duplicate_spans_planted(spark):
     assert got[1] == (4, 11, 5)
     assert got[2] == (2, 9, 5)
     assert 3 not in got
+    # the window relation is linear in tokens: one row per stride-1
+    # window of each doc
+    n_windows = sum(len(t.split()) - 3 for t in (doc1, doc2, doc3))
+    assert duplicate_window_rows(docs, n=4).count() == n_windows
 
 
 def test_duplicate_spans_merges_only_adjacent(spark):

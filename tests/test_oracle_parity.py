@@ -37,8 +37,8 @@ def test_rotation_cycle_at_or_under_ceiling():
     """Rotation-latency ceiling, made mechanical (r13): every oracled
     query must earn a driver-green row within 2.4 rounds, i.e. at most
     2.4 x 50 = 120 oracled queries may exist at once.  Growing past
-    the ceiling requires a same-commit merge (the staged-merge
-    pipeline in registry.py) — this test is what makes 'another
+    the ceiling requires a same-commit merge (the ROTATION RULE
+    paragraph in registry.py) — this test is what makes 'another
     query without a merge' a red diff instead of a slow drift."""
     oracled = sum(
         s.oracle is not None for s in {**QUERIES, **DEMOTED}.values()
@@ -46,7 +46,7 @@ def test_rotation_cycle_at_or_under_ceiling():
     assert oracled <= 120, (
         f"{oracled} oracled queries > the 120 ceiling (2.4-round cycle "
         "on a 50-row driver window); execute a staged merge in the "
-        "same commit as the new query (registry.py MERGE PIPELINE)"
+        "same commit as the new query (registry.py ROTATION RULE)"
     )
 
 

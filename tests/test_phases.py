@@ -138,3 +138,15 @@ def test_phases_module_is_the_only_timer():
             if where != "plans/registry.py::drive_all":
                 hits.append(f"{where}:{n}: {line.strip()}")
     assert hits == []
+
+
+def test_minhash_pairs_is_a_phase(spark):
+    """``minhash_neardup_pairs`` materializes its shingles, candidates
+    and candidate shingles at call time, under one phase."""
+    from recsys_spark_spark.operators.dedup import minhash_neardup_pairs
+
+    text = "a near duplicate pair of short documents about spark"
+    docs = spark.createDataFrame([(1, text), (2, text)], "doc_id long, text string")
+    phases.take()
+    minhash_neardup_pairs(docs)
+    assert [p.name for p in phases.take()] == ["minhash_pairs"]

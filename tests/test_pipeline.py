@@ -51,6 +51,38 @@ def test_corpus_clean_drops_injected_exact_dupes(spark, sf_dir):
     assert got_ids == {r["doc_id"] for r in base_kept.collect()}
 
 
+def test_corpus_train_ready_planted_stages(spark, tmp_path):
+    """One planted input per stage of corpus_train_ready: the gate drops
+    a punctuation-heavy doc and a zh doc, an exact-duplicate triple and
+    a near-duplicate triple (shingle Jaccard 97/99) each keep their min
+    id, and a 40-token block shared by three docs is cut from all but
+    the first."""
+    from recsys_spark_spark.plans.pipeline import corpus_train_ready
+
+    def toks(d):
+        return [f"u{d}x{p}" for p in range(100)]
+
+    rows = [(d, "en", " ".join(toks(d))) for d in range(4)]
+    for d in range(4, 7):
+        t = toks(d)
+        t[10:50] = [f"bx{j}" for j in range(40)]
+        rows.append((d, "en", " ".join(t)))
+    rows.append((7, "en", " ".join("!!!" + w for w in toks(7))))
+    rows.append((8, "zh", " ".join(toks(8))))
+    rows += [(d, "en", " ".join(f"ex{p}" for p in range(100))) for d in (9, 10, 11)]
+    near = [f"nx{p}" for p in range(99)]
+    rows += [(d, "en", " ".join(near + [f"t{d}"])) for d in (12, 13, 14)]
+    spark.createDataFrame(rows, "doc_id long, lang string, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    out = {
+        r["doc_id"]: r["n_tokens_clean"]
+        for r in corpus_train_ready(spark, str(tmp_path)).collect()
+    }
+    assert set(out) == {0, 1, 2, 3, 4, 5, 6, 9, 12}
+    assert sum(100 - n for n in out.values()) == 2 * 40
+
+
 def test_corpus_sample_deterministic_and_nested(spark, sf_dir):
     """Hash sampling is a pure function of the id: rerun identical,
     and a smaller permille is a strict subset of a larger one."""

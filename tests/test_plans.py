@@ -243,6 +243,33 @@ def test_bench_set_is_stable():
     ]
 
 
+def test_removed_code_stays_removed():
+    """Source scan: no module of the package or the tests, nor bench.py
+    or .claude/, names a stress script other than full_registry_cert.py;
+    the registry's second decorator name is gone everywhere; and
+    ``als_topk`` takes none of its removed tuning options."""
+    import inspect
+    import re
+    from pathlib import Path
+
+    from recsys_spark_spark.recommenders.als import als_topk
+
+    root = Path(__file__).parent.parent
+    files = [
+        *(root / "recsys_spark_spark").rglob("*.py"),
+        *(root / "tests").rglob("*.py"),
+        root / "bench.py",
+        *(p for p in (root / ".claude").rglob("*") if p.is_file()),
+    ]
+    script = re.compile(r"stress/(?!full_registry_cert\.py)\w")
+    alias = "register" + "_demoted"
+    texts = {str(p.relative_to(root)): p.read_text(errors="ignore") for p in files}
+    assert [f for f, t in texts.items() if script.search(t) or alias in t] == []
+    removed = {"num_blocks", "intermediate_storage", "chunk_budget_f32",
+               "serve_partitions", "headroom"}
+    assert not removed & set(inspect.signature(als_topk).parameters)
+
+
 def test_bench_normalized_grand_validity_domain():
     """The GEMM-normalized grand is a FIRST-ORDER model, trustworthy
     only near the calibration band: the r11 driver host probed

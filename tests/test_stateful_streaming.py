@@ -54,6 +54,9 @@ def test_state_accumulates_across_microbatches(spark, sf_dir, tmp_path):
         .collect()
     }
     assert last == want
+    # NoTimeout: state holds one row per user ever seen, no more
+    state = [p["stateOperators"][0]["numRowsTotal"] for p in q.recentProgress if p["stateOperators"]]
+    assert state[-1] == len(want)
 
 
 def test_idle_timeout_variant_still_accumulates(spark, sf_dir, tmp_path):

@@ -1,14 +1,14 @@
-"""State-plateau pin for the streaming attribution interval join
-(r11 VERDICT #6): the full-scale harness
-(stress/stream_attribution_stress.py) measured the join state
-plateauing at ~2.05M rows over a doubling 3.9M-event corpus — state
-tracks the WATERMARK HORIZON, never the corpus.  This test replays
-the same closed-form layout at 1/50 scale so the bound assertion
-fails loud in CI if an eviction regression (watermark lost, wrong
-join condition retention, state-store leak) ever reappears.
+"""State-plateau pin for the streaming attribution interval join:
+the full-scale run (PERF.md, "Streaming attribution: 7-day-lookback
+join state measured") saw the join state plateau at ~2.05M rows over
+a doubling 3.9M-event corpus — state tracks the WATERMARK HORIZON,
+never the corpus.  This test replays the same closed-form layout at
+1/50 scale so the bound assertion fails loud in CI if an eviction
+regression (watermark lost, wrong join condition retention,
+state-store leak) ever reappears.
 
-Layout (stress header, scaled): blocks 2 days apart, 7-day lookback,
-8-day watermark.  Per side the horizon admits at most
+Layout (the full-scale run's, scaled): blocks 2 days apart, 7-day
+lookback, 8-day watermark.  Per side the horizon admits at most
 ceil((7d+8d)/2d)+lag blocks of views and ceil(8d/2d)+lag blocks of
 purchases — a constant number of blocks, so doubling B doubles the
 corpus but NOT the admissible state.
@@ -20,8 +20,8 @@ import shutil
 
 from pyspark.sql import functions as F
 
-U_A = 2_000  # attributed users per block (stress: 100k)
-U_D = 1_000  # direct users per block (stress: 50k)
+U_A = 2_000  # attributed users per block (full scale: 100k)
+U_D = 1_000  # direct users per block (full scale: 50k)
 B = 26
 BLOCK_S = 2 * 86400
 T0 = "2024-01-20 12:00:00"
@@ -93,7 +93,7 @@ def test_attribution_join_state_bounded_by_horizon(spark, tmp_path):
     shutil.rmtree(ck, ignore_errors=True)
 
     assert len(prog) >= 10, "multi-trigger requirement (eviction unobservable)"
-    # per-side horizon bound (stress header): views outlive the
+    # per-side horizon bound (module docstring): views outlive the
     # purchase watermark past v_ts + lookback -> ceil((7d+8d)/2d)=8
     # (+3 trigger-lag) blocks; purchases outlive the view watermark
     # past p_ts -> ceil(8d/2d)=4 (+3) blocks
@@ -103,9 +103,22 @@ def test_attribution_join_state_bounded_by_horizon(spark, tmp_path):
         f"{horizon_bound:,} — eviction regressed"
     )
     # the plateau evidence: the corpus is ≥2x the admitted state (the
-    # stress measures 1.9x at 50x this scale), so state ∝ horizon,
+    # full-scale run measured 1.9x at 50x this scale), so state ∝ horizon,
     # not corpus
     assert max(state_rows) * 2 < n_total, (
         f"eviction not visible: state {max(state_rows):,} ~ corpus "
         f"{n_total:,}"
     )
+    # closed form: an attributed purchase pairs with its own block's
+    # view (1 h back) and the three earlier blocks' (2, 4, 6 days + 1 h
+    # back, inside the 7-day lookback); direct users never pair
+    pairs_out = spark.read.parquet(store)
+    assert pairs_out.count() == U_A * sum(min(b + 1, 4) for b in range(B))
+    gaps = (
+        pairs_out.groupBy("purchase_id", "p_ts")
+        .agg(F.max("v_ts").alias("v_ts"))
+        .groupBy(F.timestamp_diff("SECOND", "v_ts", "p_ts").alias("gap"))
+        .count()
+        .collect()
+    )
+    assert [(r["gap"], r["count"]) for r in gaps] == [(3600, B * U_A)]

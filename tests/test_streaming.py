@@ -225,3 +225,50 @@ def test_bloom_filter_stream_matches_batch_and_probes(spark, sf_dir, tmp_path):
     users = batch_keys.distinct()
     passed = bloom_might_contain(users, drained_words, "user_id", m, k)
     assert passed.count() == users.count()
+
+
+def test_purchase_view_join_closed_form_and_state_horizon(spark, tmp_path):
+    """Blocks 6 h apart, one file each: per (user, block) a purchase
+    and views 600 / 1800 / 3540 s before it (inside the 1 h lookback)
+    and 5400 s before (outside).  The drain emits exactly the three
+    in-window gaps per purchase, and join state tracks the watermark
+    horizon (at most 3 blocks in flight), never the whole input."""
+    from recsys_spark_spark.streaming.joins import purchase_view_join_stream
+
+    n_users, n_blocks = 20, 6
+    slots = [(0, "purchase"), (600, "view"), (1800, "view"), (3540, "view"), (5400, "view")]
+    path = str(tmp_path / "events")
+    for b in range(n_blocks):
+        t0 = 1_700_000_000 + b * 6 * 3600
+        rows = [
+            (b * 1000 + u * 10 + i, t0 - off, u, etype)
+            for u in range(n_users)
+            for i, (off, etype) in enumerate(slots)
+        ]
+        spark.createDataFrame(
+            rows, "event_id long, epoch long, user_id long, event_type string"
+        ).select(
+            "event_id",
+            F.timestamp_seconds("epoch").alias("ts"),
+            "user_id",
+            "event_type",
+            F.lit(1.0).alias("value"),
+            F.lit(None).cast("string").alias("props"),
+        ).coalesce(1).write.mode("append").parquet(path)
+    stream = purchase_view_join_stream(
+        read_events_stream(spark, path, max_files_per_trigger=1, glob="*.parquet")
+    )
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("pv_join_horizon_test")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    state = [p["stateOperators"][0]["numRowsTotal"] for p in q.recentProgress if p["stateOperators"]]
+    gaps = spark.table("pv_join_horizon_test").groupBy("gap_s").count().collect()
+    assert sorted((r["gap_s"], r["count"]) for r in gaps) == [
+        (g, n_users * n_blocks) for g in (600, 1800, 3540)
+    ]
+    assert len(state) >= n_blocks and max(state) <= 3 * n_users * len(slots)

@@ -53,3 +53,56 @@ def test_stream_dedup_drops_injected_duplicates(spark, sf_dir, tmp_path):
     n_distinct = docs.select("text").distinct().count()
     assert len(kept) == n_distinct == n_docs  # corpus texts are unique
     shutil.rmtree(land, ignore_errors=True)
+
+
+def test_stream_dedup_state_tracks_the_watermark_horizon(spark, tmp_path):
+    """Hourly blocks of U texts, each text twice in its block, and from
+    block 3 on E texts re-emitted from three blocks back — past the
+    30-minute watermark.  The in-block copy drops, the re-emission is
+    kept (its state was evicted: the best-effort-after-eviction
+    contract), and state never holds more than the horizon's texts."""
+    from pyspark.sql.types import TimestampType
+
+    n_blocks, u, e = 6, 40, 10
+    src = str(tmp_path / "src")
+    for b in range(n_blocks):
+        fresh = spark.range(u).select(
+            F.concat(F.lit(f"doc-{b}-"), F.col("id")).alias("text"),
+            F.explode(F.array(F.lit(0), F.lit(1))).alias("copy"),
+        )
+        old = spark.range(e if b >= 3 else 0).select(
+            F.concat(F.lit(f"doc-{b - 3}-"), F.col("id")).alias("text"),
+            F.lit(0).alias("copy"),
+        )
+        fresh.unionByName(old).select(
+            F.monotonically_increasing_id().alias("doc_id"),
+            "text",
+            F.timestamp_seconds(F.lit(b * 3600) + F.col("copy")).alias("ts"),
+        ).coalesce(1).write.mode("append").parquet(src)
+    schema = StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField("text", StringType()),
+            StructField("ts", TimestampType()),
+        ]
+    )
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    q = (
+        dedup_docs_stream(stream, ts_col="ts", watermark="30 minutes")
+        .writeStream.format("memory")
+        .queryName("dedup_horizon_test")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    state = [p["stateOperators"][0]["numRowsTotal"] for p in q.recentProgress if p["stateOperators"]]
+    copies = {
+        r["n"]: r["texts"]
+        for r in spark.table("dedup_horizon_test")
+        .groupBy("text").count().groupBy(F.col("count").alias("n"))
+        .agg(F.count("*").alias("texts")).collect()
+    }
+    assert copies == {1: n_blocks * u - (n_blocks - 3) * e, 2: (n_blocks - 3) * e}
+    # the horizon: the current and previous blocks plus one in flight
+    assert len(state) >= n_blocks and max(state) <= 3 * u + e
