@@ -29,20 +29,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .lifecycle import materialize, release
-from .recommenders.content import (
-    content_based_topk,
-    content_similarities,
-    predict_content_based,
-)
+from .recommenders.content import content_similarities, predict_content_based
 from .recommenders.hybrid import hybrid_topk
 from .recommenders.neighborhood import (
+    _rank_items,
     item_based_scored,
-    item_based_topk,
     predict_item_based,
     predict_user_based,
     scored_from_item_sims,
     user_based_scored,
-    user_based_topk,
 )
 
 
@@ -76,8 +71,10 @@ class _BaseTopK:
         self._result = None
         return self
 
-    def _transform_all(self) -> DataFrame:  # pragma: no cover - abstract
-        raise NotImplementedError
+    def _transform_all(self) -> DataFrame:
+        """The top_k ranking of the subclass' pre-rank ``_scored_all()``
+        (what ``*_topk`` computes without a neighbor prefilter)."""
+        return _rank_items(self._scored_all(), self.top_k)
 
     def transform(self) -> DataFrame:
         """(user_id, item_id, score, rank) for EVERY user.
@@ -114,14 +111,6 @@ class UserBasedTopKRecommender(_BaseTopK):
         super().__init__()
         self.k_users, self.top_k, self.similarity = k_users, top_k, similarity
 
-    def _transform_all(self) -> DataFrame:
-        return user_based_topk(
-            self._ratings,
-            k_neighbors=self.k_users,
-            k_items=self.top_k,
-            kernel=self.similarity,
-        )
-
     def _scored_all(self) -> DataFrame:
         return user_based_scored(
             self._ratings,
@@ -144,14 +133,6 @@ class ItemBasedTopKRecommender(_BaseTopK):
             k_similar_items,
             top_k,
             similarity,
-        )
-
-    def _transform_all(self) -> DataFrame:
-        return item_based_topk(
-            self._ratings,
-            k_neighbors=self.k_similar_items,
-            k_items=self.top_k,
-            kernel=self.similarity,
         )
 
     def _scored_all(self) -> DataFrame:
@@ -185,17 +166,6 @@ class ContentBasedTopKRecommender(_BaseTopK):
         recommenders/content.py for the one-hot/scaled builder."""
         self._features = features
         return self
-
-    def _transform_all(self) -> DataFrame:
-        if self._features is None:
-            raise RuntimeError("set_features() first")
-        return content_based_topk(
-            self._ratings,
-            self._features,
-            k_neighbors=self.k_similar_items,
-            k_items=self.top_k,
-            kernel=self.similarity,
-        )
 
     def _scored_all(self) -> DataFrame:
         if self._features is None:

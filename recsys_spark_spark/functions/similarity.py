@@ -32,6 +32,14 @@ full-array numerator is −sum_a·sum_b/N, i.e. negative), so omission
 can drop negative-similarity neighbors when fewer than k co-rated
 ones exist — accepted divergence, same class as the euclidean one.
 
+Three pair generators turn ratings into ``(ea, eb, dot, co)``: the
+co-rated self-join (``pairwise_similarity``), the requested-pairs join
+(``pairwise_similarity_for_pairs``) and sign-LSH candidates
+(operators/cf_lsh.py).  They share everything else here: the axis
+mapping and hot-key cutoff (``_axis_ratings``), the per-entity scalars
+(``_entity_stats`` / ``_with_entity_stats``) and the kernel tail
+(``_score_pairs``).
+
 Scale: the self-join explodes per-item rater lists — O(Σ_item n_i²)
 pair rows.  ``max_raters_per_item`` caps pathological hot items
 (a standard frequent-item cutoff for neighborhood CF); above that, use
@@ -41,10 +49,8 @@ the exact join.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from .rounding import qround
 
 KERNELS = ("cosine", "pearson", "euclidean", "jaccard")
 
@@ -116,94 +122,77 @@ def _drop_hot_keys(r: DataFrame, max_raters_per_item: int | None) -> DataFrame:
     return r.join(F.broadcast(hot), "key", "left_anti")
 
 
-def pairwise_similarity(
-    ratings: DataFrame,
-    kernel: str | tuple[str, ...] = "cosine",
-    axis: str = "user",
-    n_cols: int | None = None,
-    directed: bool = True,
-    max_raters_per_item: int | None = None,
-    with_co: bool = False,
-    euclidean_fallback: bool = False,
-) -> DataFrame:
-    """All co-rated pairs with their similarity, fully distributed.
-
-    Parameters
-    ----------
-    ratings : long-format ``(user_id, item_id, rating)``
-    kernel : one kernel name → a single ``sim`` column; a TUPLE of
-        kernel names → one ``sim_<kernel>`` column each, all computed
-        from the SAME pair-stats aggregate (the quadratic co-rated
-        join runs once, not once per kernel — every kernel is a scalar
-        formula over (dot, co, sums, sumsqs)).
-    axis : ``"user"`` → pairs of users over shared items (returns
-        ``(user_a, user_b, sim...)``); ``"item"`` → pairs of items over
-        shared users (returns ``(item_a, item_b, sim...)``).
-    n_cols : full vector length for the Pearson quirk; default =
-        countDistinct of the opposite axis (computed lazily as a scalar
-        subquery-style cross join of a 1-row aggregate — no collect).
-    directed : emit both (a,b) and (b,a) (needed for per-entity k-NN
-        windows); pair stats are computed once on a<b and mirrored.
-    max_raters_per_item : drop join keys hotter than this before the
-        self-join (skew guard for the quadratic blowup).
-    """
-    kernels: tuple[str, ...] = (kernel,) if isinstance(kernel, str) else kernel
-    multi = not isinstance(kernel, str)
-    if euclidean_fallback and multi:
-        raise ValueError("euclidean_fallback only supported for a single kernel")
+def _axis_ratings(
+    ratings: DataFrame, axis: str, max_raters_per_item: int | None
+) -> tuple[DataFrame, str]:
+    """One axis of long-format ratings as ``(ent, key, r)`` rows with the
+    hot keys dropped, and the name of the ratings column that is the
+    join key (``"user"`` → users over shared items, ``"item"`` → items
+    over shared users)."""
     if axis == "user":
         ent, key = "user_id", "item_id"
     elif axis == "item":
         ent, key = "item_id", "user_id"
     else:
         raise ValueError(f"axis must be 'user' or 'item', got {axis!r}")
-
     r = ratings.select(
         F.col(ent).alias("ent"), F.col(key).alias("key"), F.col("rating").alias("r")
     )
+    return _drop_hot_keys(r, max_raters_per_item), key
 
-    r = _drop_hot_keys(r, max_raters_per_item)
 
-    # per-entity scalar stats — one shuffle on ent, reused on both sides
-    stats = r.groupBy("ent").agg(
+def _entity_stats(r: DataFrame, *extra: Column) -> DataFrame:
+    """Per-entity kernel scalars ``(ent, *extra, sum_r, sumsq_r, n_r)``
+    — one shuffle on ent, reused on both sides of every pair."""
+    return r.groupBy("ent").agg(
+        *extra,
         F.sum("r").alias("sum_r"),
         F.sum(F.col("r") * F.col("r")).alias("sumsq_r"),
         F.count("*").alias("n_r"),
     )
 
-    # co-rated pair aggregation: self-join on the shared key, a<b once
-    a = r.select(F.col("key"), F.col("ent").alias("ea"), F.col("r").alias("ra"))
-    b = r.select(F.col("key"), F.col("ent").alias("eb"), F.col("r").alias("rb"))
-    pairs = (
-        a.join(b, "key")
-        .where(F.col("ea") < F.col("eb"))
-        .groupBy("ea", "eb")
-        .agg(
-            F.sum(F.col("ra") * F.col("rb")).alias("dot"),
-            F.count("*").alias("co"),
-        )
-    )
 
-    sa = stats.select(
-        F.col("ent").alias("ea"),
-        F.col("sum_r").alias("sum_a"),
-        F.col("sumsq_r").alias("sumsq_a"),
-        F.col("n_r").alias("n_a"),
-    )
-    sb = stats.select(
-        F.col("ent").alias("eb"),
-        F.col("sum_r").alias("sum_b"),
-        F.col("sumsq_r").alias("sumsq_b"),
-        F.col("n_r").alias("n_b"),
-    )
-    enriched = pairs.join(sa, "ea").join(sb, "eb")
+def _with_entity_stats(
+    pairs: DataFrame, stats: DataFrame, *extra: str
+) -> DataFrame:
+    """Join ``stats`` onto both sides of ``(ea, eb, ...)`` pairs: each
+    side's scalars arrive as ``sum_a`` / ``sumsq_a`` / ``n_a`` (and
+    ``_b``), each ``extra`` stats column ``c`` as ``ca`` / ``cb``."""
 
-    if n_cols is not None:
-        n_expr = F.lit(float(n_cols))
-    elif "pearson" in kernels:
-        n_df = ratings.select(
-            F.countDistinct(key).cast("double").alias("_n_cols")
+    def side(s: str) -> DataFrame:
+        return stats.select(
+            F.col("ent").alias(f"e{s}"),
+            *[F.col(c).alias(f"{c}{s}") for c in extra],
+            F.col("sum_r").alias(f"sum_{s}"),
+            F.col("sumsq_r").alias(f"sumsq_{s}"),
+            F.col("n_r").alias(f"n_{s}"),
         )
+
+    return pairs.join(side("a"), "ea").join(side("b"), "eb")
+
+
+def _score_pairs(
+    enriched: DataFrame,
+    ratings: DataFrame,
+    key: str,
+    kernel: str | tuple[str, ...],
+    axis: str,
+    directed: bool,
+    euclidean_fallback: bool,
+    extra: tuple[str, ...] = (),
+) -> DataFrame:
+    """The tail every pair generator shares: kernel columns over an
+    enriched pair-stats relation ``(ea, eb, dot, co, sum_a, ..., n_b)``,
+    the K5 fallback, the optional mirror and the ``{axis}_a`` /
+    ``{axis}_b`` output names.  Generators differ only in how they
+    produce the pairs and their ``dot`` / ``co``."""
+    kernels: tuple[str, ...] = (kernel,) if isinstance(kernel, str) else kernel
+    multi = not isinstance(kernel, str)
+    if euclidean_fallback and multi:
+        raise ValueError("euclidean_fallback only supported for a single kernel")
+    if "pearson" in kernels:
+        # N = countDistinct of the join key over the UNCAPPED ratings
+        n_df = ratings.select(F.countDistinct(key).cast("double").alias("_n_cols"))
         enriched = enriched.crossJoin(F.broadcast(n_df))
         n_expr = F.col("_n_cols")
     else:
@@ -213,7 +202,6 @@ def pairwise_similarity(
         # join is 1-row)
         n_expr = F.lit(1.0)
 
-    extra = ["co"] if with_co else []
     sim_cols: list[str] = []
     sims = enriched
     for k in kernels:
@@ -247,41 +235,66 @@ def pairwise_similarity(
             F.explode(F.array(_s("ea", "eb"), _s("eb", "ea"))).alias("_p")
         ).select("_p.*")
 
-    out_a, out_b = (f"{axis}_a", f"{axis}_b")
     return sims.select(
-        F.col("ea").alias(out_a), F.col("eb").alias(out_b), *sim_cols, *extra
+        F.col("ea").alias(f"{axis}_a"),
+        F.col("eb").alias(f"{axis}_b"),
+        *sim_cols,
+        *extra,
     )
 
 
-def top_k_neighbors(
-    sims: DataFrame,
-    k: int,
-    round_to: int | None = 9,
+def pairwise_similarity(
+    ratings: DataFrame,
+    kernel: str | tuple[str, ...] = "cosine",
+    axis: str = "user",
+    directed: bool = True,
+    max_raters_per_item: int | None = None,
+    with_co: bool = False,
+    euclidean_fallback: bool = False,
 ) -> DataFrame:
-    """Keep each entity's k most-similar neighbors.
+    """All co-rated pairs with their similarity, fully distributed.
 
-    Ties break by ascending neighbor id — the reference's stable
-    sort-by-score leaves ties in candidate iteration order, i.e.
-    ascending id (SURVEY §2.6).  ``round_to`` rounds the similarity
-    before ranking so rank order is robust to last-ulp float noise
-    (important when results are hash-compared against another engine).
+    Parameters
+    ----------
+    ratings : long-format ``(user_id, item_id, rating)``
+    kernel : one kernel name → a single ``sim`` column; a TUPLE of
+        kernel names → one ``sim_<kernel>`` column each, all computed
+        from the SAME pair-stats aggregate (the quadratic co-rated
+        join runs once, not once per kernel — every kernel is a scalar
+        formula over (dot, co, sums, sumsqs)).
+    axis : ``"user"`` → pairs of users over shared items (returns
+        ``(user_a, user_b, sim...)``); ``"item"`` → pairs of items over
+        shared users (returns ``(item_a, item_b, sim...)``).  The
+        Pearson N is the countDistinct of the opposite axis (a lazy
+        1-row aggregate cross-joined in — no collect).
+    directed : emit both (a,b) and (b,a) (needed for per-entity k-NN
+        windows); pair stats are computed once on a<b and mirrored.
+    max_raters_per_item : drop join keys hotter than this before the
+        self-join (skew guard for the quadratic blowup).
     """
-    if "sim" not in sims.columns:
-        raise ValueError(
-            "top_k_neighbors expects the single-kernel pairwise shape "
-            f"with a 'sim' column; got {sims.columns} — for multi-kernel "
-            "output (sim_<kernel> columns) select/alias the kernel to "
-            "rank by first"
+    r, key = _axis_ratings(ratings, axis, max_raters_per_item)
+    # co-rated pair aggregation: self-join on the shared key, a<b once
+    a = r.select(F.col("key"), F.col("ent").alias("ea"), F.col("r").alias("ra"))
+    b = r.select(F.col("key"), F.col("ent").alias("eb"), F.col("r").alias("rb"))
+    pairs = (
+        a.join(b, "key")
+        .where(F.col("ea") < F.col("eb"))
+        .groupBy("ea", "eb")
+        .agg(
+            F.sum(F.col("ra") * F.col("rb")).alias("dot"),
+            F.count("*").alias("co"),
         )
-    a, b = sims.columns[0], sims.columns[1]
-    sim = qround("sim", round_to) if round_to is not None else F.col("sim")
-    ranked = sims.withColumn("_s", sim).withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy(a).orderBy(F.desc("_s"), F.asc(b))
-        ),
     )
-    return ranked.where(F.col("rn") <= k).drop("rn", "_s")
+    return _score_pairs(
+        _with_entity_stats(pairs, _entity_stats(r)),
+        ratings,
+        key,
+        kernel,
+        axis,
+        directed,
+        euclidean_fallback,
+        ("co",) if with_co else (),
+    )
 
 
 def pairwise_similarity_for_pairs(
@@ -289,7 +302,6 @@ def pairwise_similarity_for_pairs(
     cand_pairs: DataFrame,
     kernel: str = "cosine",
     axis: str = "user",
-    n_cols: int | None = None,
     max_raters_per_item: int | None = None,
     euclidean_fallback: bool = False,
 ) -> DataFrame:
@@ -304,34 +316,18 @@ def pairwise_similarity_for_pairs(
     ``{user_a,user_b}`` or ``{item_a,item_b}`` by ``axis``); output
     rows appear exactly for requested pairs that share ≥1 co-rated
     key (the exact path's co-rated-only contract) and carry the SAME
-    similarity values — the stats relation and kernel expression are
-    the same code (``with_kernel_column``), only the pair GENERATOR
-    differs: ``cand ⋈ ratings(ent_a) ⋈ ratings(ent_b, key)`` is
+    similarity values — the stats and kernel tail are the same code
+    (``_score_pairs``), only the pair GENERATOR differs:
+    ``cand ⋈ ratings(ent_a) ⋈ ratings(ent_b, key)`` is
     |cand| × keys-per-entity, never a self-join.
 
     Self-pairs are dropped (the exact path's ``a < b`` never emits
     them)."""
-    if axis == "user":
-        ent, key = "user_id", "item_id"
-    elif axis == "item":
-        ent, key = "item_id", "user_id"
-    else:
-        raise ValueError(f"axis must be 'user' or 'item', got {axis!r}")
-    ca, cb = f"{axis}_a", f"{axis}_b"
-
-    r = ratings.select(
-        F.col(ent).alias("ent"), F.col(key).alias("key"), F.col("rating").alias("r")
-    )
-    r = _drop_hot_keys(r, max_raters_per_item)
-
-    stats = r.groupBy("ent").agg(
-        F.sum("r").alias("sum_r"),
-        F.sum(F.col("r") * F.col("r")).alias("sumsq_r"),
-        F.count("*").alias("n_r"),
-    )
-
+    r, key = _axis_ratings(ratings, axis, max_raters_per_item)
     cand = (
-        cand_pairs.select(F.col(ca).alias("ea"), F.col(cb).alias("eb"))
+        cand_pairs.select(
+            F.col(f"{axis}_a").alias("ea"), F.col(f"{axis}_b").alias("eb")
+        )
         .where(F.col("ea") != F.col("eb"))
         .distinct()
     )
@@ -346,36 +342,12 @@ def pairwise_similarity_for_pairs(
             F.count("*").alias("co"),
         )
     )
-    sa = stats.select(
-        F.col("ent").alias("ea"),
-        F.col("sum_r").alias("sum_a"),
-        F.col("sumsq_r").alias("sumsq_a"),
-        F.col("n_r").alias("n_a"),
+    return _score_pairs(
+        _with_entity_stats(pairs, _entity_stats(r)),
+        ratings,
+        key,
+        kernel,
+        axis,
+        False,
+        euclidean_fallback,
     )
-    sb = stats.select(
-        F.col("ent").alias("eb"),
-        F.col("sum_r").alias("sum_b"),
-        F.col("sumsq_r").alias("sumsq_b"),
-        F.col("n_r").alias("n_b"),
-    )
-    enriched = pairs.join(sa, "ea").join(sb, "eb")
-
-    if n_cols is not None:
-        n_expr = F.lit(float(n_cols))
-    elif kernel == "pearson":
-        n_df = ratings.select(
-            F.countDistinct(key).cast("double").alias("_n_cols")
-        )
-        enriched = enriched.crossJoin(F.broadcast(n_df))
-        n_expr = F.col("_n_cols")
-    else:
-        n_expr = F.lit(1.0)
-
-    sims = with_kernel_column(enriched, kernel, n_expr)
-    if euclidean_fallback and kernel != "euclidean":
-        sq_dist = F.col("sumsq_a") + F.col("sumsq_b") - 2 * F.col("dot")
-        euclid = 1.0 / (F.sqrt(F.greatest(sq_dist, F.lit(0.0))) + 1.0)
-        sims = sims.withColumn(
-            "sim", F.when(F.col("sim") == 0.0, euclid).otherwise(F.col("sim"))
-        )
-    return sims.select(F.col("ea").alias(ca), F.col("eb").alias(cb), "sim")

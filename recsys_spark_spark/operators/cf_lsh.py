@@ -19,6 +19,16 @@ approximation shows up solely as missing low-similarity pairs, i.e.
 recall < 1 on the neighbor lists (measured ≥ 0.95 vs the exact axis at
 sf0.01 in tests/test_cf_lsh.py).
 
+This is one of the three pair generators in the package, next to the
+co-rated self-join (``pairwise_similarity``) and the requested-pairs
+join (``pairwise_similarity_for_pairs``).  All three share the rest
+with functions/similarity.py: the axis mapping and hot-key cutoff
+(``_axis_ratings``), the per-entity kernel scalars (``_entity_stats``,
+here with the rating map as an extra column) and the kernel tail
+(``_score_pairs``: Pearson N, kernel columns, K5 fallback, mirror,
+output names).  This module only produces the candidate pairs and
+their ``dot`` / ``co``.
+
 Sign-LSH over a SPARSE long-format matrix (no dense vector ever):
 - each key (the co-rating dimension: items for user-axis, users for
   item-axis) gets ``n_planes`` deterministic pseudo-random weights
@@ -54,11 +64,18 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.similarity import with_kernel_column
+from ..functions.similarity import (
+    _axis_ratings,
+    _entity_stats,
+    _score_pairs,
+    _with_entity_stats,
+)
 from ..lifecycle import materialize
+from .knn import plane_weight
+from .multimodal import _detached
 
 N_PLANES = 128
 BAND_WIDTH = 8
@@ -67,25 +84,20 @@ def _key_plane_weights(
     keys: DataFrame, n_planes: int = N_PLANES
 ) -> DataFrame:
     """``(key, wv array<double>)`` — the ``n_planes`` deterministic
-    hyperplane weights of each co-rating key (same md5 family as
-    operators/knn.py::plane_weight, indexed by the key VALUE instead
-    of a dense dimension index, so the matrix is never densified).
-    One narrow Arrow-batched map over the distinct keys — O(keys)."""
+    hyperplane weights of each co-rating key (operators/knn.py::
+    plane_weight, indexed by the key VALUE instead of a dense dimension
+    index, so the matrix is never densified).  One narrow Arrow-batched
+    map over the distinct keys — O(keys)."""
     from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import ArrayType, DoubleType
 
+    w = _detached(plane_weight, hashlib=hashlib)  # ship by value, not package ref
+
     @pandas_udf(ArrayType(DoubleType()))
     def weights(s: pd.Series) -> pd.Series:
-        out = []
-        for key in s:
-            ws = np.empty(n_planes, dtype=np.float64)
-            for p in range(n_planes):
-                h = int(
-                    hashlib.md5(f"{p}_{key}".encode()).hexdigest()[:15], 16
-                )
-                ws[p] = (h % 2000001 - 1000000) / 1000000.0
-            out.append(ws)
-        return pd.Series(out)
+        return pd.Series(
+            [np.array([w(p, key) for p in range(n_planes)]) for key in s]
+        )
 
     return keys.select(F.col("key"), weights(F.col("key")).alias("wv"))
 
@@ -166,7 +178,6 @@ def lsh_pairwise_similarity(
     ratings: DataFrame,
     kernel: str = "cosine",
     axis: str = "user",
-    n_cols: int | None = None,
     directed: bool = True,
     max_raters_per_item: int | None = None,
     n_planes: int = N_PLANES,
@@ -185,27 +196,14 @@ def lsh_pairwise_similarity(
     are dropped, matching the exact path's co-rated-only contract).
     ``max_raters_per_item`` applies the identical hot-key cutoff to
     the rating relation first, so both paths score the same effective
-    matrix."""
-    if axis == "user":
-        ent, key = "user_id", "item_id"
-    elif axis == "item":
-        ent, key = "item_id", "user_id"
-    else:
-        raise ValueError(f"axis must be 'user' or 'item', got {axis!r}")
+    matrix.
 
-    r = ratings.select(
-        F.col(ent).alias("ent"),
-        F.col(key).alias("key"),
-        F.col("rating").alias("r"),
-    )
-    if max_raters_per_item is not None:
-        hot = (
-            r.groupBy("key")
-            .agg(F.count("*").alias("_kn"))
-            .where(F.col("_kn") > max_raters_per_item)
-            .select("key")
-        )
-        r = r.join(F.broadcast(hot), "key", "left_anti")
+    ``euclidean_fallback`` (K5: a primary sim of exactly 0.0 falls back
+    to inverted Euclidean) is reachable only on pairs that collide: a
+    zero-cosine pair rarely does, so callers whose corpora actually
+    exercise K5 (all-positive feature spaces never do) should stay
+    exact."""
+    r, key = _axis_ratings(ratings, axis, max_raters_per_item)
     # duplicate (ent, key) rows would make map_from_entries below throw
     # DUPLICATE_MAP_KEY — sum them first, which DEFINES the effective
     # matrix as the duplicate-summed one (for the dot product this
@@ -222,35 +220,18 @@ def lsh_pairwise_similarity(
     cand = lsh_candidate_pairs(r, n_planes, band_width, max_bucket)
 
     # per-entity profile: rating map + the kernel scalars, one shuffle
-    prof = r.groupBy("ent").agg(
+    prof = _entity_stats(
+        r,
         F.map_from_entries(
             F.collect_list(F.struct(F.col("key"), F.col("r")))
         ).alias("m"),
-        F.sum("r").alias("sum_r"),
-        F.sum(F.col("r") * F.col("r")).alias("sumsq_r"),
-        F.count("*").alias("n_r"),
-    )
-    pa = prof.select(
-        F.col("ent").alias("ea"),
-        F.col("m").alias("ma"),
-        F.col("sum_r").alias("sum_a"),
-        F.col("sumsq_r").alias("sumsq_a"),
-        F.col("n_r").alias("n_a"),
-    )
-    pb = prof.select(
-        F.col("ent").alias("eb"),
-        F.col("m").alias("mb"),
-        F.col("sum_r").alias("sum_b"),
-        F.col("sumsq_r").alias("sumsq_b"),
-        F.col("n_r").alias("n_b"),
     )
     # co-rated dot/count per CANDIDATE pair — map_zip_with pairs the
     # two rating maps on their key union (null where one side misses),
     # all JVM higher-order functions
     zipped = F.map_zip_with("ma", "mb", lambda k, x, y: x * y)
     pairs = (
-        cand.join(pa, "ea")
-        .join(pb, "eb")
+        _with_entity_stats(cand, prof, "m")
         .withColumn("_z", F.map_values(zipped))
         .select(
             "ea",
@@ -270,49 +251,6 @@ def lsh_pairwise_similarity(
         )
         .where(F.col("co") > 0)
     )
-
-    if n_cols is not None:
-        n_expr: Column = F.lit(float(n_cols))
-    elif kernel == "pearson":
-        n_df = ratings.select(
-            F.countDistinct(key).cast("double").alias("_n_cols")
-        )
-        pairs = pairs.crossJoin(F.broadcast(n_df))
-        n_expr = F.col("_n_cols")
-    else:
-        n_expr = F.lit(1.0)
-
-    sims = with_kernel_column(pairs, kernel, n_expr)
-    if euclidean_fallback and kernel != "euclidean":
-        # K5 (mirrors pairwise_similarity): primary sim of exactly 0.0
-        # falls back to inverted Euclidean.  Regime note: under LSH
-        # candidates a zero-cosine pair rarely COLLIDES in the first
-        # place, so the fallback's reachable set is recall-limited like
-        # every other pair — callers whose corpora actually exercise
-        # K5 (all-positive feature spaces never do) should stay exact.
-        sq_dist = F.col("sumsq_a") + F.col("sumsq_b") - 2 * F.col("dot")
-        euclid = 1.0 / (F.sqrt(F.greatest(sq_dist, F.lit(0.0))) + 1.0)
-        sims = sims.withColumn(
-            "sim", F.when(F.col("sim") == 0.0, euclid).otherwise(F.col("sim"))
-        )
-    sims = sims.select("ea", "eb", "sim")
-
-    if directed:
-        # one generator, not Union(X, mirror(X)) — same rationale as
-        # pairwise_similarity (the union would execute the candidate
-        # subtree twice; no ReusedExchange)
-        def _s(x: str, y: str) -> Column:
-            return F.struct(
-                F.col(x).alias("ea"),
-                F.col(y).alias("eb"),
-                F.col("sim").alias("sim"),
-            )
-
-        sims = sims.select(
-            F.explode(F.array(_s("ea", "eb"), _s("eb", "ea"))).alias("_p")
-        ).select("_p.*")
-
-    out_a, out_b = f"{axis}_a", f"{axis}_b"
-    return sims.select(
-        F.col("ea").alias(out_a), F.col("eb").alias(out_b), "sim"
+    return _score_pairs(
+        pairs, ratings, key, kernel, axis, directed, euclidean_fallback
     )

@@ -20,10 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.rounding import qround
-from ..functions.similarity import pairwise_similarity
+from ..functions.similarity import pairwise_similarity_for_pairs
 from .neighborhood import (
-    SIM_ROUND,
+    _axis_neighbors,
+    _neighbor_list,
     predict_from_item_sims,
     topk_from_item_sims,
 )
@@ -83,26 +83,20 @@ def part_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def content_similarities(
     features_long: DataFrame,
     kernel: str = "cosine",
-    n_cols: int | None = None,
-    max_items_per_feature: int | None = None,
     use_lsh_candidates: bool = False,
 ) -> DataFrame:
     """Directed item-item similarity in feature space with the K5
     Euclidean fallback, ready for the shared scoring cores.
     Returns ``(item_id, neighbor_item, sim)``.
 
-    ``max_items_per_feature`` is the hot-key cutoff on the feature join
-    key.  NOTE it is intentionally NOT defaulted on: unlike rating data
+    No hot-key cutoff on the feature join key: unlike rating data
     (where only pathological viral items are hot), a *dense* feature —
     one every item carries, e.g. the scaled ``size``/``price`` columns
     of part_features — is hot by construction, and dropping it changes
-    the kernel.  For catalogs where dense numeric features dominate the
-    pair blowup, the scale path is sign-LSH over the assembled vectors,
-    not this cutoff; the cutoff is for the sparse
-    one-hot tail (a 'brand' shared by half the catalog).
+    the kernel.
 
-    ``use_lsh_candidates`` IS that scale path, shipped (r11): the
-    operators/cf_lsh.py drop-in generates candidate pairs from
+    ``use_lsh_candidates`` is the scale path for dense features (r11):
+    the operators/cf_lsh.py drop-in generates candidate pairs from
     sign-LSH band buckets over the feature vectors and scores ONLY
     candidates with the identical exact kernel — the |catalog|²
     dense-feature self-join never runs (measured 17.8x superlinear at
@@ -110,37 +104,24 @@ def content_similarities(
     pairs collide with prob → 1); emitted values are EXACT; the K5
     fallback's reachable set is recall-limited (moot on all-positive
     feature spaces, where cosine 0.0 never occurs)."""
-    feats_as_ratings = features_long.select(
+    return _axis_neighbors(
+        _feature_ratings(features_long),
+        kernel,
+        "user",  # entities are items, join key is the feature idx
+        "item_id",
+        "neighbor_item",
+        use_lsh_candidates=use_lsh_candidates,
+        euclidean_fallback=True,
+    )
+
+
+def _feature_ratings(features_long: DataFrame) -> DataFrame:
+    """``(item_id, idx, val)`` features in the ratings shape the pair
+    generators read: items as the user axis, feature idx as the key."""
+    return features_long.select(
         F.col("item_id").alias("user_id"),
         F.col("idx").alias("item_id"),
         F.col("val").alias("rating"),
-    )
-    if use_lsh_candidates:
-        from ..operators.cf_lsh import lsh_pairwise_similarity
-
-        sims = lsh_pairwise_similarity(
-            feats_as_ratings,
-            kernel=kernel,
-            axis="user",
-            n_cols=n_cols,
-            directed=True,
-            max_raters_per_item=max_items_per_feature,
-            euclidean_fallback=True,
-        )
-    else:
-        sims = pairwise_similarity(
-            feats_as_ratings,
-            kernel=kernel,
-            axis="user",  # entities are items, join key is the feature idx
-            n_cols=n_cols,
-            directed=True,
-            euclidean_fallback=True,
-            max_raters_per_item=max_items_per_feature,
-        )
-    return sims.select(
-        F.col("user_a").alias("item_id"),
-        F.col("user_b").alias("neighbor_item"),
-        qround("sim", SIM_ROUND).alias("sim"),
     )
 
 
@@ -193,10 +174,8 @@ def predict_content_based(
     all-pairs form took cf_predictions from 28 s (sf0.01) to >560 s
     (sf0.1) on local[32]; the constrained form restores linear
     scaling.  Values are identical — same stats, same
-    with_kernel_column expression, same K5 fallback
+    kernel tail, same K5 fallback
     (functions/similarity.py::pairwise_similarity_for_pairs)."""
-    from ..functions.similarity import pairwise_similarity_for_pairs
-
     needed = (
         pairs.join(
             ratings.select("user_id", F.col("item_id").alias("neighbor_item")),
@@ -209,18 +188,12 @@ def predict_content_based(
         .distinct()
     )
     sims = pairwise_similarity_for_pairs(
-        features_long.select(
-            F.col("item_id").alias("user_id"),
-            F.col("idx").alias("item_id"),
-            F.col("val").alias("rating"),
-        ),
+        _feature_ratings(features_long),
         needed,
         kernel=kernel,
-        axis="user",  # entities are items, join key is the feature idx
+        axis="user",
         euclidean_fallback=True,
-    ).select(
-        F.col("user_a").alias("item_id"),
-        F.col("user_b").alias("neighbor_item"),
-        qround("sim", SIM_ROUND).alias("sim"),
     )
-    return predict_from_item_sims(sims, ratings, pairs, k_neighbors)
+    return predict_from_item_sims(
+        _neighbor_list(sims, "item_id", "neighbor_item"), ratings, pairs, k_neighbors
+    )

@@ -31,11 +31,11 @@ BEFORE ranking so that rank decisions are stable across engines —
 last-ulp float noise must not flip a top-k boundary when results are
 hash-compared against a SQL oracle.
 
-Shared-model path (``prefilter_neighbors`` set and ``materialize``):
-an axis build reads ratings from a lineage-free leaf (``ratings_leaf``,
-a per-call ``lifecycle.checkpoint`` of ``(user_id, item_id, rating)``)
-and ends in a checkpoint of its ranked top-k (``_rank_items``).  The
-leaf is released as soon as the ranked model is checkpointed, since the
+Shared-model path (``prefilter_neighbors`` set): an axis build reads
+ratings from a lineage-free leaf (``ratings_leaf``, a per-call
+``lifecycle.checkpoint`` of ``(user_id, item_id, rating)``) and ends in
+a checkpoint of its ranked top-k (``_rank_items``).  The leaf is
+released as soon as the ranked model is checkpointed, since the
 model no longer reads it; what a call leaves behind is the ranked model
 alone, under owner ``"neighborhood"``.
 
@@ -135,45 +135,53 @@ def _rank_items(
     return ranked
 
 
-def _axis_sims(
+def _neighbor_list(sims: DataFrame, ent: str, neighbor: str) -> DataFrame:
+    """``(ent, neighbor, sim)`` from a directed pair-similarity frame
+    ``(<axis>_a, <axis>_b, sim)``, the sim rounded to ``SIM_ROUND``
+    before anything ranks it."""
+    a, b = sims.columns[:2]
+    return sims.select(
+        F.col(a).alias(ent),
+        F.col(b).alias(neighbor),
+        qround("sim", SIM_ROUND).alias("sim"),
+    )
+
+
+def _axis_neighbors(
     ratings: DataFrame,
     kernel: str,
     axis: str,
-    n_cols: int | None,
-    max_raters_per_item: int | None,
-    use_lsh_candidates: bool,
+    ent: str,
+    neighbor: str,
+    max_raters_per_item: int | None = None,
+    use_lsh_candidates: bool = False,
+    euclidean_fallback: bool = False,
 ) -> DataFrame:
-    """Directed pair similarities for one CF axis — the exact co-rated
-    self-join by default, or sign-LSH candidate generation with exact
-    rerank when ``use_lsh_candidates`` (the extreme-scale switch: same
-    similarity VALUES for every emitted pair, recall < 1 on the pair
-    SET; see operators/cf_lsh.py and tests/test_cf_lsh.py)."""
+    """Rounded directed neighbor list ``(ent, neighbor, sim)`` for one
+    axis — the exact co-rated self-join by default, or sign-LSH
+    candidate generation with exact rerank when ``use_lsh_candidates``
+    (the extreme-scale switch: same similarity VALUES for every emitted
+    pair, recall < 1 on the pair SET; see operators/cf_lsh.py and
+    tests/test_cf_lsh.py)."""
     if use_lsh_candidates:
-        from ..operators.cf_lsh import lsh_pairwise_similarity
-
-        return lsh_pairwise_similarity(
-            ratings,
-            kernel=kernel,
-            axis=axis,
-            n_cols=n_cols,
-            directed=True,
-            max_raters_per_item=max_raters_per_item,
-        )
-    return pairwise_similarity(
+        from ..operators.cf_lsh import lsh_pairwise_similarity as pairs_fn
+    else:
+        pairs_fn = pairwise_similarity
+    sims = pairs_fn(
         ratings,
         kernel=kernel,
         axis=axis,
-        n_cols=n_cols,
         directed=True,
         max_raters_per_item=max_raters_per_item,
+        euclidean_fallback=euclidean_fallback,
     )
+    return _neighbor_list(sims, ent, neighbor)
 
 
 def user_based_scored(
     ratings: DataFrame,
     k_neighbors: int = 25,
     kernel: str = "cosine",
-    n_cols: int | None = None,
     max_raters_per_item: int | None = None,
     prefilter_neighbors: int | None = None,
     use_lsh_candidates: bool = False,
@@ -183,17 +191,9 @@ def user_based_scored(
     per-user rank filter.  NOT materialized: every consumer reads it
     exactly once, through the rank window of _rank_items, whose output
     is the checkpointed model."""
-    sims = _axis_sims(
-        ratings,
-        kernel=kernel,
-        axis="user",
-        n_cols=n_cols,
-        max_raters_per_item=max_raters_per_item,
-        use_lsh_candidates=use_lsh_candidates,
-    ).select(
-        F.col("user_a").alias("user_id"),
-        F.col("user_b").alias("neighbor"),
-        qround("sim", SIM_ROUND).alias("sim"),
+    sims = _axis_neighbors(
+        ratings, kernel, "user", "user_id", "neighbor",
+        max_raters_per_item, use_lsh_candidates,
     )
 
     if prefilter_neighbors is not None:
@@ -294,10 +294,8 @@ def user_based_topk(
     k_neighbors: int = 25,
     k_items: int = 5,
     kernel: str = "cosine",
-    n_cols: int | None = None,
     max_raters_per_item: int | None = None,
     prefilter_neighbors: int | None = None,
-    materialize: bool = True,
     use_lsh_candidates: bool = False,
 ) -> DataFrame:
     """Top-K unrated items per user via user k-NN (reference M3).
@@ -313,20 +311,19 @@ def user_based_topk(
     = ``prefilter_neighbors=None``.
 
     With ``prefilter_neighbors`` set, the ranked top-k is checkpointed
-    as the model (see _rank_items); ``materialize=False`` skips that
-    and builds the plan without running any Spark job.
+    as the model (see _rank_items); without it the plan is built
+    without running any Spark job.
 
     ``use_lsh_candidates=True`` swaps the co-rated pair self-join for
     sign-LSH candidate generation with exact rerank — the
-    extreme-scale switch (see _axis_sims / operators/cf_lsh.py).
+    extreme-scale switch (see _axis_neighbors / operators/cf_lsh.py).
     """
-    share = prefilter_neighbors is not None and materialize
+    share = prefilter_neighbors is not None
     with ratings_leaf(ratings, share) as leaf:
         scored = user_based_scored(
             leaf,
             k_neighbors=k_neighbors,
             kernel=kernel,
-            n_cols=n_cols,
             max_raters_per_item=max_raters_per_item,
             prefilter_neighbors=prefilter_neighbors,
             use_lsh_candidates=use_lsh_candidates,
@@ -338,24 +335,15 @@ def item_based_scored(
     ratings: DataFrame,
     k_neighbors: int = 25,
     kernel: str = "cosine",
-    n_cols: int | None = None,
     max_raters_per_item: int | None = None,
     prefilter_neighbors: int | None = None,
     use_lsh_candidates: bool = False,
 ) -> DataFrame:
     """Pre-rank scored candidates for item k-NN — :func:`item_based_topk`
     minus the final rank filter (see user_based_scored)."""
-    sims = _axis_sims(
-        ratings,
-        kernel=kernel,
-        axis="item",
-        n_cols=n_cols,
-        max_raters_per_item=max_raters_per_item,
-        use_lsh_candidates=use_lsh_candidates,
-    ).select(
-        F.col("item_a").alias("item_id"),
-        F.col("item_b").alias("neighbor_item"),
-        qround("sim", SIM_ROUND).alias("sim"),
+    sims = _axis_neighbors(
+        ratings, kernel, "item", "item_id", "neighbor_item",
+        max_raters_per_item, use_lsh_candidates,
     )
     return scored_from_item_sims(sims, ratings, k_neighbors, prefilter_neighbors)
 
@@ -365,10 +353,8 @@ def item_based_topk(
     k_neighbors: int = 25,
     k_items: int = 5,
     kernel: str = "cosine",
-    n_cols: int | None = None,
     max_raters_per_item: int | None = None,
     prefilter_neighbors: int | None = None,
-    materialize: bool = True,
     use_lsh_candidates: bool = False,
 ) -> DataFrame:
     """Top-K unrated items per user via item k-NN (reference M5).
@@ -379,13 +365,12 @@ def item_based_topk(
 
     ``use_lsh_candidates``: see :func:`user_based_topk`.
     """
-    share = prefilter_neighbors is not None and materialize
+    share = prefilter_neighbors is not None
     with ratings_leaf(ratings, share) as leaf:
         scored = item_based_scored(
             leaf,
             k_neighbors=k_neighbors,
             kernel=kernel,
-            n_cols=n_cols,
             max_raters_per_item=max_raters_per_item,
             prefilter_neighbors=prefilter_neighbors,
             use_lsh_candidates=use_lsh_candidates,
@@ -462,7 +447,6 @@ def topk_from_item_sims(
     k_neighbors: int,
     k_items: int,
     prefilter_neighbors: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Item-neighbor scoring core: top-K per user from a directed
     item-similarity DataFrame ``(item_id, neighbor_item, sim)``.
@@ -472,7 +456,7 @@ def topk_from_item_sims(
     with identical scoring (ItemBasedTopKRecommender.scala:62-70,
     ContentBasedTopKRecommender.scala:71-79: Σ sim·r / Σ|sim|).
     """
-    share = prefilter_neighbors is not None and materialize
+    share = prefilter_neighbors is not None
     with ratings_leaf(ratings, share) as leaf:
         scored = scored_from_item_sims(sims, leaf, k_neighbors, prefilter_neighbors)
         return _rank_items(scored, k_items, share=share)
@@ -483,7 +467,6 @@ def predict_user_based(
     pairs: DataFrame,
     k_neighbors: int = 25,
     kernel: str = "cosine",
-    n_cols: int | None = None,
     max_raters_per_item: int | None = None,
 ) -> DataFrame:
     """Predict ratings for explicit (user_id, item_id) pairs (reference M2).
@@ -498,17 +481,8 @@ def predict_user_based(
     prediction family keeps the uncapped quadratic pair join the top-K
     family already guards against.
     """
-    sims = pairwise_similarity(
-        ratings,
-        kernel=kernel,
-        axis="user",
-        n_cols=n_cols,
-        directed=True,
-        max_raters_per_item=max_raters_per_item,
-    ).select(
-        F.col("user_a").alias("user_id"),
-        F.col("user_b").alias("neighbor"),
-        qround("sim", SIM_ROUND).alias("sim"),
+    sims = _axis_neighbors(
+        ratings, kernel, "user", "user_id", "neighbor", max_raters_per_item
     )
     neigh_r = ratings.select(
         F.col("user_id").alias("neighbor"), "item_id", F.col("rating").alias("r_n")
@@ -561,7 +535,6 @@ def predict_item_based(
     pairs: DataFrame,
     k_neighbors: int = 25,
     kernel: str = "cosine",
-    n_cols: int | None = None,
     max_raters_per_item: int | None = None,
 ) -> DataFrame:
     """Predict ratings for explicit pairs via item k-NN (reference M4).
@@ -571,17 +544,8 @@ def predict_item_based(
     (ItemBasedRatingRecommender.scala:36-72).
     ``max_raters_per_item``: same skew guard as predict_user_based.
     """
-    sims = pairwise_similarity(
-        ratings,
-        kernel=kernel,
-        axis="item",
-        n_cols=n_cols,
-        directed=True,
-        max_raters_per_item=max_raters_per_item,
-    ).select(
-        F.col("item_a").alias("item_id"),
-        F.col("item_b").alias("neighbor_item"),
-        qround("sim", SIM_ROUND).alias("sim"),
+    sims = _axis_neighbors(
+        ratings, kernel, "item", "item_id", "neighbor_item", max_raters_per_item
     )
     return predict_from_item_sims(sims, ratings, pairs, k_neighbors)
 

@@ -246,8 +246,9 @@ def test_bench_set_is_stable():
 def test_removed_code_stays_removed():
     """Source scan: no module of the package or the tests, nor bench.py
     or .claude/, names a stress script other than full_registry_cert.py;
-    the registry's second decorator name is gone everywhere; and
-    ``als_topk`` takes none of its removed tuning options."""
+    the registry's second decorator name is gone everywhere;
+    ``als_topk`` takes none of its removed tuning options; and the
+    similarity / CF functions take none of theirs."""
     import inspect
     import re
     from pathlib import Path
@@ -268,6 +269,35 @@ def test_removed_code_stays_removed():
     removed = {"num_blocks", "intermediate_storage", "chunk_budget_f32",
                "serve_partitions", "headroom"}
     assert not removed & set(inspect.signature(als_topk).parameters)
+
+    # the similarity / CF options no caller set, and the unused
+    # top_k_neighbors, are gone; the axis → (ent, key) mapping and the
+    # hot-key aggregate live only in functions/similarity.py
+    from recsys_spark_spark.functions import similarity
+    from recsys_spark_spark.operators import cf_lsh
+    from recsys_spark_spark.recommenders import content, neighborhood as nb
+
+    public = [
+        similarity.pairwise_similarity, similarity.pairwise_similarity_for_pairs,
+        cf_lsh.lsh_pairwise_similarity, content.content_similarities,
+        nb.user_based_scored, nb.user_based_topk, nb.item_based_scored,
+        nb.item_based_topk, nb.predict_user_based, nb.predict_item_based,
+        nb.topk_from_item_sims,
+    ]
+    gone = {"n_cols", "materialize", "max_items_per_feature"}
+    assert [
+        f.__name__ for f in public if gone & set(inspect.signature(f).parameters)
+    ] == []
+    assert not hasattr(similarity, "top_k_neighbors")
+    axis_map = re.compile(r'axis == "user":\s*ent, key = "user_id", "item_id"')
+    hot_agg = re.compile(r'groupBy\("key"\)\s*\.agg\(F\.count')
+    package = {f: t for f, t in texts.items() if f.startswith("recsys_spark_spark")}
+    assert [f for f, t in package.items() if axis_map.search(t)] == [
+        "recsys_spark_spark/functions/similarity.py"
+    ]
+    assert [f for f, t in package.items() if hot_agg.search(t)] == [
+        "recsys_spark_spark/functions/similarity.py"
+    ]
 
 
 def test_bench_normalized_grand_validity_domain():
@@ -458,13 +488,12 @@ def test_cf_axis_reads_a_ratings_leaf(spark):
 
 
 def test_lazy_cf_axis_runs_no_job(spark):
-    """With materialize=False the axis plan is built without running a
-    Spark job: no ratings leaf and no ranked checkpoint are taken."""
+    """Without a neighbor prefilter the axis plan is built without
+    running a Spark job: no ratings leaf and no ranked checkpoint are
+    taken."""
     from recsys_spark_spark.recommenders.neighborhood import user_based_topk
 
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None))
-    user_based_topk(
-        _grid_ratings(spark), 5, 4, prefilter_neighbors=10, materialize=False
-    )
+    user_based_topk(_grid_ratings(spark), 5, 4, prefilter_neighbors=None)
     assert len(tracker.getJobIdsForGroup(None)) == before

@@ -86,6 +86,39 @@ def test_features_csv_shape(spark):
         assert vals <= {0, 1}
 
 
+def test_features_csv_to_content_topk(spark, tmp_path):
+    """The reference S2 path end to end at fixture scale: a header CSV
+    of id + 0/1 genre flags → long format (zeros dropped) → content
+    top-k.  Binary cosines: 1~2 = 1, 1~5 = 2~5 = 3~4 = 3~5 = 1/√2,
+    4~5 = 1/2, and 1~3 share no flag (no pair).  User 1 rated items 1
+    (4.0) and 3 (2.0): item 2's one neighbor is item 1 → 4.0; item 5
+    averages items 1 and 3 at equal sims → 3.0; item 4's one neighbor
+    is item 3 → 2.0.  User 2 rated item 5 (5.0), so all four candidates score
+    5.0 and ties rank by item id."""
+    from recsys_spark_spark.recommenders.content import (
+        content_based_topk,
+        features_long_from_wide,
+    )
+
+    path = tmp_path / "features.csv"
+    path.write_text("id,g1,g2,g3\n1,1,0,0\n2,1,0,0\n3,0,1,0\n4,0,1,1\n5,1,1,0\n")
+    wide = read_features_csv(spark, str(path))
+    long = features_long_from_wide(wide, wide.columns[0])
+    assert sorted(tuple(r) for r in long.collect()) == [
+        (1, "g1", 1.0), (2, "g1", 1.0), (3, "g2", 1.0), (4, "g2", 1.0),
+        (4, "g3", 1.0), (5, "g1", 1.0), (5, "g2", 1.0),
+    ]
+    ratings = spark.createDataFrame(
+        [(1, 1, 4.0), (1, 3, 2.0), (2, 5, 5.0)],
+        "user_id int, item_id int, rating double",
+    )
+    top = content_based_topk(ratings, long, k_neighbors=5, k_items=3)
+    assert sorted(tuple(r) for r in top.collect()) == [
+        (1, 2, 4.0, 1), (1, 4, 2.0, 3), (1, 5, 3.0, 2),
+        (2, 1, 5.0, 1), (2, 2, 5.0, 2), (2, 3, 5.0, 3),
+    ]
+
+
 def test_spread_scan_spreads_undersplit_and_noops_at_scale(spark, sf_dir):
     """r14 perf contract: spread_scan must lift a 1-task small-file
     scan to the session's default parallelism (the whole testdata star

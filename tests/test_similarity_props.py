@@ -11,7 +11,13 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from recsys_spark_spark.functions.similarity import pairwise_similarity
+from recsys_spark_spark import lifecycle
+from recsys_spark_spark.functions.similarity import (
+    KERNELS,
+    pairwise_similarity,
+    pairwise_similarity_for_pairs,
+)
+from recsys_spark_spark.operators.cf_lsh import lsh_pairwise_similarity
 
 ratings_strategy = st.dictionaries(
     keys=st.tuples(st.integers(1, 5), st.integers(1, 6)),
@@ -95,6 +101,57 @@ def test_hot_key_cap_equals_prefiltered_input(spark, rat, cap):
         (r["user_a"], r["user_b"], round(r["sim"], 9)) for r in rows
     )
     assert norm(capped) == norm(manual)
+
+
+def _sims(rows):
+    return {(r["user_a"], r["user_b"]): r["sim"] for r in rows}
+
+
+def _same_sim(x, y):
+    if x is None or y is None:
+        return x is None and y is None
+    return abs(x - y) <= 1e-9
+
+
+@pytest.mark.parametrize("fallback", [False, True])
+@pytest.mark.parametrize("cap", [None, 3])
+@pytest.mark.parametrize("kernel", KERNELS)
+@given(rat=ratings_strategy)
+@settings(SETTINGS, max_examples=3)
+def test_pair_generators_agree(spark, rat, kernel, cap, fallback):
+    """The three pair generators differ only in how they find pairs:
+    the requested-pairs form, given every directed co-rated pair,
+    returns exactly the self-join's rows and sims, and the LSH form
+    (one-bit bands, no bucket cap) carries the
+    self-join's sim on every pair it emits."""
+    df = _df(spark, rat)
+    opts = dict(
+        kernel=kernel, axis="user", max_raters_per_item=cap,
+        euclidean_fallback=fallback,
+    )
+    exact = _sims(pairwise_similarity(df, **opts).collect())
+
+    raters = {}
+    for (u, i) in rat:
+        raters.setdefault(i, set()).add(u)
+    wanted = sorted(
+        {(a, b) for us in raters.values() for a in us for b in us if a != b}
+    )
+    cand = spark.createDataFrame(wanted, "user_a int, user_b int")
+    for_pairs = _sims(pairwise_similarity_for_pairs(df, cand, **opts).collect())
+    assert for_pairs.keys() == exact.keys()
+    assert all(_same_sim(for_pairs[p], exact[p]) for p in exact)
+
+    try:
+        lsh = _sims(
+            lsh_pairwise_similarity(
+                df, n_planes=16, band_width=1, max_bucket=None, **opts
+            ).collect()
+        )
+    finally:
+        lifecycle.release("cf_lsh")
+    assert lsh.keys() <= exact.keys()
+    assert all(_same_sim(lsh[p], exact[p]) for p in lsh)
 
 
 def test_pearson_zero_variance_is_null_not_error(spark):
