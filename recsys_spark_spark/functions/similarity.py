@@ -49,7 +49,7 @@ the exact join.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 KERNELS = ("cosine", "pearson", "euclidean", "jaccard")
@@ -104,22 +104,34 @@ def with_kernel_column(
     return df.withColumn("sim", sim)
 
 
-def _drop_hot_keys(r: DataFrame, max_raters_per_item: int | None) -> DataFrame:
-    """Drop the ``(ent, key, r)`` rows of join keys with more than
-    ``max_raters_per_item`` rows (the skew guard for the quadratic
-    self-join); no-op when the cap is None.  Hot keys are by
-    construction FEW (each contributes n² pair rows), so a broadcast
-    anti-join beats a full count-join: the fact table streams once
-    against a tiny in-memory set."""
-    if max_raters_per_item is None:
-        return r
-    hot = (
-        r.groupBy("key")
-        .agg(F.count("*").alias("_kn"))
-        .where(F.col("_kn") > max_raters_per_item)
-        .select("key")
+#: per-row columns of a ratings index (``with_index_columns``): the
+#: item's row count, the user's row count and the user's mean rating
+INDEX_COLUMNS = ("n_item", "n_user", "mean_u")
+
+
+def with_index_columns(ratings: DataFrame) -> DataFrame:
+    """``(user_id, item_id, rating)`` plus the :data:`INDEX_COLUMNS` on
+    every row, lazily; a frame that already carries them is returned as
+    it is, so every pair generator can pass its input through here and
+    a checkpointed index (``neighborhood.ratings_index``) is read as
+    built.
+
+    The counts are the hot-key guard's input: an axis drops a row whose
+    join key has more rows than ``max_raters_per_item`` with one filter
+    on the key's count column (see ``_axis_ratings``).  ``mean_u`` is
+    the user mean over rated entries that user-based CF centres on
+    (UserBasedRatingRecommender.scala:41-45)."""
+    if set(INDEX_COLUMNS) <= set(ratings.columns):
+        return ratings
+    by_item, by_user = Window.partitionBy("item_id"), Window.partitionBy("user_id")
+    return ratings.select(
+        "user_id",
+        "item_id",
+        "rating",
+        F.count("*").over(by_item).alias("n_item"),
+        F.count("*").over(by_user).alias("n_user"),
+        F.avg("rating").over(by_user).alias("mean_u"),
     )
-    return r.join(F.broadcast(hot), "key", "left_anti")
 
 
 def _axis_ratings(
@@ -128,22 +140,34 @@ def _axis_ratings(
     """One axis of long-format ratings as ``(ent, key, r)`` rows with the
     hot keys dropped, and the name of the ratings column that is the
     join key (``"user"`` → users over shared items, ``"item"`` → items
-    over shared users)."""
+    over shared users).  A key is hot when it has more than
+    ``max_raters_per_item`` rows (the skew guard for the quadratic
+    self-join; none when the cap is None)."""
     if axis == "user":
-        ent, key = "user_id", "item_id"
+        ent, key, key_rows = "user_id", "item_id", "n_item"
     elif axis == "item":
-        ent, key = "item_id", "user_id"
+        ent, key, key_rows = "item_id", "user_id", "n_user"
     else:
         raise ValueError(f"axis must be 'user' or 'item', got {axis!r}")
-    r = ratings.select(
-        F.col(ent).alias("ent"), F.col(key).alias("key"), F.col("rating").alias("r")
-    )
-    return _drop_hot_keys(r, max_raters_per_item), key
+    if max_raters_per_item is not None:
+        ratings = with_index_columns(ratings).where(
+            F.col(key_rows) <= max_raters_per_item
+        )
+    cols = [F.col(ent).alias("ent"), F.col(key).alias("key"), F.col("rating").alias("r")]
+    if axis == "user" and "mean_u" in ratings.columns:
+        # an index carries the user mean: it rides through the entity
+        # stats to the output's ``mean_a`` (see _score_pairs), so user
+        # k-NN scoring needs no means aggregate of its own
+        cols.append("mean_u")
+    return ratings.select(*cols), key
 
 
 def _entity_stats(r: DataFrame, *extra: Column) -> DataFrame:
     """Per-entity kernel scalars ``(ent, *extra, sum_r, sumsq_r, n_r)``
-    — one shuffle on ent, reused on both sides of every pair."""
+    — one shuffle on ent, reused on both sides of every pair — plus
+    ``mean_`` when ``r`` carries the entity's ``mean_u``."""
+    if "mean_u" in r.columns:
+        extra = (*extra, F.first("mean_u").alias("mean_"))
     return r.groupBy("ent").agg(
         *extra,
         F.sum("r").alias("sum_r"),
@@ -157,7 +181,10 @@ def _with_entity_stats(
 ) -> DataFrame:
     """Join ``stats`` onto both sides of ``(ea, eb, ...)`` pairs: each
     side's scalars arrive as ``sum_a`` / ``sumsq_a`` / ``n_a`` (and
-    ``_b``), each ``extra`` stats column ``c`` as ``ca`` / ``cb``."""
+    ``_b``, and ``mean_a`` / ``mean_b`` when the stats carry
+    ``mean_``), each ``extra`` stats column ``c`` as ``ca`` / ``cb``."""
+    if "mean_" in stats.columns:
+        extra = (*extra, "mean_")
 
     def side(s: str) -> DataFrame:
         return stats.select(
@@ -184,8 +211,13 @@ def _score_pairs(
     """The tail every pair generator shares: kernel columns over an
     enriched pair-stats relation ``(ea, eb, dot, co, sum_a, ..., n_b)``,
     the K5 fallback, the optional mirror and the ``{axis}_a`` /
-    ``{axis}_b`` output names.  Generators differ only in how they
-    produce the pairs and their ``dot`` / ``co``."""
+    ``{axis}_b`` output names, followed by ``mean_a``, the user mean of
+    ``user_a``, when the ratings were an index (see _axis_ratings).
+    Generators differ only in how they produce the pairs and their
+    ``dot`` / ``co``."""
+    # each side's user mean, when carried: the mirror swaps them with
+    # ea / eb
+    means = ["mean_a", "mean_b"] if "mean_a" in enriched.columns else []
     kernels: tuple[str, ...] = (kernel,) if isinstance(kernel, str) else kernel
     multi = not isinstance(kernel, str)
     if euclidean_fallback and multi:
@@ -216,7 +248,7 @@ def _score_pairs(
         sims = sims.withColumn(
             "sim", F.when(F.col("sim") == 0.0, euclid).otherwise(F.col("sim"))
         )
-    sims = sims.select("ea", "eb", *sim_cols, *extra)
+    sims = sims.select("ea", "eb", *sim_cols, *extra, *means)
 
     if directed:
         # one generator, not a self-union: Union(X, mirror(X)) plans X
@@ -229,6 +261,7 @@ def _score_pairs(
                 F.col(x).alias("ea"),
                 F.col(y).alias("eb"),
                 *[F.col(c).alias(c) for c in (*sim_cols, *extra)],
+                *([F.col(f"mean_{x[1]}").alias("mean_a")] if means else []),
             )
 
         sims = sims.select(
@@ -240,6 +273,7 @@ def _score_pairs(
         F.col("eb").alias(f"{axis}_b"),
         *sim_cols,
         *extra,
+        *means[:1],
     )
 
 

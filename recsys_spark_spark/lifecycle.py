@@ -15,7 +15,7 @@ registers its release in one pool keyed by an owner:
   holds them is lost.
 
 Use :func:`checkpoint` for a leaf that later plans are built on (the
-neighborhood models' ranked top-k, a CF axis' ratings); use
+neighborhood models' ranked top-k, the CF ratings index); use
 :func:`materialize` everywhere else.
 
 The owner is a module name (``"als"``, ``"cf_lsh"``, ``"dedup"``,
@@ -25,7 +25,11 @@ model instance that releases its own caches at the end of a fit or on
 a refit, or a fresh ``object()`` for state that lives only inside one
 call, which the call releases before it returns.  State that is not a
 DataFrame joins the same pool through :func:`on_release` (a
-broadcast's ``destroy``, MLlib's factor RDDs).
+broadcast's ``destroy``, MLlib's factor RDDs).  The one entry whose
+lifetime is neither a call nor an owner's release is the CF ratings
+index (``recommenders.neighborhood.ratings_index``): it is
+checkpointed under its own token, released with ``"neighborhood"``,
+and also when a CF call on another ratings frame replaces it.
 
 :func:`release` runs one owner's releases, or every release when no
 owner is given; ``plans.registry.release_query_state`` calls the bare

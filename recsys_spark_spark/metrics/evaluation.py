@@ -122,69 +122,66 @@ def ranking_metrics(
     relevant: DataFrame,
     k: int = 5,
 ) -> DataFrame:
-    """Per-user P@k / R@k / AP@k.
+    """Per-user P@k / R@k / AP@k / NDCG@k / MRR@k.
 
     ``recommended``: (user_id, item_id, rank) with rank 1..k.
     ``relevant``: (user_id, item_id) ground-truth positives.
     Users in ``recommended`` with no relevant row score 0 (X2's
     empty-relevant rule).
+
+    One per-user aggregate: both inputs are unioned, grouped by
+    (user, item), then by user.  The (user, item) grouping gives SET
+    semantics to both inputs, like the reference (and
+    compat.RankingMetrics, which materializes Python sets): a
+    duplicate row counts once, and an item recommended at two ranks
+    keeps its best.  The evaluation universe is recommended ∪ relevant
+    users: a user who holds relevant items but received NO
+    recommendations (cold-start drop, empty candidate set) scores 0 in
+    the averages — the reference harness iterates test users, so
+    dropping them would silently inflate every mean.
     """
     del spark  # kept for the public signature; the coefficients are literals
-    # SET semantics, like the reference (and compat.RankingMetrics,
-    # which materializes Python sets): duplicate (user, item) rows in
-    # either input would multiply the hits join and push P@k past 1.0
-    relevant = relevant.select("user_id", "item_id").distinct()
-    hits = recommended.join(relevant, ["user_id", "item_id"]).select(
-        "user_id",
-        "rank",
-        _rank_case(k, lambda r: ap_coefficient(k, r)).alias("c"),
-        _rank_case(k, dcg_coefficient).alias("g"),
-    )
-    per_user_hits = (
-        # a rank outside 1..k has no coefficient (NULL) and drops out
-        hits.where(F.col("c").isNotNull())
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_hits"),
-            F.sum("c").alias("c_sum"),
-            F.sum("g").alias("g_sum"),
-            F.min("rank").alias("first_hit"),
-        )
-    )
-    rel_counts = relevant.groupBy("user_id").agg(F.count("*").alias("n_rel"))
-    # evaluation universe = recommended ∪ relevant users: a user who
-    # holds relevant items but received NO recommendations (cold-start
-    # drop, empty candidate set) must score 0 in the averages — the
-    # reference harness iterates test users, so dropping them would
-    # silently inflate every mean
-    users = (
-        recommended.select("user_id")
-        .unionByName(relevant.select("user_id"))
-        .distinct()
-    )
-    return (
-        users.join(per_user_hits, "user_id", "left")
-        .join(rel_counts, "user_id", "left")
-        .select(
+    rows = recommended.select(
+        "user_id", "item_id", "rank", F.lit(False).alias("rel")
+    ).unionByName(
+        relevant.select(
             "user_id",
-            (F.coalesce("n_hits", F.lit(0)) / F.lit(float(k))).alias("p_at_k"),
-            F.when(
-                F.col("n_rel").isNull() | (F.col("n_rel") == 0), F.lit(0.0)
-            )
-            .otherwise(
-                F.coalesce("n_hits", F.lit(0)) / F.col("n_rel").cast("double")
-            )
-            .alias("r_at_k"),
-            (F.coalesce("c_sum", F.lit(0.0)) / F.lit(float(k))).alias("ap_at_k"),
-            _ndcg_col(k).alias("ndcg_at_k"),
-            # MRR@k: reciprocal rank of the FIRST hit (pure rational
-            # arithmetic — identical in both engines), 0 when no hit
-            F.when(
-                F.col("first_hit").isNull(), F.lit(0.0)
-            )
-            .otherwise(F.lit(1.0) / F.col("first_hit"))
-            .alias("rr_at_k"),
+            "item_id",
+            F.lit(None).cast("int").alias("rank"),
+            F.lit(True).alias("rel"),
         )
+    )
+    # one exchange on user_id serves both groupings: a (user, item)
+    # group never spans two user partitions
+    items = (
+        rows.repartition("user_id")
+        .groupBy("user_id", "item_id")
+        .agg(F.min("rank").alias("rank"), F.max("rel").alias("rel"))
+    )
+    # a hit is a relevant item at a rank in 1..k (outside it the
+    # coefficient is NULL)
+    c = _rank_case(k, lambda r: ap_coefficient(k, r))
+    hit = F.col("rel") & c.isNotNull()
+    per_user = items.groupBy("user_id").agg(
+        F.count(F.when(hit, 1)).alias("n_hits"),
+        F.sum(F.when(hit, c)).alias("c_sum"),
+        F.sum(F.when(hit, _rank_case(k, dcg_coefficient))).alias("g_sum"),
+        F.min(F.when(hit, F.col("rank"))).alias("first_hit"),
+        F.count(F.when(F.col("rel"), 1)).alias("n_rel"),
+    )
+    return per_user.select(
+        "user_id",
+        (F.col("n_hits") / F.lit(float(k))).alias("p_at_k"),
+        F.when(F.col("n_rel") == 0, F.lit(0.0))
+        .otherwise(F.col("n_hits") / F.col("n_rel").cast("double"))
+        .alias("r_at_k"),
+        (F.coalesce("c_sum", F.lit(0.0)) / F.lit(float(k))).alias("ap_at_k"),
+        _ndcg_col(k).alias("ndcg_at_k"),
+        # MRR@k: reciprocal rank of the FIRST hit (pure rational
+        # arithmetic — identical in both engines), 0 when no hit
+        F.when(F.col("first_hit").isNull(), F.lit(0.0))
+        .otherwise(F.lit(1.0) / F.col("first_hit"))
+        .alias("rr_at_k"),
     )
 
 
@@ -208,9 +205,8 @@ def _ndcg_col(k: int):
         ideal = F.when(F.col("n_rel") == n, F.lit(idcg(k, n))).otherwise(
             ideal
         )
-    return (
-        F.when(F.col("n_rel").isNull() | (F.col("n_rel") == 0), F.lit(0.0))
-        .otherwise(F.coalesce("g_sum", F.lit(0.0)) / ideal)
+    return F.when(F.col("n_rel") == 0, F.lit(0.0)).otherwise(
+        F.coalesce("g_sum", F.lit(0.0)) / ideal
     )
 
 

@@ -211,7 +211,10 @@ def lsh_pairwise_similarity(
     # Σᵢ Σⱼ rᵃᵢ·rᵇⱼ = (Σ rᵃ)(Σ rᵇ), the product of the summed entries);
     # a no-op single-pass pre-aggregation when (ent, key) is unique,
     # as rating data is
-    r = r.groupBy("ent", "key").agg(F.sum("r").alias("r"))
+    r = r.groupBy("ent", "key").agg(
+        F.sum("r").alias("r"),
+        *([F.first("mean_u").alias("mean_u")] if "mean_u" in r.columns else []),
+    )
     # the rating relation feeds the signature pass AND both sides of
     # the entity-profile join; it must outlive the returned lazy sims,
     # so the caller frees it with lifecycle.release("cf_lsh")
@@ -234,14 +237,7 @@ def lsh_pairwise_similarity(
         _with_entity_stats(cand, prof, "m")
         .withColumn("_z", F.map_values(zipped))
         .select(
-            "ea",
-            "eb",
-            "sum_a",
-            "sumsq_a",
-            "n_a",
-            "sum_b",
-            "sumsq_b",
-            "n_b",
+            "*",
             F.aggregate(
                 "_z", F.lit(0.0), lambda acc, v: acc + F.coalesce(v, F.lit(0.0))
             ).alias("dot"),
@@ -249,6 +245,7 @@ def lsh_pairwise_similarity(
                 "co"
             ),
         )
+        .drop("ma", "mb", "_z")
         .where(F.col("co") > 0)
     )
     return _score_pairs(

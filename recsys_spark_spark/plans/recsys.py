@@ -424,15 +424,14 @@ def hybrid_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     interleaves the jobs and each axis' straggler stages overlap the
     other's compute instead of serializing behind it (the blend itself
     then plans over the two checkpoints).  Both axes read one
-    lineage-free ratings leaf (``ratings_leaf``), checkpointed first
-    and released once both ranked models are checkpointed."""
+    lineage-free ratings index (``ratings_index``), checkpointed first
+    and held until the next ``release("neighborhood")``."""
     from concurrent.futures import ThreadPoolExecutor
-    from contextlib import ExitStack
 
     from ..recommenders.neighborhood import (
         _rank_items,
         item_based_scored,
-        ratings_leaf,
+        ratings_index,
         user_based_scored,
     )
 
@@ -443,28 +442,25 @@ def hybrid_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         with phase(name):
             return _rank_items(scored, CHILD_K, share=True)
 
-    with ExitStack() as scope:
-        with phase("ratings"):
-            ratings = scope.enter_context(
-                ratings_leaf(_cached_ratings(spark, sf_dir))
-            )
-        u_scored = user_based_scored(
-            ratings,
-            K_NEIGHBORS,
-            "cosine",
-            max_raters_per_item=MAX_RATERS_PER_ITEM,
-            prefilter_neighbors=PREFILTER,
-        )
-        i_scored = item_based_scored(
-            ratings,
-            K_NEIGHBORS,
-            "cosine",
-            max_raters_per_item=MAX_RATERS_PER_ITEM,
-            prefilter_neighbors=PREFILTER,
-        )
-        # the two axis phases overlap; "axes_wall" is their elapsed span
-        with phase("axes_wall"), ThreadPoolExecutor(2) as ex:
-            u, i = ex.map(_axis, (("axis_user", u_scored), ("axis_item", i_scored)))
+    with phase("ratings"):
+        ratings = ratings_index(_cached_ratings(spark, sf_dir))
+    u_scored = user_based_scored(
+        ratings,
+        K_NEIGHBORS,
+        "cosine",
+        max_raters_per_item=MAX_RATERS_PER_ITEM,
+        prefilter_neighbors=PREFILTER,
+    )
+    i_scored = item_based_scored(
+        ratings,
+        K_NEIGHBORS,
+        "cosine",
+        max_raters_per_item=MAX_RATERS_PER_ITEM,
+        prefilter_neighbors=PREFILTER,
+    )
+    # the two axis phases overlap; "axes_wall" is their elapsed span
+    with phase("axes_wall"), ThreadPoolExecutor(2) as ex:
+        u, i = ex.map(_axis, (("axis_user", u_scored), ("axis_item", i_scored)))
     return hybrid_topk(u, i, weight_a=0.6, weight_b=0.4, k_items=K_ITEMS)
 
 

@@ -20,20 +20,10 @@ from ..functions.rounding import qround
 from .neighborhood import SCORE_ROUND
 
 
-def _normalize(rec: DataFrame, weight: float) -> DataFrame:
-    """score → weight · score / max(score) per user
-    (HybridRecommenderTopK.scala:69-79)."""
-    w = Window.partitionBy("user_id")
-    mx = F.max("score").over(w)
-    # A user whose entire child list scores exactly 0 makes max(score)
-    # a zero denominator — ANSI Spark errors where the reference's
-    # Scala doubles gave NaN.  Emit NULL instead (mirrored by NULLIF
-    # in the oracle SQL): sum() ignores it, so the other child's
-    # weighted score still counts, and an all-NULL user ranks last.
+def _weighted(rec: DataFrame, weight: float, child: int) -> DataFrame:
+    """``rec``'s rows tagged with its blend weight and child number."""
     return rec.select(
-        "user_id",
-        "item_id",
-        F.when(mx != 0.0, F.lit(weight) * F.col("score") / mx).alias("wscore"),
+        "user_id", "item_id", "score", F.lit(weight).alias("w"), F.lit(child).alias("child")
     )
 
 
@@ -46,13 +36,33 @@ def hybrid_topk(
 ) -> DataFrame:
     """Blend two scored recommendation DataFrames into a top-K.
 
-    Inputs carry ``(user_id, item_id, score)``; an item present in both
+    Inputs carry ``(user_id, item_id, score)``; each child's score
+    becomes ``weight · score / max(score)`` per user
+    (HybridRecommenderTopK.scala:69-79), and an item present in both
     lists sums its weighted normalized scores (the reference's
     driver-side groupBy(_._1).mapValues(sum), :116-118).
+
+    One exchange on user_id serves every later step: the per-(user,
+    child) max, the (user, item) sum and the per-user rank all group
+    within a user.
     """
+    rows = (
+        _weighted(rec_a, weight_a, 0)
+        .unionByName(_weighted(rec_b, weight_b, 1))
+        .repartition("user_id")
+    )
+    mx = F.max("score").over(Window.partitionBy("user_id", "child"))
+    # A user whose entire child list scores exactly 0 makes max(score)
+    # a zero denominator — ANSI Spark errors where the reference's
+    # Scala doubles gave NaN.  Emit NULL instead (mirrored by NULLIF
+    # in the oracle SQL): sum() ignores it, so the other child's
+    # weighted score still counts, and an all-NULL user ranks last.
     blended = (
-        _normalize(rec_a, weight_a)
-        .unionByName(_normalize(rec_b, weight_b))
+        rows.select(
+            "user_id",
+            "item_id",
+            F.when(mx != 0.0, F.col("w") * F.col("score") / mx).alias("wscore"),
+        )
         .groupBy("user_id", "item_id")
         .agg(qround(F.sum("wscore"), SCORE_ROUND).alias("score"))
     )

@@ -32,12 +32,15 @@ last-ulp float noise must not flip a top-k boundary when results are
 hash-compared against a SQL oracle.
 
 Shared-model path (``prefilter_neighbors`` set): an axis build reads
-ratings from a lineage-free leaf (``ratings_leaf``, a per-call
-``lifecycle.checkpoint`` of ``(user_id, item_id, rating)``) and ends in
-a checkpoint of its ranked top-k (``_rank_items``).  The leaf is
-released as soon as the ranked model is checkpointed, since the
-model no longer reads it; what a call leaves behind is the ranked model
-alone, under owner ``"neighborhood"``.
+ratings from a lineage-free index (``ratings_index``: one
+``lifecycle.checkpoint`` per ratings frame of ``(user_id, item_id,
+rating)`` plus each row's item rater count, user row count and user
+mean) and ends in a checkpoint of its ranked top-k (``_rank_items``).
+Both axes of one train split read the same index, which the first
+call takes; the hot-key guard is a filter on its count columns and the
+user-based scores centre on its mean column, so neither axis
+aggregates them.  What the calls leave behind, under owner
+``"neighborhood"``, is the ranked models and the one live index.
 
 Scale notes: every stage is a key-partitioned shuffle Catalyst can
 plan; the only quadratic term is the co-rated pair join, capped via
@@ -47,15 +50,18 @@ plan; the only quadratic term is the co-rated pair join, capped via
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-from typing import Iterator
+import threading
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import lifecycle
 from ..functions.rounding import qround
-from ..functions.similarity import pairwise_similarity
+from ..functions.similarity import (
+    INDEX_COLUMNS,
+    pairwise_similarity,
+    with_index_columns,
+)
 
 # Similarities are rounded to 7 dp BEFORE any ranking: cross-engine
 # float noise (~1e-15) then flips a rank boundary only when two sims
@@ -65,40 +71,67 @@ SIM_ROUND = 7
 SCORE_ROUND = 6
 
 
-def _user_means(ratings: DataFrame) -> DataFrame:
-    """Per-user mean over *rated* entries (UserBasedRating...scala:41-45)."""
-    return ratings.groupBy("user_id").agg(F.avg("rating").alias("mean_r"))
+#: the live ratings index as (source frame, index frame, release
+#: token), or None.  At most one is alive (see ratings_index)
+_live: tuple[DataFrame, DataFrame, object] | None = None
+_live_lock = threading.Lock()
 
 
-@contextmanager
-def ratings_leaf(ratings: DataFrame, share: bool = True) -> Iterator[DataFrame]:
-    """The ratings an axis build reads: with ``share``, a lineage-free
-    ``(user_id, item_id, rating)`` checkpoint owned by this call and
-    released when the block exits; otherwise ``ratings`` itself (no
-    Spark job runs).
+def ratings_index(ratings: DataFrame) -> DataFrame:
+    """The ratings every shared-path CF build reads: one lineage-free
+    ``lifecycle.checkpoint`` of ``(user_id, item_id, rating)`` plus, per
+    row, the item's rater count, the user's row count and the user's
+    mean (``functions.similarity.with_index_columns``).
+
+    Memoized by the input's plan (``sameSemantics``, the way Spark's own
+    cache matches a relation), so ``user_based_topk(train)`` followed by
+    ``item_based_topk(train)`` — or the two axes of ``hybrid_topk_q`` —
+    take one index checkpoint between them.  A frame that already is
+    an index is returned as it is.
 
     Every stage of an axis reads ratings (sims, hot-key guard, stats,
-    means, candidate joins, seen-set anti-join).  Over the leaf:
+    means, candidate joins, seen-set anti-join).  Over the index:
 
-    - AQE reuses an exchange that two of those stages share
+    - the hot-key guard is a filter on a count column and the user
+      means are columns, so neither is an aggregate of the axis plan;
+    - AQE reuses an exchange that two of an axis' stages share
       (``ReusedExchange``); over a cached relation it never does;
     - the upstream plan, e.g. a CV split with its fold literal, runs in
-      the one checkpoint job, so the generated classes of every later
+      the one index checkpoint, so the generated classes of every later
       stage are identical across folds and hit the codegen cache.
 
-    The block must end with every result it needs checkpointed or
-    collected (``_rank_items(share=True)``): plans over the leaf fail
-    after its release."""
-    if not share:
-        yield ratings
-        return
-    owner = object()
-    try:
-        yield lifecycle.checkpoint(
-            ratings.select("user_id", "item_id", "rating"), owner=owner
-        )
-    finally:
-        lifecycle.release(owner)
+    At most one index is alive: it is released by
+    ``lifecycle.release("neighborhood")`` (or a bare release), or when a
+    call on a different frame replaces it.  That is safe because every
+    shared-path build ends in a lineage-free ranked checkpoint
+    (``_rank_items(share=True)``), so no lazy plan reads an old index.
+    A caller that rewrites its input files in place under the same plan
+    releases first, as it would with a Spark cache."""
+    global _live
+    if set(INDEX_COLUMNS) <= set(ratings.columns):
+        return ratings
+    with _live_lock:
+        if _live is not None:
+            source, index, token = _live
+            if source.sameSemantics(ratings):
+                return index
+            _live = None
+            lifecycle.release(token)
+        token = object()
+        index = lifecycle.checkpoint(with_index_columns(ratings), owner=token)
+        _live = (ratings, index, token)
+        lifecycle.on_release(lambda: _forget(token), owner="neighborhood")
+    return index
+
+
+def _forget(token: object) -> None:
+    """Release the index checkpointed under ``token``, and drop it from
+    the memo if it is still the live one."""
+    global _live
+    with _live_lock:
+        if _live is not None and _live[2] is token:
+            _live = None
+    lifecycle.release(token)
 
 
 def _rank_items(
@@ -115,9 +148,9 @@ def _rank_items(
     persist — plans over a scan of the checkpoint instead of the full
     axis lineage (thousands of plan lines per axis under a cache, which
     keeps it), so the driver no longer re-analyzes the axis for every
-    later stage.  Once it is taken, the axis' ratings leaf (see
-    ``ratings_leaf``) has no reader left, and the caller's ``with``
-    block releases it.
+    later stage.  Once it is taken, nothing lazy reads the axis'
+    ratings index (see ``ratings_index``), so a later call may replace
+    it.
 
     The ranked relation is the only materialized level on the scored
     path: the pre-rank ``scored`` relation is read exactly once,
@@ -138,12 +171,14 @@ def _rank_items(
 def _neighbor_list(sims: DataFrame, ent: str, neighbor: str) -> DataFrame:
     """``(ent, neighbor, sim)`` from a directed pair-similarity frame
     ``(<axis>_a, <axis>_b, sim)``, the sim rounded to ``SIM_ROUND``
-    before anything ranks it."""
+    before anything ranks it; user sims over an index keep ``mean_a``,
+    the user mean of ``ent``."""
     a, b = sims.columns[:2]
     return sims.select(
         F.col(a).alias(ent),
         F.col(b).alias(neighbor),
         qround("sim", SIM_ROUND).alias("sim"),
+        *(["mean_a"] if "mean_a" in sims.columns else []),
     )
 
 
@@ -191,6 +226,7 @@ def user_based_scored(
     per-user rank filter.  NOT materialized: every consumer reads it
     exactly once, through the rank window of _rank_items, whose output
     is the checkpointed model."""
+    ratings = with_index_columns(ratings)
     sims = _axis_neighbors(
         ratings, kernel, "user", "user_id", "neighbor",
         max_raters_per_item, use_lsh_candidates,
@@ -200,45 +236,25 @@ def user_based_scored(
         wp = Window.partitionBy("user_id").orderBy(F.desc("sim"), F.asc("neighbor"))
         # the pruned neighbor list IS the fitted k-NN model —
         # O(users·N) rows, read once by the candidate join below.  Not
-        # cached: on the shared path it is built over a per-call
-        # ratings leaf, so no later plan can match it
+        # cached: on the shared path it is built over a ratings index
+        # that a call on another frame releases
         sims = (
             sims.withColumn("prn", F.row_number().over(wp))
             .where(F.col("prn") <= prefilter_neighbors)
             .drop("prn")
         )
 
+    # the neighbor's centred rating r_n − mean_n is an index column
+    # expression: no means aggregate, no means join.  Projected before
+    # the candidate relation crosses an exchange and two window sorts
+    # (guide §2.3): only the difference is read downstream
     neigh_r = ratings.select(
         F.col("user_id").alias("neighbor"),
         "item_id",
-        F.col("rating").alias("r_n"),
+        (F.col("rating") - F.col("mean_u")).alias("rc"),
     )
-    means = _user_means(ratings)
-    n_means = means.select(
-        F.col("user_id").alias("neighbor"), F.col("mean_r").alias("mean_n")
-    )
-    # candidate (user, item): some neighbor rated it...  The neighbor
-    # MEAN is attached here, in the same join stage, NOT after the
-    # top-k window: the candidate join leaves the O(model·ratings)
-    # relation hash-partitioned on `neighbor`, so this second
-    # neighbor-keyed join reuses that partitioning (only the O(users)
-    # means relation shuffles); joining after the window — which is
-    # (user,item)-partitioned — would re-exchange the full candidate
-    # relation by neighbor, a third full-size shuffle (measured ~25M
-    # rows at sf0.1, the single biggest cost in the axis build).
-    cand = sims.join(neigh_r, "neighbor").join(n_means, "neighbor")
-    # project r_n − mean_n NOW (guide §2.3 "project before the
-    # exchange"): only the difference is ever read downstream, and the
-    # candidate relation crosses an exchange and two window sorts —
-    # one double instead of two is ~8 B × ~26M rows less to shuffle
-    # and sort.  Exact: the subtraction happens per row either way.
-    cand = cand.select(
-        "user_id",
-        "item_id",
-        "neighbor",
-        "sim",
-        (F.col("r_n") - F.col("mean_n")).alias("rc"),
-    )
+    # candidate (user, item): some neighbor rated it...
+    cand = sims.join(neigh_r, "neighbor")
     # ...and the user did not (anti-join replaces the reference's
     # filter(_._1 == 0) unrated scan, UserBasedTopKRecommender.scala:78)
     cand = cand.join(
@@ -276,12 +292,12 @@ def user_based_scored(
         )
         .where(F.col("nrank") == 1)
         .where(F.col("sim_total") != 0)
-        .join(means, "user_id")
         .select(
             "user_id",
             "item_id",
+            # mean_a: the user's own mean, carried by the sims
             qround(
-                F.col("mean_r") + F.col("_num") / F.col("sim_total"),
+                F.col("mean_a") + F.col("_num") / F.col("sim_total"),
                 SCORE_ROUND,
             ).alias("score"),
         )
@@ -319,16 +335,15 @@ def user_based_topk(
     extreme-scale switch (see _axis_neighbors / operators/cf_lsh.py).
     """
     share = prefilter_neighbors is not None
-    with ratings_leaf(ratings, share) as leaf:
-        scored = user_based_scored(
-            leaf,
-            k_neighbors=k_neighbors,
-            kernel=kernel,
-            max_raters_per_item=max_raters_per_item,
-            prefilter_neighbors=prefilter_neighbors,
-            use_lsh_candidates=use_lsh_candidates,
-        )
-        return _rank_items(scored, k_items, share=share)
+    scored = user_based_scored(
+        ratings_index(ratings) if share else ratings,
+        k_neighbors=k_neighbors,
+        kernel=kernel,
+        max_raters_per_item=max_raters_per_item,
+        prefilter_neighbors=prefilter_neighbors,
+        use_lsh_candidates=use_lsh_candidates,
+    )
+    return _rank_items(scored, k_items, share=share)
 
 
 def item_based_scored(
@@ -366,16 +381,15 @@ def item_based_topk(
     ``use_lsh_candidates``: see :func:`user_based_topk`.
     """
     share = prefilter_neighbors is not None
-    with ratings_leaf(ratings, share) as leaf:
-        scored = item_based_scored(
-            leaf,
-            k_neighbors=k_neighbors,
-            kernel=kernel,
-            max_raters_per_item=max_raters_per_item,
-            prefilter_neighbors=prefilter_neighbors,
-            use_lsh_candidates=use_lsh_candidates,
-        )
-        return _rank_items(scored, k_items, share=share)
+    scored = item_based_scored(
+        ratings_index(ratings) if share else ratings,
+        k_neighbors=k_neighbors,
+        kernel=kernel,
+        max_raters_per_item=max_raters_per_item,
+        prefilter_neighbors=prefilter_neighbors,
+        use_lsh_candidates=use_lsh_candidates,
+    )
+    return _rank_items(scored, k_items, share=share)
 
 
 def scored_from_item_sims(
@@ -457,9 +471,10 @@ def topk_from_item_sims(
     ContentBasedTopKRecommender.scala:71-79: Σ sim·r / Σ|sim|).
     """
     share = prefilter_neighbors is not None
-    with ratings_leaf(ratings, share) as leaf:
-        scored = scored_from_item_sims(sims, leaf, k_neighbors, prefilter_neighbors)
-        return _rank_items(scored, k_items, share=share)
+    if share:
+        ratings = ratings_index(ratings)
+    scored = scored_from_item_sims(sims, ratings, k_neighbors, prefilter_neighbors)
+    return _rank_items(scored, k_items, share=share)
 
 
 def predict_user_based(
@@ -481,11 +496,16 @@ def predict_user_based(
     prediction family keeps the uncapped quadratic pair join the top-K
     family already guards against.
     """
+    ratings = with_index_columns(ratings)
     sims = _axis_neighbors(
         ratings, kernel, "user", "user_id", "neighbor", max_raters_per_item
     )
+    # index columns: the neighbor's centred rating per row, and the
+    # user's own mean through the sims (see user_based_scored)
     neigh_r = ratings.select(
-        F.col("user_id").alias("neighbor"), "item_id", F.col("rating").alias("r_n")
+        F.col("user_id").alias("neighbor"),
+        "item_id",
+        (F.col("rating") - F.col("mean_u")).alias("rc"),
     )
     # JOIN ORDER MATTERS (r11, measured): pairs ⋈ sims first builds
     # |pairs| × sims-per-user candidates — sims-per-user grows with
@@ -504,26 +524,18 @@ def predict_user_based(
     top = cand.withColumn("nrank", F.row_number().over(w)).where(
         F.col("nrank") <= k_neighbors
     )
-    means = _user_means(ratings)
-    n_means = means.select(
-        F.col("user_id").alias("neighbor"), F.col("mean_r").alias("mean_n")
-    )
     return (
-        top.join(n_means, "neighbor")
-        .groupBy("user_id", "item_id")
+        top.groupBy("user_id", "item_id")
         .agg(
-            (
-                F.sum(F.col("sim") * (F.col("r_n") - F.col("mean_n")))
-                / F.sum("sim")
-            ).alias("delta"),
+            (F.sum(F.col("sim") * F.col("rc")) / F.sum("sim")).alias("delta"),
             F.sum("sim").alias("sim_total"),
+            F.first("mean_a").alias("mean_a"),
         )
         .where(F.col("sim_total") != 0)
-        .join(means, "user_id")
         .select(
             "user_id",
             "item_id",
-            qround(F.col("mean_r") + F.col("delta"), SCORE_ROUND).alias(
+            qround(F.col("mean_a") + F.col("delta"), SCORE_ROUND).alias(
                 "prediction"
             ),
         )

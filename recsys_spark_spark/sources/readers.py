@@ -15,6 +15,8 @@ column pruning); the CSV readers exist for reference-format compat.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -94,6 +96,51 @@ def ensure_session_confs(spark: SparkSession) -> None:
         )
 
 
+#: session confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+#: path -> (stamp, schema) of the last parquet schema inferred for it
+_schemas: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _stamp(spark: SparkSession, path: str) -> tuple | None:
+    """What a parquet schema read from ``path`` depends on: the
+    ``(name, size, mtime)`` of every file under it and the inference
+    confs; None when ``path`` is not a local file or directory."""
+    if not os.path.exists(path):
+        return None
+    if os.path.isfile(path):
+        names = [path]
+    else:
+        names = [os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs]
+    files = []
+    for n in sorted(names):
+        st = os.stat(n)
+        files.append((n, st.st_size, st.st_mtime_ns))
+    return tuple(files), tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job on
+    a re-read: the schema inferred the first time is passed back for as
+    long as the files under ``path`` keep their names, sizes and mtimes
+    (a rewrite infers again).  Inference launches one Spark job per
+    read; the CV loop reads the same two tables on every fold."""
+    stamp = _stamp(spark, path)
+    hit = _schemas.get(path)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if stamp is not None:
+        _schemas[path] = (stamp, df.schema)
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one star-schema table from the sf directory.
 
@@ -104,7 +151,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     oracle comparisons agree).
     """
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for field in df.schema.fields:
         if field.name == "ts" and field.dataType.simpleString() == "bigint":
             # integer division — float division of e18-scale nanos loses

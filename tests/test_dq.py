@@ -103,6 +103,23 @@ def test_ranking_metrics_dedupe_relevant_rows(spark):
     assert row["r_at_k"] == 1.0
 
 
+def test_ranking_metrics_dedupe_recommended_rows(spark):
+    """Set semantics on the recommended side too: a (user, item) row
+    repeated, or recommended at two ranks, is one hit at its best
+    rank."""
+    from recsys_spark_spark.metrics.evaluation import ranking_metrics
+
+    rec_dup = spark.createDataFrame(
+        [(1, 10, 2), (1, 10, 2), (1, 10, 1), (1, 11, 2)],
+        "user_id int, item_id int, rank int",
+    )
+    rel = spark.createDataFrame([(1, 10), (1, 12)], "user_id int, item_id int")
+    row = ranking_metrics(spark, rec_dup, rel, k=2).collect()[0]
+    assert row["p_at_k"] == 0.5  # 1 hit of k=2, not 3/2
+    assert row["r_at_k"] == 0.5
+    assert row["rr_at_k"] == 1.0  # the best rank of item 10
+
+
 def test_key_skew_audit_planted_hot_key(spark, tmp_path):
     """Planted skew must be measured, not asserted: user 7 owns 51 of
     59 rows (50 planted + one from the j%9 tail) over 9 distinct users

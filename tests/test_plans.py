@@ -272,7 +272,7 @@ def test_removed_code_stays_removed():
 
     # the similarity / CF options no caller set, and the unused
     # top_k_neighbors, are gone; the axis → (ent, key) mapping and the
-    # hot-key aggregate live only in functions/similarity.py
+    # hot-key count live only in functions/similarity.py
     from recsys_spark_spark.functions import similarity
     from recsys_spark_spark.operators import cf_lsh
     from recsys_spark_spark.recommenders import content, neighborhood as nb
@@ -289,13 +289,13 @@ def test_removed_code_stays_removed():
         f.__name__ for f in public if gone & set(inspect.signature(f).parameters)
     ] == []
     assert not hasattr(similarity, "top_k_neighbors")
-    axis_map = re.compile(r'axis == "user":\s*ent, key = "user_id", "item_id"')
-    hot_agg = re.compile(r'groupBy\("key"\)\s*\.agg\(F\.count')
+    axis_map = re.compile(r'axis == "user":\s*ent, key, key_rows = "user_id", "item_id"')
+    hot_count = re.compile(r'F\.count\("\*"\)\.over\(by_item\)')
     package = {f: t for f, t in texts.items() if f.startswith("recsys_spark_spark")}
     assert [f for f, t in package.items() if axis_map.search(t)] == [
         "recsys_spark_spark/functions/similarity.py"
     ]
-    assert [f for f, t in package.items() if hot_agg.search(t)] == [
+    assert [f for f, t in package.items() if hot_count.search(t)] == [
         "recsys_spark_spark/functions/similarity.py"
     ]
 
@@ -455,16 +455,17 @@ def test_cf_axis_classes_shared_across_folds(spark):
 
 
 def test_cf_axis_reads_a_ratings_leaf(spark):
-    """Each axis builds on a lineage-free ratings leaf, not on the
-    caller's cached relation: the executed axis plan scans the leaf
+    """Each axis builds on the lineage-free ratings index, not on the
+    caller's cached relation: the executed axis plan scans the index
     (Scan ExistingRDD), has no InMemoryTableScan, and AQE reuses at
     least one exchange between the axis' ratings-derived stages (it
-    never does over a cached leaf).  The leaf is released with the
-    block."""
+    never does over a cached leaf).  The index outlives the call: a
+    second call on the same frame gets it back, a call on another frame
+    replaces it, and ``lifecycle.release("neighborhood")`` frees it."""
     from recsys_spark_spark import lifecycle
     from recsys_spark_spark.recommenders.neighborhood import (
         _rank_items,
-        ratings_leaf,
+        ratings_index,
         user_based_scored,
     )
 
@@ -472,19 +473,92 @@ def test_cf_axis_reads_a_ratings_leaf(spark):
     cached = lifecycle.materialize(_grid_ratings(spark), owner=owner, eager=True)
     rdds = spark.sparkContext._jsc.getPersistentRDDs
     base = len(rdds())
-    with ratings_leaf(cached) as leaf:
-        assert len(rdds()) == base + 1
-        ranked = _rank_items(
-            user_based_scored(leaf, 5, prefilter_neighbors=10, max_raters_per_item=80),
-            4,
-        )
-        ranked.collect()
-        tree = tree_of(ranked)
+    index = ratings_index(cached)
+    assert len(rdds()) == base + 1
+    assert ratings_index(cached) is index
+    assert ratings_index(index) is index
+    ranked = _rank_items(
+        user_based_scored(index, 5, prefilter_neighbors=10, max_raters_per_item=80),
+        4,
+    )
+    ranked.collect()
+    tree = tree_of(ranked)
+    assert len(rdds()) == base + 1
+
+    other = ratings_index(cached.where("user_id < 30"))
+    assert other is not index
+    assert len(rdds()) == base + 1  # the first index was released
+    assert other.count() == 300
+    lifecycle.release("neighborhood")
     assert len(rdds()) == base
     lifecycle.release(owner)
     assert "Scan ExistingRDD" in tree
     assert "InMemoryTableScan" not in tree
     assert tree.count("ReusedExchange") >= 1, tree
+
+
+def test_cf_axis_on_the_index_has_no_hot_key_or_means_aggregate(spark):
+    """Over the index, the hot-key guard is a filter on a count column
+    and the user means are columns: neither axis plan aggregates by its
+    join key alone (the old hot-key count), computes an average (the
+    old user means) or windows over the ratings."""
+    import re
+
+    from recsys_spark_spark import lifecycle
+    from recsys_spark_spark.recommenders.neighborhood import (
+        item_based_scored,
+        ratings_index,
+        user_based_scored,
+    )
+
+    index = ratings_index(_grid_ratings(spark))
+    knn = dict(prefilter_neighbors=10, max_raters_per_item=80)
+    for scored, key, key_rows in (
+        (user_based_scored(index, 5, **knn), "item_id", "n_item"),
+        (item_based_scored(index, 5, **knn), "user_id", "n_user"),
+    ):
+        plan = scored._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" in plan
+        assert re.search(rf"{key_rows}#\d+L? <= 80", plan), plan
+        aggs = [ln for ln in plan.splitlines() if "Aggregate [" in ln]
+        assert aggs, plan
+        assert not [ln for ln in aggs if re.search(rf"Aggregate \[{key}#\d+L?\],", ln)]
+        assert "avg(" not in plan, plan
+        assert "count(1) windowspecdefinition" not in plan, plan
+    lifecycle.release("neighborhood")
+
+
+def test_cf_axes_share_one_ratings_index(spark, monkeypatch):
+    """``user_based_topk(train)`` then ``item_based_topk(train)``, the way
+    the CV loop calls them, take exactly one index checkpoint between
+    them (and one ranked checkpoint each); so does a second split of
+    the same fold."""
+    from recsys_spark_spark import lifecycle
+    from recsys_spark_spark.functions.similarity import INDEX_COLUMNS
+    from recsys_spark_spark.metrics.evaluation import split_ratings
+    from recsys_spark_spark.recommenders.neighborhood import (
+        item_based_topk,
+        user_based_topk,
+    )
+
+    taken = []
+    checkpoint = lifecycle.checkpoint
+
+    def counting(df, *, owner):
+        taken.append("index" if set(INDEX_COLUMNS) <= set(df.columns) else "model")
+        return checkpoint(df, owner=owner)
+
+    monkeypatch.setattr(lifecycle, "checkpoint", counting)
+    knn = dict(k_neighbors=7, k_items=3, prefilter_neighbors=11,
+               max_raters_per_item=97)
+    ratings = _grid_ratings(spark)
+    train, _ = split_ratings(ratings, fold=0)
+    user_based_topk(train, **knn).collect()
+    item_based_topk(train, **knn).collect()
+    again, _ = split_ratings(ratings, fold=0)
+    user_based_topk(again, **knn).collect()
+    assert taken == ["index", "model", "model", "model"]
+    lifecycle.release("neighborhood")
 
 
 def test_lazy_cf_axis_runs_no_job(spark):

@@ -137,3 +137,29 @@ def test_spread_scan_spreads_undersplit_and_noops_at_scale(spark, sf_dir):
     assert spread.count() == docs.count()
     wide = docs.repartition(par)
     assert spread_scan(wide) is wide  # no-op above the threshold
+
+
+def test_table_reread_runs_no_schema_job(spark, tmp_path):
+    """A second read of the same unchanged files takes its schema from
+    the first and launches no Spark job; a rewrite with a new schema is
+    read with the new schema."""
+    from recsys_spark_spark.sources.readers import table
+
+    path = str(tmp_path / "orders.parquet")
+    spark.range(5).select(F.col("id").alias("o_orderkey")).write.parquet(path)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = lambda: len(tracker.getJobIdsForGroup(None))  # noqa: E731
+
+    first = table(spark, str(tmp_path), "orders")
+    before = jobs()
+    again = table(spark, str(tmp_path), "orders")
+    assert jobs() == before
+    assert again.schema == first.schema
+    assert sorted(r[0] for r in again.collect()) == list(range(5))
+
+    spark.range(3).select(
+        F.col("id").alias("o_orderkey"), F.lit("x").alias("o_comment")
+    ).write.mode("overwrite").parquet(path)
+    new = table(spark, str(tmp_path), "orders")
+    assert new.columns == ["o_orderkey", "o_comment"]
+    assert sorted(r[0] for r in new.collect()) == [0, 1, 2]
